@@ -1,4 +1,5 @@
 package graft
+import graft.obs.Obs
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
@@ -10,11 +11,11 @@ import java.nio.file.{Files, Paths}
   * (`"name": -1`) and flip the exit code — a broken query can't hide inside
   * a healthy-looking total.
   *
-  * Besides wall time, the JSON carries per-query `shuffle_mb` / `spill_mb`
-  * (from a stage-metrics listener, attributed to the timed run that was
-  * kept): shuffle volume is the number that predicts 100 TB behavior —
-  * a query can look fast at sf0.1 while moving the whole input through
-  * an exchange.
+  * Besides wall time, the JSON carries per-query `shuffle_mb` /
+  * `spill_mb` / `jobs` / `stages` / `tasks` of the timed run that was
+  * kept (each run is its own [[Obs]] phase, `<query>/run<i>`): shuffle
+  * volume is the number that predicts 100 TB behavior — a query can
+  * look fast at sf0.1 while moving the whole input through an exchange.
   */
 object Bench {
 
@@ -96,20 +97,7 @@ object Bench {
       }
     }
     spark.catalog.clearCache() // drop warmup-pass persists before timing
-
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = e.stageInfo.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            spillBytes.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-          }
-        }
-      })
+    val metrics = Obs.install(spark)
 
     // ambient-load bookkeeping (the r13 verdict's directive 3): round
     // totals on a shared box are only comparable when the artifact
@@ -136,35 +124,35 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => nameFilter.forall(_.findFirstIn(n).isDefined) }
       .map { case (name, fn) =>
-      // (seconds, shuffleMB, spillMB) for one execution; the listener is
-      // async, so drain briefly before snapshotting the deltas
-      def once(): (Double, Double, Double) = {
-        Thread.sleep(120)
-        val (sh0, sp0) = (shuffleBytes.get, spillBytes.get)
+      // seconds for one execution, booked to its own phase
+      def once(run: String): Double = {
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Obs.phase(spark, name) {
+          Obs.phase(spark, run) {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          }
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
-        Thread.sleep(120)
-        (dt, (shuffleBytes.get - sh0) / 1048576.0,
-          (spillBytes.get - sp0) / 1048576.0)
+        dt
       }
+      // (seconds, phase path of the kept run; "" when the query failed)
       val best =
         try {
-          val (a, b) = (once(), once())
-          if (a._1 <= b._1) a else b
+          val (a, b) = (once("run1"), once("run2"))
+          if (a <= b) (a, s"$name/run1") else (b, s"$name/run2")
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             failed ::= name
-            (-1.0, -1.0, -1.0)
+            (-1.0, "")
         }
       name -> best
     }
-    def jmap(f: ((Double, Double, Double)) => Double): String =
+    // Locale.ROOT: a comma-decimal locale would emit invalid JSON
+    def jmap(f: ((Double, String)) => Double, fmt: String = "%.3f"): String =
       results.map { case (k, v) =>
-        // Locale.ROOT: a comma-decimal locale would emit invalid JSON
-        "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, f(v))
+        "\"" + k + "\":" + fmt.formatLocal(java.util.Locale.ROOT, f(v))
       }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v._1 >= 0 => v._1 }.sum
 
@@ -186,8 +174,11 @@ object Bench {
     // settle seconds via SPARK_GRAFT_ISOLATED_SETTLE. Env parsing is
     // forgiving (malformed → default) — nothing after the timing loop
     // may throw before the results are printed and persisted.
-    spark.stop()
+    spark.stop() // also drains the listener bus: the totals are complete
     val loadAfterSession = loadAvg()
+    // kept run's cost; -1 marks a failed query, as in the time map
+    def cost(f: Obs.Totals => Double)(v: (Double, String)): Double =
+      if (v._2.isEmpty) -1.0 else f(metrics.under(v._2))
     val isolatedN = sys.env.get("SPARK_GRAFT_ISOLATED")
       .flatMap(_.toIntOption).getOrElse(12)
     val topNames = results
@@ -287,7 +278,11 @@ object Bench {
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${
         results.map { case (k, v) => "\"" + k + "\":" + v._1 }.mkString("{", ",", "}")
-      },"shuffle_mb":${jmap(_._2)},"spill_mb":${jmap(_._3)},""" +
+      },"shuffle_mb":${jmap(cost(_.shuffleBytes / 1048576.0))},""" +
+        s""""spill_mb":${jmap(cost(_.spillBytes / 1048576.0))},""" +
+        s""""jobs":${jmap(cost(_.jobs.toDouble), "%.0f")},""" +
+        s""""stages":${jmap(cost(_.stages.toDouble), "%.0f")},""" +
+        s""""tasks":${jmap(cost(_.tasks.toDouble), "%.0f")},""" +
         loadJson +
         s""""isolated":$isoMap,"isolated_times":$isoTimes,""" +
         s""""isolated_variance_pct":$isoVar,"isolated_reliable":$isoReliable,""" +

@@ -57,11 +57,18 @@ object Functions {
     "bloom_might_contain" ->
       (exprs => BloomFilterMightContain(exprs.head, new XxHash64(Seq(exprs(1))))))
 
-  def register(spark: SparkSession): Unit =
+  /** Idempotent: `Sessions.tune` runs on every `Pipeline.run*` call, so a
+    * name already bound to this very builder is skipped (re-registering
+    * it logs a "replaced a previously registered function" WARN). Any
+    * other function of the same name is still replaced. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name))
+          .exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 }
 
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {

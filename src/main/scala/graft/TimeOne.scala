@@ -1,9 +1,13 @@
 package graft
+import graft.obs.Obs
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc single-query timer for perf iteration: same measurement
   * discipline as [[Bench]] (noop write, cache cleared between runs,
   * warmup at sf0.001), scoped to the queries named on the command line.
+  * After the session stops it prints the fastest run's phase breakdown,
+  * one `[timeone-phase]` line per [[Obs]] path under it ("(run)" is the
+  * whole run; each phase's numbers include its nested phases).
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
@@ -19,36 +23,7 @@ object TimeOne {
     Sessions.tune(spark)
     spark.sparkContext.setLogLevel("WARN")
     Fixtures.ensureAll(spark, sfDir)
-    // GRAFT_JOB_COUNT=1: per-query scheduled-job/stage tally — the
-    // denominator of the fixed-overhead analysis (a micro-batch gate's
-    // cost is jobs × scheduling floor, not data)
-    val jobCounter =
-      if (!sys.env.contains("GRAFT_JOB_COUNT")) None
-      else {
-        val c = new org.apache.spark.scheduler.SparkListener {
-          val jobs = new java.util.concurrent.atomic.AtomicLong
-          val stages = new java.util.concurrent.atomic.AtomicLong
-          val tasks = new java.util.concurrent.atomic.AtomicLong
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet()
-            if (sys.env.get("GRAFT_JOB_COUNT").contains("2"))
-              Console.err.println(s"[timeone-job] ${j.jobId} " +
-                s"stages=${j.stageInfos.size} " +
-                Option(j.properties)
-                  .flatMap(p => Option(p.getProperty("spark.job.description")))
-                  .getOrElse("").take(140))
-            ()
-          }
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            stages.incrementAndGet()
-            tasks.addAndGet(s.stageInfo.numTasks); ()
-          }
-        }
-        spark.sparkContext.addSparkListener(c)
-        Some(c)
-      }
+    val metrics = Obs.install(spark)
     // Warm ALL requested queries once at sf0.001 BEFORE any timing: in a
     // shared child JVM the first-timed query otherwise absorbs the whole
     // JIT bill for the code paths every later query reuses — measured
@@ -64,25 +39,22 @@ object TimeOne {
       catch { case scala.util.control.NonFatal(_) => () }
     }
     spark.catalog.clearCache()
+    // query → phase path of its fastest run
+    val fastest = scala.collection.mutable.LinkedHashMap.empty[String, String]
     for (name <- args) {
       val fn = SparkEntry.queries(name)
       fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
       spark.catalog.clearCache()
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       def once(): Double = {
-        jobCounter.foreach { c =>
-          c.jobs.set(0); c.stages.set(0); c.tasks.set(0)
-        }
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        val dt = (System.nanoTime() - t0) / 1e9
-        jobCounter.foreach { c =>
-          // listener bus is async; give it a beat before reading
-          Thread.sleep(300)
-          Console.err.println(s"[timeone-jobs] $name jobs=${c.jobs.get} " +
-            s"stages=${c.stages.get} tasks=${c.tasks.get}")
+        Obs.phase(spark, name) {
+          Obs.phase(spark, s"run${times.length + 1}") {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            spark.catalog.clearCache()
+          }
         }
-        dt
+        (System.nanoTime() - t0) / 1e9
       }
       // ADAPTIVE run count (the r11 verdict's bench-stability directive):
       // 3 runs, then keep running (to 8) while the 3 FASTEST still
@@ -93,8 +65,7 @@ object TimeOne {
       // distinct code that 6 samples were measured still descending on
       // a cold box, and an unsettled min is exactly what the reliable
       // flag exists to prevent shipping.
-      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-      times ++= (1 to 3).map(_ => once())
+      for (_ <- 1 to 3) times += once()
       def fast3 = times.sorted.take(3)
       while (times.length < 8 &&
           (fast3.max - fast3.min) / fast3.min > 0.20)
@@ -106,7 +77,22 @@ object TimeOne {
         "%.3f".formatLocal(java.util.Locale.ROOT, t)).mkString(",")
       println(s"""[timeone-json] {"name":"$name","min":${
         "%.3f".formatLocal(java.util.Locale.ROOT, times.min)},"times":[$ts]}""")
+      fastest(name) = s"$name/run${times.indexOf(times.min) + 1}"
     }
+    // stop() drains the listener bus, so the totals are complete
     spark.stop()
+    for ((name, run) <- fastest) {
+      val phases = metrics.totals.keys.filter(_.startsWith(run + "/"))
+        .toSeq.sorted
+      for (p <- run +: phases) {
+        val t = metrics.under(p)
+        val phase = if (p == run) "(run)" else p.stripPrefix(run + "/")
+        println(("[timeone-phase] %s %s wall_s=%.3f jobs=%d stages=%d " +
+          "tasks=%d task_s=%.3f shuffle_mb=%.1f spill_mb=%.1f")
+          .formatLocal(java.util.Locale.ROOT, name, phase, t.wallNs / 1e9,
+            t.jobs, t.stages, t.tasks, t.taskMs / 1e3,
+            t.shuffleBytes / 1048576.0, t.spillBytes / 1048576.0))
+      }
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exprs, OpModule, Q, Tables}
+import graft.obs.Obs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -230,14 +231,16 @@ object DedupOps extends OpModule {
     val edges = minhashEdges(s, d)
     var labels = Tables.documents(s, d).select(col("doc_id"))
       .withColumn("label", col("doc_id"))
-    for (_ <- 1 to 3) {
-      val fromNeighbors = edges
-        .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
-        .select(col("src").as("doc_id"), col("label"))
-      labels = labels.unionByName(fromNeighbors)
-        .groupBy(col("doc_id"))
-        .agg(min(col("label")).as("label"))
-        .localCheckpoint()
+    Obs.phase(s, "labels3") {
+      for (_ <- 1 to 3) {
+        val fromNeighbors = edges
+          .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
+          .select(col("src").as("doc_id"), col("label"))
+        labels = labels.unionByName(fromNeighbors)
+          .groupBy(col("doc_id"))
+          .agg(min(col("label")).as("label"))
+          .localCheckpoint()
+      }
     }
     labels
   }
@@ -578,11 +581,12 @@ object DedupOps extends OpModule {
   /** Symmetric near-dup edges at minhash settings (used by survivors).
     * Persisted AND eagerly materialized: the caller references the edge
     * list once per label-propagation round, and a lazy cache would make
-    * those branches race on per-block compute locks. */
+    * those branches race on per-block compute locks. The shingle-set
+    * cache is released once the edges are built. */
   private def minhashEdges(s: SparkSession, d: String): DataFrame = {
     val sets = shingled(s, d, 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count()
+    Obs.phase(s, "shingles")(sets.count())
     // BOTH directions emitted in ONE narrow pass (r17): the old
     // union-of-two-selects referenced the pair pipeline twice, which
     // r16 patched with an intermediate pair cache (one redundant full
@@ -598,7 +602,8 @@ object DedupOps extends OpModule {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count()
+    Obs.phase(s, "edges")(edges.count())
+    sets.unpersist(blocking = false)
     edges
   }
 
@@ -646,7 +651,13 @@ object DedupOps extends OpModule {
   def survivorsToFixpoint(
       docs: DataFrame, edges: DataFrame, maxRounds: Int = 50,
       smallGraphMax: Long = 500000L,
-      knownEdgeCount: Option[Long] = None): DataFrame = {
+      knownEdgeCount: Option[Long] = None): DataFrame =
+    Obs.phase(edges.sparkSession, "fixpoint")(
+      labelsToFixpoint(docs, edges, maxRounds, smallGraphMax, knownEdgeCount))
+
+  private def labelsToFixpoint(
+      docs: DataFrame, edges: DataFrame, maxRounds: Int,
+      smallGraphMax: Long, knownEdgeCount: Option[Long]): DataFrame = {
     if (smallGraphMax > 0 && knownEdgeCount.fold(
         edges.limit((smallGraphMax + 1).toInt).count() <= smallGraphMax)(
         _ <= smallGraphMax)) {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpModule, Q, Tables}
+import graft.obs.Obs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,11 +96,12 @@ object GraphOps extends OpModule {
     * the same number [[adaptiveAdjacency]]'s own probe would measure,
     * via one skinny aggregation instead of a cached pair scan. */
   private def maxRawDegFrom(os: DataFrame): Long =
-    os.select(explode(col("ps")).as("src"),
-        (size(col("ps")) - 1).cast(LongType).as("w"))
-      .groupBy(col("src")).agg(sum(col("w")).as("deg"))
-      .agg(coalesce(max(col("deg")), lit(0L)).as("m"))
-      .head.getLong(0)
+    Obs.phase(os.sparkSession, "raw-degree")(
+      os.select(explode(col("ps")).as("src"),
+          (size(col("ps")) - 1).cast(LongType).as("w"))
+        .groupBy(col("src")).agg(sum(col("w")).as("deg"))
+        .agg(coalesce(max(col("deg")), lit(0L)).as("m"))
+        .head.getLong(0))
 
   /** Hub-safe sliced adjacency: (src, slice, nbrs, deg) with ≤ `sliceK`
     * neighbors per row — `ceil(deg/K)` rows per node, slices
@@ -198,7 +200,13 @@ object GraphOps extends OpModule {
       sliceK: Int = AdjSliceK,
       hubDegreeLimit: Long = HubBufferDegreeLimit,
       broadcastBudget: Long = BroadcastBudgetBytes,
-      knownMaxRawDeg: Option[Long] = None): DataFrame = {
+      knownMaxRawDeg: Option[Long] = None): DataFrame =
+    Obs.phase(edges.sparkSession, "adjacency")(buildAdjacency(
+      edges, sliceK, hubDegreeLimit, broadcastBudget, knownMaxRawDeg))
+
+  private def buildAdjacency(
+      edges: DataFrame, sliceK: Int, hubDegreeLimit: Long,
+      broadcastBudget: Long, knownMaxRawDeg: Option[Long]): DataFrame = {
     // knownMaxRawDeg: callers that can derive the probe value cheaply
     // (the lineitem graph reads it off [[orderSets]] — [[maxRawDegFrom]])
     // pass it in, and the ×fanout pair stream is then neither persisted
@@ -343,7 +351,7 @@ object GraphOps extends OpModule {
     // (the family contract — see [[sizeGatedJoin]]).
     val deg = adjFull.select(col("src"), col("deg")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    deg.count()
+    Obs.phase(symmetric.sparkSession, "degrees")(deg.count())
     // src degree rides the adjacency row for free; only ddst needs the
     // lookup. The oriented edge list is consumed exactly once (by the
     // out-list aggregation below), so it is never persisted.
@@ -360,7 +368,7 @@ object GraphOps extends OpModule {
         s"transform(sequence(0, (size(all)-1) div $sliceK)," +
           s" i -> slice(all, i*$sliceK+1, $sliceK))")).as("nbrs"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
+    Obs.phase(symmetric.sparkSession, "oriented-adj")(adj.count())
     adjFull.unpersist(blocking = false)
     deg.unpersist(blocking = false)
     // BOTH lookups ride the size gate: adj is persisted+counted (the

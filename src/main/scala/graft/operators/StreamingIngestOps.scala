@@ -143,40 +143,10 @@ object StreamingIngestOps extends OpModule {
     * other gates skip ~2 s each of listing/WAL/commit machinery and
     * the fixture-to-parquet re-land without weakening what the oracle
     * checks. Same shuffle-partitions sizing as the harness drain. */
-  /** Batch-0 TEMPLATE warehouses, shared across gates that drive the
-    * same batch-0 prefix (the r14 verdict's shared-drive-window
-    * directive): the msb bucketed-state and lifecycle gates open with
-    * an IDENTICAL batch-0 drive (same corpus cap, same bucket count,
-    * same processBatch), and each paid it separately — the template
-    * runs it once per JVM, and later gates COPY the drained tree (a
-    * few MB of parquet + markers — file copy, no Spark jobs) into
-    * their own warehouse and continue from there. The copy preserves
-    * every sibling marker (bucket pin, folded-tags sidecar, journal),
-    * so the forked state is indistinguishable from a re-drive; each
-    * gate mutates only its copy, so oracle semantics are unchanged.
-    * `computeIfAbsent` keeps the drive once-only under the bench's
-    * concurrent phase. The KEY is the caller's assertion that the
-    * batch-0 prefix is identical — it must encode every input that
-    * shapes the drive (sf dir, id cap, bucket count). */
-  private val b0Templates =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def copyTree(src: Path, dst: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = Files.walk(src)
-    try walk.iterator().asScala.foreach { p =>
-      val t = dst.resolve(src.relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally walk.close()
-  }
-
   private def driveTwoBatches(
       s: SparkSession, rows: DataFrame, idCol: String,
       run: (DataFrame, Long, String) => Unit,
-      mid: (String, DataFrame) => Unit = (_, _) => (),
-      b0TemplateKey: Option[String] = None): String = {
+      mid: (String, DataFrame) => Unit = (_, _) => ()): String = {
     val wh = Files.createTempDirectory("graft-gate-direct")
       .resolve("wh").toString
     val prev = s.conf.get("spark.sql.shuffle.partitions")
@@ -211,22 +181,7 @@ object StreamingIngestOps extends OpModule {
     // one file and never has this shape.
     val cached = rows.coalesce(2).persist()
     try {
-      b0TemplateKey match {
-        case Some(key) =>
-          // shared prefix: drive batch 0 once per JVM into an
-          // immutable template, then fork this gate's warehouse from
-          // it by file copy (see [[b0Templates]])
-          val template = b0Templates.computeIfAbsent(key, _ => {
-            val t = Files.createTempDirectory("graft-gate-b0-template")
-              .resolve("wh").toString
-            run(cached.filter(col(idCol) % 2 === 0), 0L, t)
-            t
-          })
-          copyTree(java.nio.file.Paths.get(template),
-            java.nio.file.Paths.get(wh))
-        case None =>
-          run(cached.filter(col(idCol) % 2 === 0), 0L, wh)
-      }
+      run(cached.filter(col(idCol) % 2 === 0), 0L, wh)
       // mid-stream hook: the lifecycle gate interposes replays and
       // maintenance ops (takedown, rebucket) between the two batches
       mid(wh, cached)
@@ -602,8 +557,7 @@ object StreamingIngestOps extends OpModule {
           .select(col("doc_id"), col("text"), col("embedding"))
         val wh = driveTwoBatches(s, rows, "doc_id",
           (b, id, w) => graft.streaming.MultiSignalIngest.processBatch(
-            b, id, w, stateBuckets = Some(8)),
-          b0TemplateKey = Some(s"ms:$d:cap=${IdCap / 4}:buckets=8"))
+            b, id, w, stateBuckets = Some(8)))
         s.read.parquet(s"$wh/ms_survivors")
           .select(col("doc_id").cast(LongType),
             col("batch_id").cast(LongType))
@@ -651,11 +605,7 @@ object StreamingIngestOps extends OpModule {
             graft.sinks.UpsertWriter.rebucket(
               s, s"$w/ms_survivors", keys = Seq("doc_id"), newBuckets = 16)
             b0(cached, w) // replay AFTER maintenance: folded-tag no-op
-          },
-          // same batch-0 prefix as msb_ingest_bucketed_state (same
-          // corpus cap, same bucket count, same processBatch): fork
-          // from the shared template instead of re-draining (r14 #5)
-          b0TemplateKey = Some(s"ms:$d:cap=${IdCap / 4}:buckets=8"))
+          })
         assert(graft.sinks.UpsertWriter
           .pinnedBuckets(s"$wh/ms_survivors").contains(16),
           "rebucket must move the survivors pin to 16")

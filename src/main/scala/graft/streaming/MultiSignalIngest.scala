@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.obs.Obs
 import graft.operators.DedupOps
 import graft.sinks.UpsertWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -58,20 +59,6 @@ import java.nio.file.{Files, Paths}
   * every serving view.
   */
 object MultiSignalIngest {
-
-  /** Stage timer for drain profiling (`GRAFT_STAGE_TIMING=1`) — the
-    * family's attribution tool ([[NearDupIngest]]); lazy stages bill to
-    * the ACTION that triggers them. */
-  private val stageTiming = sys.env.contains("GRAFT_STAGE_TIMING")
-  private def timed[A](batchId: Long, tag: String)(f: => A): A =
-    if (!stageTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      Console.err.println(
-        f"[ms-stage] b$batchId $tag%-14s ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
 
   /** One micro-batch of the drain, exactly as [[start]]'s foreachBatch
     * runs it — exposed (package-private) so the crash-replay specs can
@@ -148,7 +135,7 @@ object MultiSignalIngest {
           val arrAgg = arrivals
             .agg(count(lit(1)).as("a"), countDistinct(col("doc_id")).as("b"))
             .withColumn("c", lit(0L))
-          val cnt = timed(batchId, "in-count")((
+          val cnt = Obs.phase(s, "in-count")((
             if (!Files.exists(Paths.get(logDir, "_SUCCESS"))) arrAgg
             else arrAgg.unionByName(s.read.parquet(logDir)
               .filter(col("batch_id") < batchId)
@@ -228,10 +215,10 @@ object MultiSignalIngest {
                 // size gate (knownEdgeCount — the probe job the gate
                 // would otherwise schedule is skipped).
                 val pairsP = lexPairs.unionByName(semPairs).persist()
-                val nPairs = timed(batchId, "pairs-mat")(pairsP.count())
+                val nPairs = Obs.phase(s, "pairs-mat")(pairsP.count())
                 val edges = pairsP.unionByName(
                   pairsP.select(col("dst").as("src"), col("src").as("dst")))
-                val labels = timed(batchId, "cluster-fixpt")(
+                val labels = Obs.phase(s, "cluster-fixpt")(
                   try
                     DedupOps.survivorsToFixpoint(
                       docs.select(col("doc_id")), edges,
@@ -346,19 +333,18 @@ object MultiSignalIngest {
                     // keeps its stored (earlier) value through the
                     // coalesce above, so it books under n_corpus_dupes,
                     // not as a new admission
-                    val fcnt = timed(batchId, "corpus-check")(fresh.agg(
+                    val fcnt = Obs.phase(s, "corpus-check")(fresh.agg(
                       count(lit(1)),
                       count(when(col("first_admitted_batch") === batchId,
                         lit(1)))).head())
                     val (nFresh, nAdmitted) = (fcnt.getLong(0), fcnt.getLong(1))
-                    val nWinners = timed(batchId, "winners")(
-                      winObs.get("n").asInstanceOf[Long])
+                    val nWinners = winObs.get("n").asInstanceOf[Long]
                     // release the bare-scan cache BEFORE the upsert: the
                     // cache manager substitutes cached plan fragments by
                     // equality, so a later read of the same path would
                     // serve the PRE-upsert image
                     committed.foreach(_.unpersist())
-                    if (nFresh > 0) timed(batchId, "admit-upserts") {
+                    if (nFresh > 0) Obs.phase(s, "admit-upserts") {
                       val pureInsert = nFresh == nAdmitted
                       // survivors additionally gate on the physical
                       // schema carrying first_admitted_batch (a
@@ -404,12 +390,16 @@ object MultiSignalIngest {
                       import scala.concurrent.{Await, Future}
                       import scala.concurrent.ExecutionContext.Implicits.global
                       import scala.concurrent.duration.Duration
-                      val survF = Future(writeState(survivorsDir,
-                        squeeze(fresh, nFresh), Seq("doc_id"),
-                        pureInsert && survCanAppend))
-                      val idxF = Future(writeState(indexDir,
-                        squeeze(idxRows, nFresh * bandsPerDoc),
-                        Seq("band", "sig", "doc_id"), pureInsert))
+                      // a pooled thread keeps the local properties of the
+                      // thread that created it: re-open this phase inside
+                      val scope = Obs.scope(s)
+                      val survF = Future(Obs.within(s, scope)(
+                        writeState(survivorsDir, squeeze(fresh, nFresh),
+                          Seq("doc_id"), pureInsert && survCanAppend)))
+                      val idxF = Future(Obs.within(s, scope)(
+                        writeState(indexDir,
+                          squeeze(idxRows, nFresh * bandsPerDoc),
+                          Seq("band", "sig", "doc_id"), pureInsert)))
                       // await BOTH to completion before propagating any
                       // failure: throwing on the first would orphan the
                       // other Future, which would keep writing its
@@ -424,7 +414,7 @@ object MultiSignalIngest {
                         Await.result(idxF, Duration.Inf))
                       survR.get; idxR.get
                     }
-                    timed(batchId, "log-upsert") {
+                    Obs.phase(s, "log-upsert") {
                       import s.implicits._
                       // the log row is keyed by batch_id and only ever
                       // written by its own batch — insert-by-

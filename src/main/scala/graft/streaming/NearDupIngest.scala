@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.obs.Obs
 import graft.operators.DedupOps
 import graft.sinks.UpsertWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -50,21 +51,6 @@ import java.nio.file.{Files, Paths}
   * (pair, shingle) rows, never whole arrays.
   */
 object NearDupIngest {
-
-  /** Stage timer for drain profiling (`GRAFT_STAGE_TIMING=1`): lazy
-    * stages bill to the ACTION that triggers them, which is exactly the
-    * attribution a trim decision needs. Off (the default) it is a plain
-    * call-through. */
-  private val stageTiming = sys.env.contains("GRAFT_STAGE_TIMING")
-  private def timed[A](batchId: Long, tag: String)(f: => A): A =
-    if (!stageTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      Console.err.println(
-        f"[neardup-stage] b$batchId $tag%-14s ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
 
   /** One micro-batch of the drain, exactly as [[start]]'s foreachBatch
     * runs it — exposed (package-private) for the crash-replay contract
@@ -128,7 +114,7 @@ object NearDupIngest {
           // window is then SKIPPED (no shuffle) when the batch provably
           // has no duplicate keys — both counts are of the delivered
           // batch, so the branch replays deterministically
-          val cnt = timed(batchId, "in-count")(arrivals
+          val cnt = Obs.phase(s, "in-count")(arrivals
             .agg(count(lit(1)), countDistinct(col("doc_id"))).head())
           val (nIn, nBatch) = (cnt.getLong(0), cnt.getLong(1))
           // keep-latest per doc_id BEFORE any counting: two rows sharing
@@ -196,10 +182,10 @@ object NearDupIngest {
               .persist()
             // the count that materializes the cache doubles as the
             // fixpoint's size gate (skips its probe job)
-            val nPairs = timed(batchId, "pairs-mat")(pairsP.count())
+            val nPairs = Obs.phase(s, "pairs-mat")(pairsP.count())
             val edges = pairsP.unionByName(
               pairsP.select(col("dst").as("src"), col("src").as("dst")))
-            val labels = timed(batchId, "cluster-fixpt")(try
+            val labels = Obs.phase(s, "cluster-fixpt")(try
               DedupOps.survivorsToFixpoint(docs.select(col("doc_id")), edges,
                 knownEdgeCount = Some(2L * nPairs))
             finally pairsP.unpersist())
@@ -280,19 +266,18 @@ object NearDupIngest {
                 // admitted key keeps its stored earlier value through
                 // the coalesce above, so it books under n_corpus_dupes,
                 // not as a new admission)
-                val fcnt = timed(batchId, "corpus-check")(fresh.agg(
+                val fcnt = Obs.phase(s, "corpus-check")(fresh.agg(
                   count(lit(1)),
                   count(when(col("first_admitted_batch") === batchId,
                     lit(1)))).head())
                 val (nFresh, nAdmitted) = (fcnt.getLong(0), fcnt.getLong(1))
-                val nWinners = timed(batchId, "winners")(
-                  winObs.get("n").asInstanceOf[Long])
+                val nWinners = winObs.get("n").asInstanceOf[Long]
                 // release the bare-scan cache BEFORE the writes: the
                 // cache manager substitutes cached plan fragments by
                 // equality, so a later read of the same path would
                 // serve the PRE-upsert image
                 committed.foreach(_.unpersist())
-                if (nFresh > 0) timed(batchId, "admit-upserts") {
+                if (nFresh > 0) Obs.phase(s, "admit-upserts") {
                   val pureInsert = nFresh == nAdmitted
                   // survivors additionally gate on the physical schema
                   // carrying first_admitted_batch (pre-upgrade tables
@@ -320,15 +305,19 @@ object NearDupIngest {
                   import scala.concurrent.{Await, Future}
                   import scala.concurrent.ExecutionContext.Implicits.global
                   import scala.concurrent.duration.Duration
-                  val survF = Future(writeState(survivorsDir,
-                    squeeze(fresh, nFresh), Seq("doc_id"),
-                    pureInsert && survCanAppend))
+                  // a pooled thread keeps the local properties of the
+                  // thread that created it: re-open this phase inside
+                  val scope = Obs.scope(s)
+                  val survF = Future(Obs.within(s, scope)(
+                    writeState(survivorsDir, squeeze(fresh, nFresh),
+                      Seq("doc_id"), pureInsert && survCanAppend)))
                   // the index keys embed the doc_id, so a pure-insert
                   // batch's index rows are fresh keys too (its row
                   // carries no first_admitted_batch — no schema gate)
-                  val idxF = Future(writeState(indexDir,
-                    squeeze(idxRows, nFresh * bandsPerDoc),
-                    Seq("band", "sig", "doc_id"), pureInsert))
+                  val idxF = Future(Obs.within(s, scope)(
+                    writeState(indexDir,
+                      squeeze(idxRows, nFresh * bandsPerDoc),
+                      Seq("band", "sig", "doc_id"), pureInsert)))
                   // both awaited to completion before any throw — a
                   // first-failure throw would orphan the other Future
                   // as an unleased writer past the batch's lifetime
@@ -350,12 +339,12 @@ object NearDupIngest {
                 // keyed by batch_id, only ever written by its own batch:
                 // the delta append restates on replay by tag, without a
                 // read+window+swap merge per batch
-                UpsertWriter.append(s, logDir,
+                Obs.phase(s, "log-upsert")(UpsertWriter.append(s, logDir,
                   Seq((batchId, nIn, nIn - nWinners, nWinners - nAdmitted,
                     nAdmitted))
                     .toDF("batch_id", "n_in", "n_batch_dupes",
                       "n_corpus_dupes", "n_admitted"),
-                  keys = Seq("batch_id"), batchTag = s"b$batchId")
+                  keys = Seq("batch_id"), batchTag = s"b$batchId"))
               } finally fresh.unpersist()
             } finally winners.unpersist()
           } finally {

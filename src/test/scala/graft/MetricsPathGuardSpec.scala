@@ -1,0 +1,48 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Mechanical audit against regrowth of ad hoc instrumentation: the
+  * shipped code reports what it did through `graft.obs` alone, so no
+  * other `SparkListener` and no env flag of its own may appear in
+  * `src/main`. `GRAFT_GATE_DEBUG` is the one flag still allowed. */
+class MetricsPathGuardSpec extends AnyFunSuite {
+  private val root = Paths.get("src/main/scala")
+  private val allowedFlags = Set("GRAFT_GATE_DEBUG")
+
+  private def sources: Seq[(Path, Seq[String])] = {
+    assert(Files.isDirectory(root), s"run from the repo root: no $root")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readAllLines(p).asScala.toSeq).toList
+    finally walk.close()
+  }
+
+  test("no SparkListener outside graft/obs") {
+    val listener = """\b(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b""".r
+    val found = for {
+      (p, lines) <- sources
+      if !p.startsWith(root.resolve("graft/obs"))
+      (l, i) <- lines.zipWithIndex
+      if listener.findFirstIn(l).isDefined
+    } yield s"$p:${i + 1}: ${l.trim}"
+    assert(found.isEmpty,
+      s"a listener outside graft.obs — tag phases with Obs.phase instead:\n${found.mkString("\n")}")
+  }
+
+  test("no env flag of graft's own beyond GRAFT_GATE_DEBUG") {
+    val read = """(sys\.env|System\.getenv)""".r
+    val flag = "\"(GRAFT_[A-Z0-9_]+)\"".r
+    val found = for {
+      (p, lines) <- sources
+      (l, i) <- lines.zipWithIndex
+      if read.findFirstIn(l).isDefined
+      m <- flag.findAllMatchIn(l)
+      if !allowedFlags(m.group(1))
+    } yield s"$p:${i + 1}: ${l.trim}"
+    assert(found.isEmpty,
+      s"an env flag beyond $allowedFlags:\n${found.mkString("\n")}")
+  }
+}
