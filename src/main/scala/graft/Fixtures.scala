@@ -92,7 +92,7 @@ object Fixtures {
     spark.read.parquet(dir.toString)
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (Files.isDirectory(p))
       Files.list(p).forEach(deleteRecursively(_))
     Files.deleteIfExists(p)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Exprs, OpModule, Pipeline, Q, Tables}
+import graft.{Exprs, Fixtures, OpModule, Pipeline, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,9 +33,24 @@ import java.nio.file.{Files, Path}
   */
 object StreamingIngestOps extends OpModule {
 
+  /** Every gate's scratch base dir. A gate's result reads its
+    * warehouse lazily, so the dirs outlive the query call; ONE shutdown
+    * hook deletes them all when the JVM exits. */
+  private val gateDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  private lazy val deleteAtExit: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => gateDirs.forEach(Fixtures.deleteRecursively(_))))
+
+  /** A fresh `graft-gate-<tag>*` temp dir, deleted at JVM exit. */
+  private def gateDir(tag: String): Path = {
+    deleteAtExit
+    val base = Files.createTempDirectory(s"graft-gate-$tag")
+    gateDirs.add(base)
+    base
+  }
+
   /** Fresh (flat-input, warehouse, checkpoint) dirs for one drain. */
   private def dirs(tag: String): (Path, String, String, String) = {
-    val base = Files.createTempDirectory(s"graft-gate-$tag")
+    val base = gateDir(tag)
     val flat = base.resolve("in").toString
     new java.io.File(flat).mkdirs()
     (base, flat, base.resolve("wh").toString, base.resolve("ckpt").toString)
@@ -147,8 +162,7 @@ object StreamingIngestOps extends OpModule {
       s: SparkSession, rows: DataFrame, idCol: String,
       run: (DataFrame, Long, String) => Unit,
       mid: (String, DataFrame) => Unit = (_, _) => ()): String = {
-    val wh = Files.createTempDirectory("graft-gate-direct")
-      .resolve("wh").toString
+    val wh = gateDir("direct").resolve("wh").toString
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     val prevWsc = s.conf.get("spark.sql.codegen.wholeStage")

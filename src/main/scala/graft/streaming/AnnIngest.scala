@@ -5,7 +5,7 @@ import graft.sinks.UpsertWriter
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 
@@ -90,15 +90,13 @@ object AnnIngest {
             // (nearestCell's argmax window collapses same-batch
             // duplicates), so a pure-insert batch satisfies
             // appendBucketed's distinct-keys contract by construction.
-            val idxRaw =
-              if (!Files.exists(Paths.get(indexDir, "_SUCCESS"))) None
-              else Some(s.read.parquet(indexDir))
+            val idxRaw = Admission.read(s, indexDir)
             // PHYSICAL-schema append gate, decided before the read-time
             // backfill masks a pre-upgrade table
-            // ([[EmbedIngest.canAppendFirstAdmitted]])
-            val idxCanAppend = EmbedIngest.canAppendFirstAdmitted(idxRaw)
+            // ([[Admission.canAppendFirstAdmitted]])
+            val idxCanAppend = Admission.canAppendFirstAdmitted(idxRaw)
             val priorFab = idxRaw.map { rawIdx =>
-                val raw = EmbedIngest.withFirstAdmitted(rawIdx)
+                val raw = Admission.withFirstAdmitted(rawIdx)
                 // pin-resolved count ([[UpsertWriter.effectiveBuckets]]):
                 // deriving prune targets from a STALE configured count
                 // after a maintenance rebucket would filter the wrong
@@ -139,44 +137,16 @@ object AnnIngest {
               val fcnt = withFab.agg(count(lit(1)),
                 count(when(col("first_admitted_batch") === batchId,
                   lit(1)))).head()
-              val pureInsert = fcnt.getLong(0) == fcnt.getLong(1)
-              // small admit batches stage through one task → exactly
-              // one delta file per touched bucket (fewer footers on
-              // every later index read; big batches keep parallelism)
-              val batchRows = fcnt.getLong(0)
-              val writeImg =
-                if (batchRows < 100000) withFab.coalesce(1) else withFab
-              // postings write: hash-bucketed when stateBuckets is set
-              // (the family's shared 100 TB contract); a pure-insert
-              // batch (every key first-admitted now) APPENDS O(batch)
-              // delta files, a batch carrying any re-sent key takes the
-              // keyed touched-bucket merge for the whole set (mixing
-              // same-batch appends with rewrites breaks replay). The
-              // k-row centroid table and one-row-per-batch log stay
-              // plain.
-              // the append shape additionally gates on the PHYSICAL
-              // schema carrying first_admitted_batch: a pre-upgrade
-              // index takes ONE schema-growing merge (which adopts the
-              // column table-wide), then appends
-              // pin-resolved, like the prune above: the write must
-              // follow the table's layout, not the worker's config
-              stateBuckets
-                  .map(UpsertWriter.effectiveBuckets(indexDir, _)) match {
-                case Some(b) if pureInsert && idxCanAppend =>
-                  UpsertWriter.appendBucketed(s, indexDir, writeImg,
-                    keys = Seq("vec_id"), batchTag = s"b$batchId",
-                    numBuckets = b)
-                case Some(b) => UpsertWriter.upsertBucketed(s, indexDir,
-                  writeImg, keys = Seq("vec_id"), versionCol = "batch_id",
-                  numBuckets = b)
-                // plain layout: same insert/update split — pure-insert
-                // batches append root delta files, O(batch)
-                case None if pureInsert && idxCanAppend =>
-                  UpsertWriter.append(s, indexDir,
-                    writeImg, keys = Seq("vec_id"), batchTag = s"b$batchId")
-                case None => UpsertWriter.upsert(s, indexDir, writeImg,
-                  keys = Seq("vec_id"), versionCol = "batch_id")
-              }
+              // postings write in the family's shapes
+              // ([[Admission.writeState]]): a pure-insert batch (every
+              // key first-admitted now) appends, and the append
+              // additionally gates on the PHYSICAL schema carrying
+              // first_admitted_batch. The k-row centroid table and
+              // one-row-per-batch log stay plain.
+              Admission.writeState(s, indexDir, withFab, fcnt.getLong(0),
+                Seq("vec_id"),
+                fcnt.getLong(0) == fcnt.getLong(1) && idxCanAppend,
+                batchId, stateBuckets)
               // batch stats for the log, in ONE audit pass over the
             // BATCH-LOCAL assignment (replay-deterministic: assignment
             // is a pure function of the cached batch and the frozen
@@ -198,15 +168,11 @@ object AnnIngest {
             audit
           } else SkewTools.SkewAudit("cell", 0L, 0L, 0L)
           import s.implicits._
-          // keyed by batch_id, only ever written by its own batch: the
-          // delta append restates on replay by tag, without a
-          // read+window+swap merge per batch
-          UpsertWriter.append(s, logDir,
+          Admission.appendLog(s, logDir, batchId,
             Seq((batchId, nIn, cellAudit.totalRows, cellAudit.nKeys,
                 cellAudit.maxShare))
               .toDF("batch_id", "n_in", "n_indexed", "n_cells_touched",
-                "cell_max_share"),
-            keys = Seq("batch_id"), batchTag = s"b$batchId")
+                "cell_max_share"))
         } finally vecs.unpersist()
     ()
   }
@@ -225,22 +191,11 @@ object AnnIngest {
       checkpointDir: String,
       filesPerTrigger: Int = 1,
       dim: Int = 64,
-      stateBuckets: Option[Int] = None): StreamingQuery = {
-
-    val schema = spark.read.parquet(inputDir).schema
-
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      stateBuckets: Option[Int] = None): StreamingQuery =
+    Admission.start(spark, inputDir, checkpointDir, filesPerTrigger) {
+      (batch, batchId) =>
         processBatch(batch, batchId, warehouseDir, dim, stateBuckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** Per-label fixed-point mean over prepared (label, v) rows — the
     * engine-exact quantizer fit (`ann_ivf_centroids`' formula). The
@@ -483,7 +438,7 @@ object AnnIngest {
     // write) the index is ABSENT, so search returns an empty result
     // instead of throwing on a missing path or reading an uncommitted
     // image the rest of the package treats as nonexistent
-    val cents = tableOrEmpty(spark, s"$warehouseDir/ann_centroids",
+    val cents = Admission.tableOrEmpty(spark, s"$warehouseDir/ann_centroids",
       StructType(Seq(
         StructField("cell", IntegerType),
         StructField("centroid", ArrayType(DoubleType)),
@@ -512,13 +467,6 @@ object AnnIngest {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
   }
 
-  private def tableOrEmpty(
-      spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(dir)
-
   /** TAKEDOWN: remove indexed vectors matching `predicate` — a
     * searched row-grain [[UpsertWriter.deleteWhere]] on the postings
     * index under the maintenance lease. ONE table, so no multi-table
@@ -537,11 +485,8 @@ object AnnIngest {
   def takedown(
       spark: SparkSession,
       warehouseDir: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    val dir = s"$warehouseDir/ann_index"
-    if (!Files.exists(Paths.get(dir, "_SUCCESS"))) 0L
-    else UpsertWriter.deleteWhere(spark, dir, predicate)
-  }
+      predicate: org.apache.spark.sql.Column): Long =
+    Admission.deleteWhere(spark, s"$warehouseDir/ann_index", predicate)
 
   /** Serving view: the postings index (cell, vec_id, v, norm).
     * `batch_id` is the LAST batch that wrote the row (bumped by a
@@ -549,20 +494,18 @@ object AnnIngest {
     * indexed the key (immutable — the append-vs-merge discriminator;
     * backfilled to `batch_id` for pre-upgrade tables). */
   def index(spark: SparkSession, warehouseDir: String): DataFrame =
-    EmbedIngest.withFirstAdmitted(
-      tableOrEmpty(spark, s"$warehouseDir/ann_index", StructType(Seq(
-        StructField("cell", IntegerType), StructField("vec_id", LongType),
-        StructField("label", IntegerType),
-        StructField("v", ArrayType(DoubleType)),
-        StructField("norm", DoubleType), StructField("batch_id", LongType),
-        StructField("first_admitted_batch", LongType)))))
-      .drop(graft.sinks.UpsertWriter.BucketCol) // layout, not data
+    Admission.stateView(spark, s"$warehouseDir/ann_index", StructType(Seq(
+      StructField("cell", IntegerType), StructField("vec_id", LongType),
+      StructField("label", IntegerType),
+      StructField("v", ArrayType(DoubleType)),
+      StructField("norm", DoubleType), StructField("batch_id", LongType),
+      StructField("first_admitted_batch", LongType))))
 
   /** Serving view: the per-batch ingest log. `cell_max_share` is the
     * hottest cell's share of that batch's assignments — the quantizer
     * drift signal (balanced ≈ 1/k, drifted → 1). */
   def ingestLog(spark: SparkSession, warehouseDir: String): DataFrame =
-    tableOrEmpty(spark, s"$warehouseDir/ann_log", StructType(Seq(
+    Admission.tableOrEmpty(spark, s"$warehouseDir/ann_log", StructType(Seq(
       StructField("batch_id", LongType), StructField("n_in", LongType),
       StructField("n_indexed", LongType),
       StructField("n_cells_touched", LongType),
@@ -572,7 +515,7 @@ object AnnIngest {
     * refit sequence at that batch) — the visible history the frozen
     * quantizer's refresh policy leaves behind. */
   def refitLog(spark: SparkSession, warehouseDir: String): DataFrame =
-    tableOrEmpty(spark, s"$warehouseDir/ann_refit_log", StructType(Seq(
+    Admission.tableOrEmpty(spark, s"$warehouseDir/ann_refit_log", StructType(Seq(
       StructField("as_of_batch", LongType),
       StructField("refit_seq", LongType),
       StructField("n_vectors", LongType), StructField("n_moved", LongType),

@@ -177,12 +177,6 @@ object DedupIngest {
       .start()
   }
 
-  /** Serving view: every admitted (first-arrival) document. Empty — not
-    * an error — before the first committed batch, and a crashed partial
-    * write stays invisible until its upsert commits (`_SUCCESS` guard,
-    * uniform across this package's serving reads; this worker was the
-    * one exception until round 8). The declared schema covers the
-    * contract columns; extra input columns ride along once committed. */
   /** TAKEDOWN: remove admitted documents matching `predicate` (over
     * the survivors schema) from the corpus — a searched row-grain
     * [[UpsertWriter.deleteWhere]] under the maintenance lease
@@ -199,8 +193,14 @@ object DedupIngest {
     else UpsertWriter.deleteWhere(spark, dir, predicate)
   }
 
+  /** Serving view: every admitted (first-arrival) document. Empty — not
+    * an error — before the first committed batch, and a crashed partial
+    * write stays invisible until its upsert commits (`_SUCCESS` guard,
+    * uniform across this package's serving reads). The declared schema
+    * covers the contract columns; extra input columns ride along once
+    * committed. */
   def survivors(spark: SparkSession, warehouseDir: String): DataFrame =
-    tableOrEmpty(spark, s"$warehouseDir/dedup_survivors",
+    Admission.tableOrEmpty(spark, s"$warehouseDir/dedup_survivors",
       StructType(Seq(
         StructField("doc_id", LongType),
         StructField("text", StringType),
@@ -210,19 +210,11 @@ object DedupIngest {
 
   /** Serving view: the per-batch admission log. */
   def ingestLog(spark: SparkSession, warehouseDir: String): DataFrame =
-    tableOrEmpty(spark, s"$warehouseDir/dedup_log",
+    Admission.tableOrEmpty(spark, s"$warehouseDir/dedup_log",
       StructType(Seq(
         StructField("batch_id", LongType),
         StructField("n_in", LongType),
         StructField("n_batch_dupes", LongType),
         StructField("n_seen_before", LongType),
         StructField("n_admitted", LongType))))
-
-  private def tableOrEmpty(
-      spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(dir)
 }

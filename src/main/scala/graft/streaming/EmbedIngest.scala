@@ -1,20 +1,15 @@
 package graft.streaming
 
 import graft.operators.DedupOps
-import graft.sinks.UpsertWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
 
 /** Continuous EMBEDDING-cosine near-dup ingest — the streaming form of
   * `dedup_embedding_cosine`, completing the dedup worker family
   * ([[DedupIngest]] exact, [[NearDupIngest]] lexical MinHash-LSH, this
-  * one semantic). State lives in TABLES ([[DedupIngest]]'s discipline):
-  * restarts restate instead of duplicating, state compacts like any
-  * table.
+  * one semantic) on the family's [[Admission]] kernel.
   *
   * Candidates come from the batch family's OCCUPANCY-SCALED
   * random-hyperplane cells: every vector stores its FULL
@@ -29,55 +24,24 @@ import java.nio.file.{Files, Paths}
   * [[AnnIngest.refit]]; data-independent hyperplanes never do — the
   * standard LSH-vs-IVF maintenance trade).
   *
-  * Per micro-batch:
+  * This worker's signal ([[semantic]]):
   *
-  *  1. WITHIN-BATCH clustering: Hamming-1 MULTIPROBE cell-collision
-  *     pairs (each vector probes its own cell plus every single-bit
-  *     flip — `dedup_embedding_cosine_mp`'s measured recall trade)
-  *     verified by the family's 1e-6-quantized cosine ≥ `thresh`,
-  *     min-label propagation ([[DedupOps.survivorsToFixpoint]]) picks
-  *     one representative per cluster (lowest vec_id — total order, so
-  *     a replayed batch picks the same winners).
+  *  1. WITHIN-BATCH pairs: Hamming-1 MULTIPROBE cell-collision pairs
+  *     (each vector probes its own cell plus every single-bit flip —
+  *     `dedup_embedding_cosine_mp`'s measured recall trade) verified by
+  *     the family's 1e-6-quantized cosine ≥ `thresh`; the kernel keeps
+  *     the lowest vec_id per cluster.
   *  2. VS-CORPUS check: winners' probe rings equi-join the stored
   *     survivors' re-masked signatures; collisions verify by the same
   *     quantized cosine — the identical admit definition as step 1 and
-  *     as the serving-side [[nearDuplicates]] default. A winner
-  *     matching an admitted survivor drops, and the
-  *     cluster members it represented fall with it (the representative
-  *     carries the cluster — the family's streaming contract).
-  *  3. ADMIT: fresh winners upsert into the survivors table keyed by
-  *     vec_id (idempotent under replay); the admission log is keyed by
-  *     batch_id, written LAST, with the admitted count taken from the
-  *     replay-deterministic batch-local admit set (attempt-invariant;
-  *     no per-batch corpus scan).
+  *     as the serving-side [[nearDuplicates]] default.
   *
   * Replay determinism of the MASK: the corpus count that picks the
-  * width is (survivors FIRST admitted by prior batches) + (this
-  * batch's id-deduped arrivals). Both the count and the corpus check
-  * filter the stored table on the IMMUTABLE `first_admitted_batch`
-  * column — set once at a key's first admission and never bumped by
-  * the keyed upsert. `batch_id` alone would NOT be replay-safe: a
-  * later batch re-delivering an already-admitted key updates that
-  * row's content and bumps its `batch_id` (last-write-wins), so a
-  * crash after the upsert but before the checkpoint commit would make
-  * the replay's `batch_id < batchId` filter lose the survivor —
-  * shrinking the corpus count, potentially shifting the whole batch's
-  * mask width, and silently admitting winners the first attempt
-  * dropped. With `first_admitted_batch` the replay sees the identical
-  * corpus COUNT, mask, and candidate structure; the re-delivered key's
-  * update books under `n_corpus_dupes` (it is not a NEW admission),
-  * and `n_admitted` counts rows FIRST admitted by this batch — both
-  * attempt-invariant. Scope of the guarantee: admissions restate
-  * identically when re-delivered CONTENT is unchanged (the streaming
-  * source's contract — a replayed batch is the same batch). If an
-  * upstream re-delivers an admitted key with DIFFERENT
-  * embedding/text, the crashed attempt's upsert already rewrote that
-  * row's content last-write-wins, so the replay's vs-corpus cosine
-  * checks compare other winners against the NEW content where the
-  * first attempt saw the old — the corpus count and mask still agree,
-  * but individual admissions near the threshold may differ. That is a
-  * semantic-content change, not a replay artifact; exactly-once holds
-  * per delivered content.
+  * width is (survivors FIRST admitted by prior batches, from the
+  * admission log) + (this batch's id-deduped arrivals), and the corpus
+  * check filters the stored table on the immutable
+  * `first_admitted_batch` ([[Admission]]'s replay anchor), so a replay
+  * sees the identical corpus count, mask and candidate structure.
   *
   * NULL/empty embeddings have no geometry: their cosine is NULL, so
   * they form no edges and admit as singletons (one row per vec_id via
@@ -93,49 +57,6 @@ import java.nio.file.{Files, Paths}
   */
 object EmbedIngest {
 
-  /** Upgrade-compat backfill for survivors tables written BEFORE the
-    * `first_admitted_batch` column existed: such a row was never
-    * re-delivered across batches under the old code (it had no replay
-    * anchor to preserve), so its `batch_id` — the batch that wrote it —
-    * IS its first admission, and coalescing the missing column to
-    * `batch_id` restates exactly the old filter's semantics. New tables
-    * pass through untouched; without this, resuming a drain over a
-    * pre-upgrade warehouse would throw AnalysisException on the first
-    * `first_admitted_batch` reference.
-    *
-    * NULL values are repaired the same way, not just the missing
-    * column: once a schema-growing merge ADOPTS the column on a
-    * pre-upgrade table, the surviving old rows carry it physically as
-    * NULL (additive evolution — the merge can't know this worker's
-    * backfill rule), and a bare pass-through would silently drop them
-    * from every `first_admitted_batch < batchId` prior filter (NULL
-    * comparisons are never true) — the stored corpus would stop
-    * vetoing near-dups of its own oldest rows. Shared by the whole
-    * worker family ([[MultiSignalIngest]] uses it too). */
-  private[streaming] def withFirstAdmitted(df: DataFrame): DataFrame =
-    if (df.columns.contains("first_admitted_batch"))
-      df.withColumn("first_admitted_batch",
-        coalesce(col("first_admitted_batch"), col("batch_id")))
-    else df.withColumn("first_admitted_batch", col("batch_id"))
-
-  /** Whether a worker may take the APPEND write shape on this table:
-    * the admit set carries `first_admitted_batch`, and an append can
-    * never grow the physical schema ([[UpsertWriter]] refuses it — a
-    * new-column delta file would be invisible to footer-sampled reads).
-    * On a PRE-upgrade table (written before the column existed,
-    * backfilled only at read time by [[withFirstAdmitted]]) the first
-    * pure-insert batch would therefore throw — deterministically, on
-    * every replay: the stream wedges permanently, since only a merge
-    * performs the schema-growing full rewrite and a pure-insert batch
-    * never takes one. Gating the append shape on the PHYSICAL schema
-    * routes exactly that first batch through the merge (which adopts
-    * the column table-wide); every later batch appends. `raw` is the
-    * table's plain read BEFORE the read-time backfill; an absent table
-    * appends freely (its first write creates the full schema). */
-  private[streaming] def canAppendFirstAdmitted(
-      raw: Option[DataFrame]): Boolean =
-    raw.forall(_.columns.contains("first_admitted_batch"))
-
   /** One micro-batch of the drain, exactly as [[start]]'s foreachBatch
     * runs it — exposed (package-private) so the crash-replay specs can
     * drive a batch twice with the SAME `batchId`, the contract a
@@ -146,243 +67,54 @@ object EmbedIngest {
       batchId: Long,
       warehouseDir: String,
       thresh: Double = 0.4,
-      stateBuckets: Option[Int] = None): Unit = {
-    val s = batch.sparkSession
-    val survivorsDir = s"$warehouseDir/embed_survivors"
-    val logDir = s"$warehouseDir/embed_log"
-    // survivors write, bucketed when stateBuckets is set (the 100 TB
-    // form; the log stays plain either way — one row per batch). The
-    // bucketed path splits by WRITE SHAPE, decided from the two counts
-    // the batch already computed: a pure-insert batch (every fresh row
-    // first-admitted now — the admission pipeline just PROVED the keys
-    // absent) rides [[UpsertWriter.appendBucketed]], O(batch) delta
-    // files, no bucket read or rewrite — the form that survives a
-    // firehose of fresh keys, where a touched-bucket MERGE degenerates
-    // to O(corpus) once batch keys ≥ buckets. A batch carrying any
-    // re-delivered admitted key (a content UPDATE) takes the keyed
-    // touched-bucket merge for the whole fresh set instead — mixing
-    // same-batch appends with same-batch bucket rewrites would let a
-    // replay double-apply the appended rows the rewrite had folded into
-    // the bucket base. The branch condition is replay-deterministic
-    // (both counts derive from the immutable first_admitted_batch).
-    // config seeds the first write; the table's pin is authoritative
-    // after that ([[UpsertWriter.effectiveBuckets]] — a maintenance
-    // rebucket must land under a live worker config)
-    def writeState(dir: String, df: DataFrame, keys: Seq[String],
-        pureInsert: Boolean): Unit =
-      stateBuckets.map(UpsertWriter.effectiveBuckets(dir, _)) match {
-        case Some(b) if pureInsert => UpsertWriter.appendBucketed(
-          s, dir, df, keys, batchTag = s"b$batchId", numBuckets = b)
-        case Some(b) => UpsertWriter.upsertBucketed(
-          s, dir, df, keys, versionCol = "batch_id", numBuckets = b)
-        // the plain layout takes the same insert/update split: a pure-
-        // insert batch appends O(batch) root delta files instead of a
-        // whole-table read + window + staged rewrite
-        case None if pureInsert => UpsertWriter.append(
-          s, dir, df, keys, batchTag = s"b$batchId")
-        case None => UpsertWriter.upsert(
-          s, dir, df, keys, versionCol = "batch_id")
-      }
-    val arrivals = batch
-      .withColumn("__seq", monotonically_increasing_id())
-      .persist()
-    try {
-      // ONE aggregation job answers all three driver-side counts: rows
-      // in, distinct keys (= the keep-latest survivors), and the prior-
-      // corpus size from the admission log (sum of n_admitted over
-      // batches < batchId — first admissions only, rows never deleted,
-      // every prior batch's log row committed before this batch runs).
-      // The log unions in as a second one-row aggregate instead of its
-      // own job — at micro-batch sizes per-job overhead dominates.
-      val arrAgg = arrivals
-        .agg(count(lit(1)).as("a"), countDistinct(col("vec_id")).as("b"))
-        .withColumn("c", lit(0L))
-      val cnt = (
-        if (!Files.exists(Paths.get(logDir, "_SUCCESS"))) arrAgg
-        else arrAgg.unionByName(s.read.parquet(logDir)
-          .filter(col("batch_id") < batchId)
-          .agg(coalesce(sum(col("n_admitted")), lit(0L)).as("c"))
-          .select(lit(0L).as("a"), lit(0L).as("b"), col("c"))))
-        .agg(sum(col("a")), sum(col("b")), sum(col("c"))).head()
-      val (nIn, nBatch, nPrior) =
-        (cnt.getLong(0), cnt.getLong(1), cnt.getLong(2))
-      // keep-latest per vec_id BEFORE any counting ([[NearDupIngest]]'s
-      // same-batch re-delivery rule): the keyed upsert would collapse
-      // the rows anyway, and counting both as winners would book the
-      // collapse as a phantom corpus dupe. Highest arrival order wins,
-      // matching UpsertWriter's within-batch tie-break. SKIPPED (no
-      // window shuffle) when the batch provably has no duplicate keys —
-      // both counts are of the delivered batch, so the branch replays
-      // deterministically.
-      val wVec = Window.partitionBy(col("vec_id")).orderBy(col("__seq").desc)
-      val sigged = DedupOps.embeddingSigged(
-        if (nIn == nBatch) arrivals.drop("__seq")
-        else arrivals
-          .withColumn("__rn", row_number().over(wVec))
-          .filter(col("__rn") === 1)
-          .drop("__seq", "__rn"))
-        .persist()
-      try {
-        // the committed table, read ONCE per batch: the prior corpus
-        // (first_admitted_batch < batchId — rows first admitted by
-        // EARLIER batches; a crashed attempt's own admissions carry
-        // first_admitted_batch == batchId and are invisible) and the
-        // first_admitted_batch lookup for the admit upsert both derive
-        // from it
-        val committedRaw =
-          if (!Files.exists(Paths.get(survivorsDir, "_SUCCESS"))) None
-          else Some(s.read.parquet(survivorsDir))
-        // PHYSICAL-schema append gate, decided before the read-time
-        // backfill masks a pre-upgrade table ([[canAppendFirstAdmitted]])
-        val survCanAppend = canAppendFirstAdmitted(committedRaw)
-        val committed = committedRaw.map(r => withFirstAdmitted(r).persist())
-        try {
-          val prior = committed.map(
-            _.filter(col("first_admitted_batch") < batchId))
-          val mask = DedupOps.cellMaskFor(nPrior + nBatch)
-          val cells = sigged
-            .withColumn("cell", col("sig").bitwiseAND(lit(mask)))
+      stateBuckets: Option[Int] = None): Unit =
+    Admission.processBatch(batch, batchId, "vec_id",
+      s"$warehouseDir/embed_survivors", s"$warehouseDir/embed_log",
+      stateBuckets, prepare = DedupOps.embeddingSigged) {
+      (docs, corpusSize) => semantic(docs, "vec_id", corpusSize, thresh)
+    }
 
-          // 1. within-batch clusters → one winner per cluster. The pair
-          // join runs the Hamming-1 MULTIPROBE ring (the batch family's
-          // `dedup_embedding_cosine_mp` trade, recall 0.07 → 0.30 at
-          // (bits+1)× still-linear cost): the ordered side probes its
-          // own cell plus every single-bit flip, so a pair at Hamming
-          // ≤ 1 matches on exactly ONE probe — no distinct needed, no
-          // pair scored twice. The admit definition must be the SAME
-          // within-batch and vs-corpus, or a near-dup pair would admit
-          // together when co-arriving and dedup when split across
-          // batches.
-          val a = cells.select(col("vec_id").as("va_id"),
-            explode(DedupOps.cellProbes(col("cell"))).as("probe"),
-            col("v").as("va"), col("norm").as("na"))
-          val b = cells.select(col("vec_id").as("vb_id"),
-            col("cell").as("cb"), col("v").as("vb"), col("norm").as("nb"))
-          // persist the DIRECTED pairs, not the symmetric union —
-          // the union's branches would each re-run the cell join +
-          // cosine verify (NearDupIngest's measured fix); the
-          // fixpoint checkpoints eagerly, so the persist releases
-          // as soon as it returns
-          val pairsP = a
-            .join(b, col("probe") === col("cb") && col("va_id") < col("vb_id"))
-            .filter(DedupOps.quantCos(
-              col("va"), col("na"), col("vb"), col("nb")) >= thresh)
-            .select(col("va_id").as("src"), col("vb_id").as("dst"))
-            .persist()
-          // the count that materializes the cache doubles as the
-          // fixpoint's size gate (skips its probe job)
-          val nPairs = pairsP.count()
-          val edges = pairsP.unionByName(
-            pairsP.select(col("dst").as("src"), col("src").as("dst")))
-          val labels =
-            try
-              DedupOps.survivorsToFixpoint(
-                sigged.select(col("vec_id").as("doc_id")), edges,
-                knownEdgeCount = Some(2L * nPairs))
-            finally pairsP.unpersist()
-          val winners = cells.join(
-            labels.filter(col("is_survivor"))
-              .select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi")
-            .persist()
-          // nWinners folds into the fresh-count job via Observation
-          // (every winner row flows through freshBase's anti-join left
-          // side exactly once) instead of its own count job
-          val winObs = org.apache.spark.sql.Observation()
-          try {
-            // 2. winners vs the stored corpus under the SAME mask —
-            // stored rows re-mask their full signatures at read time;
-            // winners probe their Hamming-1 ring (the same admit
-            // definition as step 1, and as the serving-side
-            // [[nearDuplicates]] default)
-            val dupVsCorpus = prior match {
-              case None => winners.limit(0).select(col("vec_id"))
-              case Some(corp) =>
-                val corpusCells = DedupOps.withVNorm(
-                    corp.select(col("vec_id"), col("embedding"), col("sig")))
-                  .select(col("vec_id").as("vb_id"), col("v").as("vb"),
-                    col("norm").as("nb"),
-                    col("sig").bitwiseAND(lit(mask)).as("cb"))
-                winners
-                  .select(col("vec_id"), col("v"), col("norm"),
-                    explode(DedupOps.cellProbes(col("cell"))).as("probe"))
-                  .join(corpusCells,
-                    col("probe") === col("cb") && col("vec_id") =!= col("vb_id"))
-                  .filter(DedupOps.quantCos(
-                    col("v"), col("norm"), col("vb"), col("nb")) >= thresh)
-                  // no distinct: the only consumer is a left_anti join,
-                  // which ignores right-side duplicates
-                  .select(col("vec_id"))
-            }
-
-            // 3. admit fresh winners (full arrival row + signature).
-            // first_admitted_batch: this batch for keys the table has
-            // never seen, the stored row's value for a re-delivered
-            // already-admitted key — set once, NEVER bumped (the
-            // replay-determinism anchor documented above)
-            val freshBase = winners
-              .observe(winObs, count(lit(1)).as("n"))
-              .drop("v", "norm", "cell")
-              .join(dupVsCorpus, Seq("vec_id"), "left_anti")
-              .withColumn("batch_id", lit(batchId))
-            val fresh = (committed match {
-              case None =>
-                freshBase.withColumn("first_admitted_batch", lit(batchId))
-              case Some(corp) =>
-                freshBase
-                  .join(corp.select(col("vec_id"),
-                    col("first_admitted_batch").as("__fab")),
-                    Seq("vec_id"), "left")
-                  .withColumn("first_admitted_batch",
-                    coalesce(col("__fab"), lit(batchId)))
-                  .drop("__fab")
-            }).persist()
-            try {
-              // one aggregation answers the fresh-row count AND this
-              // batch's first-admissions count, from the persisted
-              // batch-local `fresh` — replacing the O(corpus) survivors
-              // re-scan the log used to pay per batch. Attempt-invariant:
-              // `fresh` is replay-deterministic (the prior filter rides
-              // the immutable first_admitted_batch), and a re-delivered
-              // admitted key keeps its stored earlier value through the
-              // coalesce above, so it books under n_corpus_dupes, not as
-              // a new admission
-              val fcnt = fresh.agg(
-                count(lit(1)),
-                count(when(col("first_admitted_batch") === batchId,
-                  lit(1)))).head()
-              val (nFresh, nAdmitted) = (fcnt.getLong(0), fcnt.getLong(1))
-              val nWinners = winObs.get("n").asInstanceOf[Long]
-              // `committed` caches the BARE table scan; release it BEFORE
-              // the upsert — Spark's cache manager substitutes a cached
-              // plan fragment by equality, so a later read of the same
-              // path would silently serve the PRE-upsert image
-              committed.foreach(_.unpersist())
-              // a SMALL admit batch stages through one task, so each
-              // touched bucket lands exactly one delta file — fewer
-              // footers for every later corpus read; production-size
-              // batches keep their write parallelism
-              if (nFresh > 0)
-                writeState(survivorsDir,
-                  if (nFresh < 100000) fresh.coalesce(1) else fresh,
-                  Seq("vec_id"),
-                  pureInsert = nFresh == nAdmitted && survCanAppend)
-
-              import s.implicits._
-              // keyed by batch_id, only ever written by its own batch:
-              // the delta append restates on replay by tag
-              UpsertWriter.append(s, logDir,
-                Seq((batchId, nIn, nIn - nWinners, nWinners - nAdmitted,
-                  nAdmitted))
-                  .toDF("batch_id", "n_in", "n_batch_dupes",
-                    "n_corpus_dupes", "n_admitted"),
-                keys = Seq("batch_id"), batchTag = s"b$batchId")
-            } finally fresh.unpersist()
-          } finally winners.unpersist()
-        } finally committed.foreach(_.unpersist())
-      } finally sigged.unpersist()
-    } finally arrivals.unpersist()
-    ()
+  /** The semantic signal over a batch's `docs` (keyed by `key`, carrying
+    * [[DedupOps.embeddingSigged]]'s `v`, `norm` and `sig`), under the
+    * occupancy mask for `corpusSize`. The admit definition is the SAME
+    * within the batch and against the corpus, or a near-dup pair would
+    * admit together when co-arriving and dedup when split across
+    * batches. Shared with [[MultiSignalIngest]]. */
+  private[streaming] def semantic(
+      docs: DataFrame, key: String, corpusSize: Long,
+      thresh: Double): Admission.Signal = {
+    val mask = lit(DedupOps.cellMaskFor(corpusSize))
+    def probes = explode(
+      DedupOps.cellProbes(col("sig").bitwiseAND(mask))).as("probe")
+    // the ordered side probes its own cell plus every single-bit flip,
+    // so a pair at Hamming ≤ 1 matches on exactly ONE probe — no
+    // distinct needed, no pair scored twice
+    val a = docs.select(col(key).as("va_id"), probes,
+      col("v").as("va"), col("norm").as("na"))
+    val b = docs.select(col(key).as("vb_id"),
+      col("sig").bitwiseAND(mask).as("cb"), col("v").as("vb"),
+      col("norm").as("nb"))
+    // stored rows re-mask their full signatures at read time
+    def drops(winners: DataFrame, prior: DataFrame): Seq[DataFrame] = {
+      val corpusCells = DedupOps.withVNorm(
+          prior.select(col(key).as("vb_id"), col("embedding"), col("sig")))
+        .select(col("vb_id"), col("v").as("vb"), col("norm").as("nb"),
+          col("sig").bitwiseAND(mask).as("cb"))
+      Seq(winners.select(col(key), col("v"), col("norm"), probes)
+        .join(corpusCells,
+          col("probe") === col("cb") && col(key) =!= col("vb_id"))
+        .filter(DedupOps.quantCos(
+          col("v"), col("norm"), col("vb"), col("nb")) >= thresh)
+        .select(col(key)))
+    }
+    Admission.Signal(
+      pairs = a
+        .join(b, col("probe") === col("cb") && col("va_id") < col("vb_id"))
+        .filter(DedupOps.quantCos(
+          col("va"), col("na"), col("vb"), col("nb")) >= thresh)
+        .select(col("va_id").as("src"), col("vb_id").as("dst")),
+      drops = drops,
+      scratch = Seq("v", "norm"))
   }
 
   /** Start the worker draining parquet embedding files from `inputDir`
@@ -396,22 +128,11 @@ object EmbedIngest {
       checkpointDir: String,
       filesPerTrigger: Int = 1,
       thresh: Double = 0.4,
-      stateBuckets: Option[Int] = None): StreamingQuery = {
-
-    val schema = spark.read.parquet(inputDir).schema
-
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      stateBuckets: Option[Int] = None): StreamingQuery =
+    Admission.start(spark, inputDir, checkpointDir, filesPerTrigger) {
+      (batch, batchId) =>
         processBatch(batch, batchId, warehouseDir, thresh, stateBuckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** Serving-side near-duplicate lookup against the stored corpus: for
     * each query row (`query_id`, `embedding`) return every admitted
@@ -435,14 +156,9 @@ object EmbedIngest {
       multiprobe: Boolean = true): DataFrame = {
     val surv = survivors(spark, warehouseDir)
     // corpus size from the admission LOG (one row per batch) instead
-    // of a full survivors count: sum(n_admitted) is the number of
-    // distinct admitted keys (first admissions only, rows never
-    // deleted), attempt-invariant under replay; a log lagging one
-    // crashed batch only NARROWS the mask — never a missed near-dup
+    // of a full survivors count
     val mask = DedupOps.cellMaskFor(
-      ingestLog(spark, warehouseDir)
-        .agg(coalesce(sum(col("n_admitted")), lit(0L)))
-        .head().getLong(0))
+      Admission.corpusSize(ingestLog(spark, warehouseDir)))
     val corpus = DedupOps.withVNorm(
         surv.select(col("vec_id"), col("embedding"), col("sig")))
       .select(col("vec_id"), col("v").as("vb"), col("norm").as("nb"),
@@ -465,16 +181,9 @@ object EmbedIngest {
       .filter(col("cos_sim") >= thresh)
   }
 
-  private def tableOrEmpty(
-      spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(dir)
-
   /** TAKEDOWN: remove admitted vectors matching `predicate` from the
-    * corpus — a searched row-grain [[UpsertWriter.deleteWhere]] under
-    * the maintenance lease ([[MultiSignalIngest.takedown]]'s contract:
+    * corpus — a searched row-grain [[Admission.deleteWhere]] under the
+    * maintenance lease ([[MultiSignalIngest.takedown]]'s contract:
     * the admission log is a journal and stays, so the occupancy mask
     * keeps its monotone capacity sizing; folded tags keep replays
     * no-ops; a later duplicate of a removed vector is ADMITTED).
@@ -482,11 +191,8 @@ object EmbedIngest {
   def takedown(
       spark: SparkSession,
       warehouseDir: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    val dir = s"$warehouseDir/embed_survivors"
-    if (!Files.exists(Paths.get(dir, "_SUCCESS"))) 0L
-    else UpsertWriter.deleteWhere(spark, dir, predicate)
-  }
+      predicate: org.apache.spark.sql.Column): Long =
+    Admission.deleteWhere(spark, s"$warehouseDir/embed_survivors", predicate)
 
   /** Serving view: every admitted (semantically-unique) vector with its
     * full-width signature. `batch_id` is the LAST batch that wrote the
@@ -495,19 +201,15 @@ object EmbedIngest {
     * backfilled to `batch_id` for pre-upgrade tables).
     * Empty — not an error — before the first admitting batch. */
   def survivors(spark: SparkSession, warehouseDir: String): DataFrame =
-    withFirstAdmitted(
-      tableOrEmpty(spark, s"$warehouseDir/embed_survivors", StructType(Seq(
+    Admission.stateView(spark, s"$warehouseDir/embed_survivors",
+      StructType(Seq(
         StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType)),
         StructField("sig", LongType), StructField("batch_id", LongType),
-        StructField("first_admitted_batch", LongType)))))
-      .drop(UpsertWriter.BucketCol) // derived layout, not data (no-op unbucketed)
+        StructField("first_admitted_batch", LongType))))
 
   /** Serving view: the per-batch admission log. */
   def ingestLog(spark: SparkSession, warehouseDir: String): DataFrame =
-    tableOrEmpty(spark, s"$warehouseDir/embed_log", StructType(Seq(
-      StructField("batch_id", LongType), StructField("n_in", LongType),
-      StructField("n_batch_dupes", LongType),
-      StructField("n_corpus_dupes", LongType),
-      StructField("n_admitted", LongType))))
+    Admission.tableOrEmpty(spark, s"$warehouseDir/embed_log",
+      Admission.LogSchema)
 }

@@ -146,24 +146,12 @@ object WatermarkedIngest {
       .start()
   }
 
-  /** Read a worker table, or an EMPTY frame of the given schema when no
-    * batch has created it yet — a healthy stream with zero late rows is
-    * the common case a monitoring caller checks, and it must see an
-    * empty error channel, not a path-does-not-exist failure. */
-  private def tableOrEmpty(
-      spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(dir)
-
   import org.apache.spark.sql.types._
 
   /** Serving view: fold the per-batch day partials to daily totals —
     * exact, because the receita partials are decimal sums. */
   def dailyTotals(spark: SparkSession, warehouseDir: String): DataFrame =
-    tableOrEmpty(spark, s"$warehouseDir/daily_partials", StructType(Seq(
+    Admission.tableOrEmpty(spark, s"$warehouseDir/daily_partials", StructType(Seq(
       StructField("event_day", DateType), StructField("n_orders", LongType),
       StructField("receita", DoubleType), StructField("batch_id", LongType))))
       .groupBy(col("event_day"))
@@ -172,7 +160,7 @@ object WatermarkedIngest {
 
   /** Serving view: the T6 error channel of late and undated arrivals. */
   def lateErrors(spark: SparkSession, warehouseDir: String): DataFrame =
-    tableOrEmpty(spark, s"$warehouseDir/late_errors", StructType(Seq(
+    Admission.tableOrEmpty(spark, s"$warehouseDir/late_errors", StructType(Seq(
       StructField("order_id", LongType), StructField("event_day", DateType),
       StructField("batch_id", LongType), StructField("status", StringType),
       StructField("mensagem_erro", StringType))))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.obs.Obs
-import graft.streaming.{MultiSignalIngest, NearDupIngest}
+import graft.streaming.{EmbedIngest, MultiSignalIngest, NearDupIngest}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -94,8 +94,13 @@ class ObsSpec extends AnyFunSuite {
         MultiSignalIngest.processBatch(docs(ids), 0L,
           Files.createTempDirectory("graft-obs-ms").resolve("wh").toString)
       }
+      Obs.within(spark, "em") {
+        EmbedIngest.processBatch(
+          docs(ids).withColumnRenamed("doc_id", "vec_id").drop("text"), 0L,
+          Files.createTempDirectory("graft-obs-em").resolve("wh").toString)
+      }
       drained(m)
-      for (q <- Seq("nd", "ms")) {
+      for (q <- Seq("nd", "ms", "em")) {
         assert(m.under(s"$q/admit-upserts").jobs > 0,
           s"$q: the admit writes' jobs lost the caller's phase")
         for (p <- Seq("in-count", "pairs-mat", "cluster-fixpt",
@@ -103,7 +108,7 @@ class ObsSpec extends AnyFunSuite {
           assert(m.under(s"$q/$p").jobs > 0, s"$q/$p ran no tagged job")
       }
       val stray = m.totals.collect {
-        case (p, t) if t.jobs > 0 && !Seq("nd", "ms", "barrier")
+        case (p, t) if t.jobs > 0 && !Seq("nd", "ms", "em", "barrier")
           .exists(q => p == q || p.startsWith(q + "/")) => p
       }
       assert(stray.isEmpty, s"jobs booked outside the callers' scopes: $stray")

@@ -137,6 +137,43 @@ class PreUpgradeAppendSpec extends AnyFunSuite {
       s"post-adoption batch must append, saw ${deltaTags(survDir)}")
   }
 
+  test("neardup plain layout: the wedge batch merges once, then all-new batches append") {
+    val base = Files.createTempDirectory("graft-preupgrade-ndp")
+    val wh = base.resolve("wh").toString
+    def doc(i: Long) = (i, s"unique document number $i with entirely distinct words w${i}a w${i}b w${i}c w${i}d w${i}e w${i}f")
+    NearDupIngest.processBatch(
+      (0L to 3L).map(doc).toDF("doc_id", "text"), 0L, wh)
+    val survDir = s"$wh/neardup_survivors"
+    stripFab(survDir)
+    spark.catalog.clearCache()
+
+    // all-new keys over the pre-upgrade table: the schema gate routes
+    // this batch through the merge, which folds no delta in
+    NearDupIngest.processBatch(
+      (10L to 13L).map(doc).toDF("doc_id", "text"), 1L, wh)
+    assert(UpsertWriter.taggedDeltas(survDir).isEmpty,
+      s"the adoption batch must merge, saw ${UpsertWriter.taggedDeltas(survDir)}")
+    val fabs = NearDupIngest.survivors(spark, wh)
+      .select($"doc_id", $"first_admitted_batch")
+      .as[(Long, Long)].collect().toMap
+    assert(fabs == ((0L to 3L).map(_ -> 0L) ++ (10L to 13L).map(_ -> 1L)).toMap,
+      s"$fabs")
+
+    // old corpus still vetoes: doc 2's text under a new id drops
+    NearDupIngest.processBatch(
+      Seq((20L, doc(2L)._2), doc(30L)).toDF("doc_id", "text"), 2L, wh)
+    val ids = NearDupIngest.survivors(spark, wh)
+      .select($"doc_id").as[Long].collect().toSet
+    assert(!ids.contains(20L) && ids.contains(30L), s"$ids")
+
+    // the next all-new batch appends on the plain layout
+    NearDupIngest.processBatch(
+      (40L to 42L).map(doc).toDF("doc_id", "text"), 3L, wh)
+    assert(UpsertWriter.taggedDeltas(survDir).nonEmpty,
+      "a pure-insert batch on the adopted plain table must append delta files")
+    assert(NearDupIngest.survivors(spark, wh).count() == 12L)
+  }
+
   test("ann bucketed: pre-upgrade postings index adopts the column through one merge, then appends") {
     val base = Files.createTempDirectory("graft-preupgrade-ann")
     val wh = base.resolve("wh").toString
