@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** Derived fixtures materialized once per scale factor under
   * `.fixtures/<sf-basename>/` in the repo working directory.
@@ -90,6 +90,21 @@ object Fixtures {
       }
     }
     spark.read.parquet(dir.toString)
+  }
+
+  /** Scratch dirs whose contents a lazily read query result still
+    * needs after the call that made them returns: ONE shutdown hook
+    * deletes them all when the JVM exits. */
+  private val atExit = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  private lazy val deleteAtExit: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => atExit.forEach(deleteRecursively(_))))
+
+  /** A fresh `<prefix>*` temp dir, deleted at JVM exit. */
+  private[graft] def tempDirDeletedAtExit(prefix: String): Path = {
+    deleteAtExit
+    val dir = Files.createTempDirectory(prefix)
+    atExit.add(dir)
+    dir
   }
 
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {

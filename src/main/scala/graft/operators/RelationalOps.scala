@@ -1526,8 +1526,9 @@ object RelationalOps extends OpModule {
     // read — it is layout, not data. ──
     "k1b_upsert_bucketed" -> Q(
       (s, d) => {
-        val wh = java.nio.file.Files
-          .createTempDirectory("graft-k1b").resolve("t").toString
+        // the result reads the table lazily: deleted at JVM exit
+        val wh = graft.Fixtures.tempDirDeletedAtExit("graft-k1b")
+          .resolve("t").toString
         val src = Tables.orders(s, d).select(
           $("o_custkey"), $("o_orderkey"), $("o_orderdate"), $("o_totalprice"),
           (unix_date(to_date($("o_orderdate"))).cast(LongType) * 10000000000000L +

@@ -33,20 +33,11 @@ import java.nio.file.{Files, Path}
   */
 object StreamingIngestOps extends OpModule {
 
-  /** Every gate's scratch base dir. A gate's result reads its
-    * warehouse lazily, so the dirs outlive the query call; ONE shutdown
-    * hook deletes them all when the JVM exits. */
-  private val gateDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
-  private lazy val deleteAtExit: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => gateDirs.forEach(Fixtures.deleteRecursively(_))))
-
-  /** A fresh `graft-gate-<tag>*` temp dir, deleted at JVM exit. */
-  private def gateDir(tag: String): Path = {
-    deleteAtExit
-    val base = Files.createTempDirectory(s"graft-gate-$tag")
-    gateDirs.add(base)
-    base
-  }
+  /** A fresh `graft-gate-<tag>*` temp dir. A gate's result reads its
+    * warehouse lazily, so the dir outlives the query call; it is
+    * deleted at JVM exit. */
+  private def gateDir(tag: String): Path =
+    Fixtures.tempDirDeletedAtExit(s"graft-gate-$tag")
 
   /** Fresh (flat-input, warehouse, checkpoint) dirs for one drain. */
   private def dirs(tag: String): (Path, String, String, String) = {

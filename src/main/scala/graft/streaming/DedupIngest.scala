@@ -1,13 +1,13 @@
 package graft.streaming
 
 import graft.Exprs
+import graft.obs.Obs
 import graft.sinks.UpsertWriter
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import java.nio.file.{Files, Paths}
 
 /** Continuous exact-dedup ingest — the K2 insert-if-absent contract
   * (SURVEY §2.2; tarefa_processar_fila.php's "skip if key exists"
@@ -44,10 +44,18 @@ import java.nio.file.{Files, Paths}
   * groups) plus one keyed equi-join of the batch against the
   * survivors table — batch-sized shuffle on one side, hash-pruned
   * scan of the other; nothing grows with stream lifetime except the
-  * table itself. At 100 TB the survivors table is bucketed or
-  * partitioned by hash prefix upstream of the join; the anti-join
-  * needs only the `content_hash` column either way (column-pruned
-  * scan).
+  * table itself. At micro-batch sizes the cost is fixed per-job
+  * overhead, so a batch runs three queries: the fresh count (the
+  * arrivals and winners counts ride it as observations, and the
+  * corpus read declares its schema rather than inferring it), the
+  * survivors append and the log append — 7 Spark jobs, counting the
+  * fresh count's adaptive stages. A batch under 100k fresh rows lands
+  * ONE survivors delta file (one per touched bucket when bucketed), so
+  * the table every later anti-join scans grows by one footer per
+  * batch, not one per shuffle partition. At 100 TB the survivors
+  * table is bucketed or partitioned by hash prefix upstream of the
+  * join; the anti-join needs only the `content_hash` column either
+  * way (column-pruned scan).
   */
 object DedupIngest {
 
@@ -66,116 +74,100 @@ object DedupIngest {
 
     val survivorsDir = s"$warehouseDir/dedup_survivors"
     val logDir = s"$warehouseDir/dedup_log"
-    val schema = spark.read.parquet(inputDir).schema
 
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Admission.start(spark, inputDir, checkpointDir, filesPerTrigger) {
+      (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         // NULL text coalesces to '' BEFORE hashing: phash(NULL) is NULL,
         // and a NULL hash never matches itself in the anti-join — a
         // null-text doc would be "fresh" every batch, each replay
         // replacing the prior survivor (first-arrival-wins broken, log
         // double-counting). Collapsing NULL and empty text onto one
-        // content class admits exactly one empty survivor instead.
+        // content class admits exactly one empty survivor instead. The
+        // arrivals count rides the fresh count as an observation, like
+        // the winners count below, so the arrivals are read once, by
+        // the window's shuffle stage.
+        val inObs = Observation()
         val hashed = batch
           .withColumn("content_hash", Exprs.phash(coalesce(col("text"), lit(""))))
+          .observe(inObs, count(lit(1)).as("n"))
+
+        // within-batch winner per hash: lowest doc_id — a total
+        // order, so a replayed batch picks the same winner
+        val winners = hashed
+          .withColumn("__rn", row_number().over(
+            Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))))
+          .filter(col("__rn") === 1).drop("__rn")
+
+        // cross-stream check rides the TABLE, not operator state:
+        // hashes some PRIOR batch already admitted drop here. The
+        // `batch_id < batchId` filter excludes rows a crashed attempt
+        // at THIS batch wrote (an admitted hash keeps its admitting
+        // batch_id forever — later copies never reach the upsert, and
+        // later batches run only after this one commits), so a replay
+        // recomputes the IDENTICAL fresh set instead of seeing its own
+        // rows as "already admitted" — which makes nFresh the
+        // attempt-invariant admissions count and the re-upsert a
+        // keyed no-op restatement. The declared schema (the two columns
+        // the join reads) spares a schema-inference job over the
+        // growing table; a bucketed table's `__bucket` is still
+        // discovered from its paths.
+        val seen =
+          if (!Admission.committed(survivorsDir))
+            winners.limit(0).select(col("content_hash"))
+          else s.read.schema(SeenSchema).parquet(survivorsDir)
+            .filter(col("batch_id") < batchId)
+            .select(col("content_hash"))
+        // the winners count folds into the fresh count's job via the
+        // Observation API (every winner row flows through the anti
+        // join's left side exactly once) instead of scheduling its
+        // own job — at micro-batch sizes per-job overhead dominates
+        val winObs = Observation()
+        val fresh = winners
+          .observe(winObs, count(lit(1)).as("n"))
+          .join(seen, Seq("content_hash"), "left_anti")
+          .withColumn("batch_id", lit(batchId))
           .persist()
         try {
-          val nIn = hashed.count()
+          val nFresh = Obs.phase(s, "corpus-check")(fresh.count())
+          val nIn = inObs.get("n").asInstanceOf[Long]
+          val nBatchDupes = nIn - winObs.get("n").asInstanceOf[Long]
 
-          // within-batch winner per hash: lowest doc_id — a total
-          // order, so a replayed batch picks the same winner
-          val winners = hashed
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))))
-            .filter(col("__rn") === 1).drop("__rn")
+          // The fresh set is PURE-INSERT by construction — the
+          // anti-join just proved every content_hash absent, and an
+          // admitted hash is never re-admitted — so both layouts
+          // append: O(batch) delta files, replay-idempotent by
+          // deterministic file names, no state read or rewritten on
+          // ingest. Under 100k rows the write stages through one task:
+          // one delta file per batch (per touched bucket when bucketed)
+          // instead of one per shuffle partition of the cached set.
+          if (nFresh > 0) Obs.phase(s, "admit-upserts")(Admission.writeState(
+            s, survivorsDir, fresh, nFresh, Seq("content_hash"),
+            pureInsert = true, batchId, stateBuckets))
 
-          // cross-stream check rides the TABLE, not operator state:
-          // hashes some PRIOR batch already admitted drop here. The
-          // `batch_id < batchId` filter excludes rows a crashed attempt
-          // at THIS batch wrote (an admitted hash keeps its admitting
-          // batch_id forever — later copies never reach the upsert, and
-          // later batches run only after this one commits), so a replay
-          // recomputes the IDENTICAL fresh set instead of seeing its own
-          // rows as "already admitted" — which makes nFresh the
-          // attempt-invariant admissions count and the re-upsert a
-          // keyed no-op restatement.
-          val seen =
-            if (!Files.exists(Paths.get(survivorsDir, "_SUCCESS")))
-              winners.limit(0).select(col("content_hash"))
-            else s.read.parquet(survivorsDir)
-              .filter(col("batch_id") < batchId)
-              .select(col("content_hash"))
-          // the winners count folds into the fresh count's job via the
-          // Observation API (every winner row flows through the anti
-          // join's left side exactly once) instead of scheduling its
-          // own job — at micro-batch sizes per-job overhead dominates
-          val winObs = org.apache.spark.sql.Observation()
-          val fresh = winners
-            .observe(winObs, count(lit(1)).as("n"))
-            .join(seen, Seq("content_hash"), "left_anti")
-            .withColumn("batch_id", lit(batchId))
-            .persist()
-          try {
-            val nFresh = fresh.count()
-            val nBatchDupes = nIn - winObs.get("n").asInstanceOf[Long]
+          // admissions = nFresh, attempt-invariant because `seen`
+          // excludes this batch's own crashed-attempt rows (above) —
+          // the replay's anti-join recomputes the identical fresh
+          // set. This replaces a second O(corpus) table scan per
+          // batch (the anti-join's is structural; the count's wasn't).
+          val nAdmitted = nFresh
 
-            // bucketed when stateBuckets is set (the 100 TB form — the
-            // family's shared contract, [[MultiSignalIngest]] object
-            // doc). This worker's fresh set is PURE-INSERT by
-            // construction — the anti-join just proved every
-            // content_hash absent, and an admitted hash is never
-            // re-admitted — so the bucketed form is always
-            // [[UpsertWriter.appendBucketed]]: O(batch) delta files per
-            // batch, replay-idempotent by deterministic file names, no
-            // bucket ever read or rewritten on ingest.
-            // config seeds the first write; the pin rules after that
-            // ([[UpsertWriter.effectiveBuckets]])
-            if (nFresh > 0) stateBuckets
-                .map(UpsertWriter.effectiveBuckets(survivorsDir, _)) match {
-              case Some(b) => UpsertWriter.appendBucketed(
-                s, survivorsDir, fresh,
-                keys = Seq("content_hash"), batchTag = s"b$batchId",
-                numBuckets = b)
-              // the plain layout appends too — the fresh set is pure-
-              // insert by construction, so the whole-table read +
-              // window + staged rewrite bought nothing
-              case None => UpsertWriter.append(s, survivorsDir, fresh,
-                keys = Seq("content_hash"), batchTag = s"b$batchId")
-            }
-
-            // admissions = nFresh, attempt-invariant because `seen`
-            // excludes this batch's own crashed-attempt rows (above) —
-            // the replay's anti-join recomputes the identical fresh
-            // set. This replaces a second O(corpus) table scan per
-            // batch (the anti-join's is structural; the count's wasn't).
-            val nAdmitted = nFresh
-
-            // the log restates on replay (keyed by batch_id) — written
-            // LAST, so a crash between the writes replays the batch into
-            // the identical split
-            import s.implicits._
-            // keyed by batch_id and only ever written by its own batch:
-            // the delta append restates on replay by tag, without the
-            // read+window+swap a keyed merge pays per batch
-            UpsertWriter.append(s, logDir,
-              Seq((batchId, nIn, nBatchDupes, nIn - nBatchDupes - nAdmitted,
-                nAdmitted))
-                .toDF("batch_id", "n_in", "n_batch_dupes", "n_seen_before",
-                  "n_admitted"),
-              keys = Seq("batch_id"), batchTag = s"b$batchId")
-          } finally fresh.unpersist()
-        } finally hashed.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+          // the log restates on replay (keyed by batch_id) — written
+          // LAST, so a crash between the writes replays the batch into
+          // the identical split
+          import s.implicits._
+          Obs.phase(s, "log-upsert")(Admission.appendLog(s, logDir, batchId,
+            Seq((batchId, nIn, nBatchDupes, nIn - nBatchDupes - nAdmitted,
+              nAdmitted))
+              .toDF("batch_id", "n_in", "n_batch_dupes", "n_seen_before",
+                "n_admitted")))
+        } finally fresh.unpersist()
+    }
   }
+
+  /** The survivors columns the corpus check reads. */
+  private val SeenSchema = StructType(Seq(
+    StructField("content_hash", LongType), StructField("batch_id", LongType)))
 
   /** TAKEDOWN: remove admitted documents matching `predicate` (over
     * the survivors schema) from the corpus — a searched row-grain
@@ -187,11 +179,8 @@ object DedupIngest {
   def takedown(
       spark: SparkSession,
       warehouseDir: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    val dir = s"$warehouseDir/dedup_survivors"
-    if (!Files.exists(Paths.get(dir, "_SUCCESS"))) 0L
-    else UpsertWriter.deleteWhere(spark, dir, predicate)
-  }
+      predicate: org.apache.spark.sql.Column): Long =
+    Admission.deleteWhere(spark, s"$warehouseDir/dedup_survivors", predicate)
 
   /** Serving view: every admitted (first-arrival) document. Empty — not
     * an error — before the first committed batch, and a crashed partial

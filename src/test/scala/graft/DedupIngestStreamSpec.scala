@@ -9,7 +9,7 @@ import java.nio.file.Files
   * KILLED mid-drain and resumed — every content hash admitted exactly
   * once, first arrival wins across batches, lowest doc_id wins within
   * a batch, and the admission log restates instead of duplicating. */
-class DedupIngestStreamSpec extends AnyFunSuite {
+class DedupIngestStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -105,5 +105,44 @@ class DedupIngestStreamSpec extends AnyFunSuite {
     val q3 = Pipeline.runDedupIngest(spark, flat, wh, ckpt)
     q3.awaitTermination(120000)
     assert(admitted() == 3L, "a drained checkpoint re-run must admit nothing")
+  }
+
+  test("a small multi-file batch lands one survivors delta file and logs exact counts") {
+    val base = tempDir("graft-dedup-onefile")
+    val flat = base.resolve("docs").toString
+    val wh = base.resolve("wh").toString
+    new java.io.File(flat).mkdirs()
+    // one batch of three files: doc 3 repeats doc 1's text (a
+    // within-batch duplicate), docs 4 and 5 are NULL and '' text (one
+    // content class), and enough distinct texts to fill every shuffle
+    // partition
+    val rows: Seq[(Long, String)] =
+      Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"), (4L, null), (5L, "")) ++
+        (10L until 22L).map(i => (i, s"text $i"))
+    addDocFile(flat, base, "f0", rows.take(6))
+    addDocFile(flat, base, "f1", rows.slice(6, 12))
+    addDocFile(flat, base, "f2", rows.drop(12))
+    val q = DedupIngest.start(spark, flat, wh, base.resolve("ckpt").toString,
+      filesPerTrigger = 3)
+    assert(q.awaitTermination(120000), "drain did not finish")
+
+    val survivorsDir = new java.io.File(s"$wh/dedup_survivors")
+    val deltas = survivorsDir.list().filter(n =>
+      n.startsWith("delta-b0-") && n.endsWith(".parquet"))
+    assert(deltas.length == 1,
+      s"a ${rows.size}-row batch landed ${deltas.length} survivors files: ${deltas.toSeq}")
+    assert(survivorsDir.list().count(n => n.startsWith("delta-") &&
+      n.endsWith(".parquet")) == 1, "the drain ran more than one batch")
+
+    val got = DedupIngest.survivors(spark, wh).select(col("doc_id"))
+      .as[Long].collect().toSet
+    assert(got == Set(1L, 2L, 4L) ++ (10L until 22L),
+      s"wrong winners: ${got.toSeq.sorted}")
+    val log = DedupIngest.ingestLog(spark, wh)
+      .select(col("batch_id"), col("n_in"), col("n_batch_dupes"),
+        col("n_seen_before"), col("n_admitted"))
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq
+    assert(log == Seq((0L, rows.size.toLong, 2L, 0L, got.size.toLong)),
+      s"log row diverged from the rows landed: $log")
   }
 }

@@ -11,11 +11,11 @@ import java.nio.file.{Files, Paths}
   * winner asserted per contested round. All synchronization is
   * poll-for-file with hard deadlines ([[LeaseRaceProtocol.await]]) —
   * no sleep ever stands in for the other process's progress. */
-class LeaseForkRaceSpec extends AnyFunSuite {
+class LeaseForkRaceSpec extends AnyFunSuite with TempDirs {
   import LeaseRaceProtocol._
 
   test("forked-JVM acquire/steal/renew races: exactly one winner per contested round") {
-    val dir = Files.createTempDirectory("graft-lease-fork").toString
+    val dir = tempDir("graft-lease-fork").toString
     val t = table(dir)
     Files.createDirectories(Paths.get(t)) // lease files are siblings
 
@@ -140,7 +140,7 @@ class LeaseForkRaceSpec extends AnyFunSuite {
     // very case measured 10/3000 admissions against that design and
     // forced the replacement): thousands of foreign gate calls, ZERO
     // admissions, while the parent's renewals all succeed.
-    val dir = Files.createTempDirectory("graft-lease-gate").toString
+    val dir = tempDir("graft-lease-gate").toString
     val t = table(dir)
     Files.createDirectories(Paths.get(t))
     TableLease.acquire(t, TableLease.Maintenance, "parent")
@@ -208,7 +208,7 @@ class LeaseForkRaceSpec extends AnyFunSuite {
     // the child hammers the writer gate cross-process. ZERO
     // admissions in 3000 foreign reads, deterministically: the gate
     // is one lease-file read and the file is never absent.
-    val dir = Files.createTempDirectory("graft-lease-gate-nb").toString
+    val dir = tempDir("graft-lease-gate-nb").toString
     val t = table(dir)
     Files.createDirectories(Paths.get(t))
     TableLease.acquire(t, TableLease.Maintenance, "parent")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.obs.Obs
-import graft.streaming.{EmbedIngest, MultiSignalIngest, NearDupIngest}
+import graft.streaming.{DedupIngest, EmbedIngest, MultiSignalIngest, NearDupIngest}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +13,7 @@ import scala.concurrent.duration._
   * (nested, across the workers' admit-write Futures, across a real
   * streaming drain), and with no listener installed a phase is only a
   * local property. */
-class ObsSpec extends AnyFunSuite {
+class ObsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -135,6 +135,29 @@ class ObsSpec extends AnyFunSuite {
         assert(m.under(s"drain/$p").jobs > 0, s"drain/$p ran no tagged job")
       assert(m.totals.keys.forall(p => p.isEmpty || p == "barrier" ||
         p == "drain" || p.startsWith("drain/")),
+        s"a batch phase escaped the drain's scope: ${m.totals.keys}")
+    }
+  }
+
+  test("a DedupIngest.start drain books its batch phases under the scope open at start") {
+    val base = tempDir("graft-obs-dedup")
+    val flat = base.resolve("in").toString
+    new java.io.File(flat).mkdirs()
+    StreamFiles.landOne(base, flat, "f0",
+      docs((0L until 20L).filter(_ % 2 == 0)).drop("embedding"))
+    StreamFiles.landOne(base, flat, "f1",
+      docs((0L until 20L).filter(_ % 2 == 1)).drop("embedding"))
+    withMetrics { m =>
+      val q = Obs.within(spark, "dedup") {
+        DedupIngest.start(spark, flat, base.resolve("wh").toString,
+          base.resolve("ckpt").toString)
+      }
+      assert(q.awaitTermination(120000), "drain did not finish")
+      drained(m)
+      for (p <- Seq("corpus-check", "admit-upserts", "log-upsert"))
+        assert(m.under(s"dedup/$p").jobs > 0, s"dedup/$p ran no tagged job")
+      assert(m.totals.keys.forall(p => p.isEmpty || p == "barrier" ||
+        p == "dedup" || p.startsWith("dedup/")),
         s"a batch phase escaped the drain's scope: ${m.totals.keys}")
     }
   }

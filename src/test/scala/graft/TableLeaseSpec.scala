@@ -10,12 +10,12 @@ import java.nio.file.{Files, Paths}
   * open, a crashed lease holder recovers after the TTL, and — the one
   * hazard no lease can see — a replayed append whose delta files a
   * compaction already folded is a no-op, never a duplicate. */
-class TableLeaseSpec extends AnyFunSuite {
+class TableLeaseSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-lease").resolve("t").toString
+    tempDir("graft-lease").resolve("t").toString
 
   private def mkTable(path: String): Unit =
     UpsertWriter.appendBucketed(spark, path,

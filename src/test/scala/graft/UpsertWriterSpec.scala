@@ -10,12 +10,12 @@ import java.nio.file.Files
   * merges that leave untouched partitions' files alone, hash-bucketed
   * merges + their crash windows (exhaustive fault injection), and
   * truncate. */
-class UpsertWriterSpec extends AnyFunSuite {
+class UpsertWriterSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-upsert").resolve("t").toString
+    tempDir("graft-upsert").resolve("t").toString
 
   test("K1: keyed upsert keeps the latest version, updates win ties") {
     val path = tmp()
@@ -1353,7 +1353,7 @@ class UpsertWriterSpec extends AnyFunSuite {
   }
 
   test("replayHorizon reads the checkpoint commit log: max committed + 1, None when empty") {
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     assert(UpsertWriter.replayHorizon(ckpt).isEmpty,
       "no commits dir: nothing is provably dead")
     val commits = java.nio.file.Paths.get(ckpt, "commits")
