@@ -18,7 +18,9 @@ object PlanDump {
     "j1_join_map_inner" ->
       "Small dim rides a BroadcastHashJoin; the fact side never shuffles for the join.",
     "ep1_consolidar_relatorio" ->
-      "Two fact shuffles + broadcast dims + window over the small aggregate; no global sort.",
+      ("One `l_partkey` repartition per pruned fact scan (sales, traffic); the aggregates, " +
+       "the shuffle-hash sales-traffic join and the window reuse it, so no " +
+       "ENSURE_REQUIREMENTS exchange; `part` is broadcast; no global sort."),
     "w6_rank_topk" ->
       ("Two-phase top-k via WindowGroupLimit: the Partial phase prunes to k rows per " +
        "group per input partition map-side, so the one exchange never carries the " +

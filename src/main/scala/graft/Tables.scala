@@ -1,19 +1,72 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Parquet star-schema loaders for the driver fixtures (TESTDATA.md).
   *
-  * Every query reads `"$sfDir/<table>.parquet"`. The events table carries
+  * Every query reads `"$sfDir/<table>.parquet"`. The read schema is the
+  * table file's own, taken from one footer on the driver
+  * ([[footerSchema]]) — the footer Spark's schema inference samples, so
+  * the columns and types are exactly the inferred ones, but no
+  * inference job runs and nothing is coerced. The events table carries
   * nanosecond-precision timestamps, which Spark's vectorized parquet reader
   * rejects by default — [[Sessions.tune]] flips the legacy nanos-as-long
   * switch so we can read it and normalize explicitly (see [[Tables.events]]).
   */
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * without a Spark job. Inference without `mergeSchema` samples one
+    * footer: the first data file in sorted path order under `path`
+    * (hidden `_`/`.` names skipped, partition dirs `k=v` kept, symlinks
+    * followed). This reads that footer and converts it with the
+    * session's own converter, so Spark's row-metadata schema,
+    * `nanosAsLong` and `inferTimestampNTZ` apply exactly as in
+    * inference, and every field reads nullable, as a file source's
+    * fields do. Partition columns are not in a footer: a partitioned
+    * layout's reader still discovers them from the paths. A missing
+    * path or one with no data file fails, as inference does. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
+    // getFileStatus follows a symlink; a listed symlink is resolved the same way
+    def leaves(st: FileStatus): Iterator[FileStatus] = {
+      val s = if (st.isSymlink) fs.getFileStatus(st.getPath) else st
+      if (!s.isDirectory) Iterator(s)
+      else fs.listStatus(s.getPath).iterator
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    }
+    val first = leaves(fs.getFileStatus(root)).minByOption(_.getPath.toString)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file under $path to read a schema from"))
+    val footer = new Footer(first.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    // a file source surfaces every field nullable, as the read does
+    def nullable(t: DataType): DataType = t match {
+      case st: StructType =>
+        StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+      case other => other
+    }
+    nullable(ParquetFileFormat.readSchemaFromFooter(
+      footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))).asInstanceOf[StructType]
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = load(s, d, "orders")

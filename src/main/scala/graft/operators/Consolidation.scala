@@ -25,19 +25,30 @@ import org.apache.spark.sql.types._
   *  - W4    zero-revenue parent → 100% to the "main" variation (:222-234);
   *          main here = lowest suppkey of the parent (ref: id == parent id)
   *
-  * Scale posture: sales/traffic/map aggregations are partial+final hash aggs
-  * over the same `l_partkey`-keyed shuffle; `part` is broadcast; the final
-  * window runs on the already-partkey-partitioned aggregate (tiny vs the
-  * fact), so the whole mart is ~2 shuffles of the fact table regardless of SF.
+  * Scale posture: every step is `l_partkey`-local, so the fact is
+  * hash-partitioned on `l_partkey` once and every later step reuses that
+  * partitioning (a `HashPartitioning(l_partkey)` satisfies each clustering
+  * on a key set containing `l_partkey`): the `(partkey, suppkey)` sales
+  * aggregate, both levels of the traffic `countDistinct`, the co-partitioned
+  * sales ⋈ traffic shuffle-hash join and the W1/W4 window add no exchange.
+  * The plan holds two pruned fact scans (the sales and traffic branches read
+  * different columns, and the traffic one only `'A'` rows), each feeding one
+  * `l_partkey` exchange; `part` is broadcast. Nothing aggregates map-side
+  * before that exchange: the fact's projected rows cross it once, and no
+  * aggregate output is shuffled again.
   */
 object Consolidation extends OpModule {
   import Exprs.{dsum, dsumSql}
 
   def relatorio(s: SparkSession, d: String): DataFrame = {
+    // the ONE fact exchange: both branches below read this partitioning
     val li = Tables.lineitem(s, d)
+      .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
+        "l_extendedprice", "l_tax", "l_discount", "l_returnflag")
+      .repartition(col("l_partkey"))
     val isSale = col("l_returnflag") =!= "A"
 
-    // ONE (partkey, suppkey)-keyed shuffle yields both the sales sums
+    // ONE (partkey, suppkey) aggregate yields both the sales sums
     // (conditional aggregates over non-'A' rows; all-null groups sum to
     // NULL exactly like the former missing-left-join-row) AND the
     // variation universe the reference's map dim provides — round 1
@@ -70,7 +81,9 @@ object Consolidation extends OpModule {
           .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_retailprice"))),
         col("id_anuncio") === col("p_partkey"),
         "inner")
-      .join(trafego, col("id_anuncio") === col("t_partkey"), "left")
+      // shuffle-hash, not broadcast: both sides are already partitioned
+      // on the partkey, so the join adds no exchange
+      .join(trafego.hint("shuffle_hash"), col("id_anuncio") === col("t_partkey"), "left")
       // A6 driving set: sold variations ∪ all variations of parents with traffic
       .filter(coalesce(col("has_sales"), lit(false)) || col("impressoes_p").isNotNull)
       .select(

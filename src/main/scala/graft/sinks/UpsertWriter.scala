@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -349,7 +350,12 @@ object UpsertWriter {
     val merged: DataFrame = if (!exists(path)) {
       dedup(seqd, keys, versionCol)
     } else {
-      val existing = spark.read.parquet(path)
+      // an unpartitioned table's schema is its first data file's footer,
+      // read on the driver (no inference job); partitioned and bucketed
+      // layouts keep Spark's inference, which adds the path columns
+      val existing =
+        if (partitionColsOf(path).nonEmpty) spark.read.parquet(path)
+        else spark.read.schema(Tables.footerSchema(spark, path)).parquet(path)
       // SCHEMA GROWTH disables partition pruning for this one merge: a
       // batch carrying a column the table lacks must rewrite EVERY
       // partition, because parquet has no table-level schema — a plain

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.obs.Obs
 import graft.operators.DedupOps
 import graft.sinks.{TableLease, UpsertWriter}
@@ -373,7 +374,7 @@ private[streaming] object Admission {
       spark: SparkSession, inputDir: String, checkpointDir: String,
       filesPerTrigger: Int)(body: (DataFrame, Long) => Unit): StreamingQuery =
     spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
+      .schema(Tables.footerSchema(spark, inputDir))
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(inputDir)
       .writeStream

@@ -4,7 +4,6 @@ import graft.operators.Consolidation
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Hand-computed goldens for the allocation semantics the reference makes
   * subtle (SURVEY §2.6 W1–W4, §5): the revenue-share proration, the
@@ -12,7 +11,7 @@ import java.nio.file.Files
   * main-variation fallback. A tiny fixture with known numbers is written
   * as parquet so `Consolidation.relatorio` runs its real path.
   */
-class ConsolidationSpec extends AnyFunSuite {
+class ConsolidationSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -22,7 +21,7 @@ class ConsolidationSpec extends AnyFunSuite {
     * and traffic metrics. Parent 2: traffic but ZERO revenue → W4
     * fallback to main (lowest suppkey). */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-consolidation").toString
+    val d = tempDir("graft-consolidation").toString
     Seq(
       // parent 1 sales: var 11 fat=300, var 12 fat=100 → shares .75/.25
       (101L, 1L, 11L, 3.0, 300.0, 0.10, 0.05, "N"),

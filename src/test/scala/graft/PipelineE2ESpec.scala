@@ -8,12 +8,12 @@ import java.nio.file.Files
   * warehouse must RESTATE the mart (idempotent upsert), not duplicate
   * it, and the stored state must equal the registered query's result —
   * the switch-from-the-reference acceptance test. */
-class PipelineE2ESpec extends AnyFunSuite {
+class PipelineE2ESpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("two daily runs restate the mart and key the alerts; state matches the query") {
-    val wh = Files.createTempDirectory("graft-pipeline").toString
+    val wh = tempDir("graft-pipeline").toString
     val sf = TestSpark.sf0001
 
     Pipeline.runDaily(spark, sf, wh, runVersion = 1L)
@@ -50,7 +50,7 @@ class PipelineE2ESpec extends AnyFunSuite {
     // noReplayers = true is that assertion; this drives the common
     // deployment shape long enough to cross compaction thresholds and
     // pins the sidecar ABSENT after every cycle.
-    val wh = Files.createTempDirectory("graft-pipeline-batchonly").toString
+    val wh = tempDir("graft-pipeline-batchonly").toString
     val sf = TestSpark.sf0001
     val mart = s"$wh/relatorio_diario"
     val sidecar = java.nio.file.Paths.get(mart + ".__folded-tags")
@@ -73,7 +73,7 @@ class PipelineE2ESpec extends AnyFunSuite {
   }
 
   test("the no-replayers declaration is checked: live deltas refuse, a checkpoint contradicts") {
-    val wh = Files.createTempDirectory("graft-pipeline-norep").toString
+    val wh = tempDir("graft-pipeline-norep").toString
     val sf = TestSpark.sf0001
     Pipeline.runDaily(spark, sf, wh, runVersion = 1L)
     // contradiction up front: a worker checkpoint + the no-writer claim

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mechanical audit of the scale posture the plans must keep
@@ -10,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - projected scans prune columns at the parquet reader;
   *  - ep1's dims ride broadcast joins.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
@@ -38,6 +41,30 @@ class PlanAuditSpec extends AnyFunSuite {
   test("ep1: part dim is broadcast, fact is not") {
     val p = plan("ep1_consolidar_relatorio")
     assert(p.contains("BroadcastHashJoin"), "part dim should broadcast")
+  }
+
+  test("ep1: every fact exchange is the one l_partkey repartition, nothing re-shuffles") {
+    // each pruned fact scan feeds one `repartition(l_partkey)`; the
+    // aggregates, the sales-traffic join and the window reuse it, so
+    // EnsureRequirements adds no exchange
+    val exec = SparkEntry.queries("ep1_consolidar_relatorio")(spark, sf)
+      .queryExecution.executedPlan
+    val physical = exec match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val shuffles = physical.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.nonEmpty && shuffles.size <= 2,
+      s"ep1 plans ${shuffles.size} shuffles:\n$physical")
+    shuffles.foreach { e =>
+      assert(e.shuffleOrigin == REPARTITION_BY_COL,
+        s"ep1 plans a ${e.shuffleOrigin} exchange:\n$e")
+      val keys = e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case other => Seq(other.toString)
+      }
+      assert(keys == Seq("l_partkey"), s"ep1 exchange keyed on $keys")
+    }
   }
 
   test("dim joins broadcast their small side") {
@@ -128,7 +155,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("loader spread is conditional: well-split scans don't reshuffle") {
     // A corpus that already yields >= cores splits must NOT pay a full
     // shuffle on load; the single-file fixture must still spread.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-splits").toString
+    val tmp = tempDir("graft-splits").toString
     val par = spark.sparkContext.defaultParallelism
     Tables.load(spark, sf, "documents").repartition(par)
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
