@@ -49,8 +49,9 @@ class PlanAuditSpec extends AnyFunSuite with TempDirs {
     // EnsureRequirements adds no exchange
     val exec = SparkEntry.queries("ep1_consolidar_relatorio")(spark, sf)
       .queryExecution.executedPlan
+    // the plan after EnsureRequirements, before any stage runs
     val physical = exec match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }
     val shuffles = physical.collect { case e: ShuffleExchangeExec => e }
