@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Obs
 import graft.sinks.{AlertSink, UpsertWriter}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -89,47 +90,55 @@ object Pipeline {
             "checkpoint instead")
     }
 
-    // 1. consolidate
-    val mart = operators.Consolidation.relatorio(spark, sfDir)
-      .withColumn("run_version", lit(runVersion))
+    // Each step runs as an Obs phase. 1. consolidate: the mart is a lazy
+    // plan (its footer reads run here), so its jobs run in, and book to,
+    // the mart upsert's merge-write that consumes it.
+    val mart = Obs.phase(spark, "consolidate")(
+      operators.Consolidation.relatorio(spark, sfDir)
+        .withColumn("run_version", lit(runVersion)))
 
     // 2. idempotent mart upsert (K1)
     val martPath = s"$warehouseDir/relatorio_diario"
-    UpsertWriter.upsert(spark, martPath, mart,
-      keys = Seq("id_anuncio", "id_anuncio_variacao"),
-      versionCol = "run_version")
+    Obs.phase(spark, "mart-upsert")(
+      UpsertWriter.upsert(spark, martPath, mart,
+        keys = Seq("id_anuncio", "id_anuncio_variacao"),
+        versionCol = "run_version"))
 
     // 3. alert side output (J6 → K7)
-    val unmapped = Tables.part(spark, sfDir)
-      .join(
-        Tables.lineitem(spark, sfDir).filter(col("l_quantity") >= 48.0),
-        col("p_partkey") === col("l_partkey"),
-        "left_anti")
-      .select(col("p_partkey"), col("p_name"), col("p_brand"))
-    AlertSink.emit(spark, s"$warehouseDir/alerts", unmapped, runVersion)
+    Obs.phase(spark, "alert") {
+      val unmapped = Tables.part(spark, sfDir)
+        .join(
+          Tables.lineitem(spark, sfDir).filter(col("l_quantity") >= 48.0),
+          col("p_partkey") === col("l_partkey"),
+          "left_anti")
+        .select(col("p_partkey"), col("p_name"), col("p_brand"))
+      AlertSink.emit(spark, s"$warehouseDir/alerts", unmapped, runVersion)
+    }
 
     // 4. occasional maintenance: bin-pack when the mart has accreted
     // too many small files (each upsert emits up to a shuffle's worth).
     // The walk stream is closed explicitly — a long-lived orchestrator
     // JVM calls runDaily repeatedly, and unclosed directory streams
     // leak file handles until GC.
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(martPath))
-    val files =
-      try walk.filter(p => p.toString.endsWith(".parquet")).count()
-      finally walk.close()
-    // the worker checkpoint (when a streamed co-writer exists) proves
-    // the replay horizon, so maintenance BOUNDS the folded-tag sidecar
-    // instead of only growing it: the compaction prunes when it fires,
-    // and the cheap metadata-only prune runs on the days it doesn't
-    val horizon = workerCheckpoint.flatMap(UpsertWriter.replayHorizon)
-    if (files > compactOver)
-      UpsertWriter.compact(spark, martPath, replayHorizon = horizon)
-    else horizon.foreach(UpsertWriter.pruneReplayMetadata(martPath, _))
-    // the declared-batch-only deployment's bound: clear the sidecar
-    // outright (checked against live deltas — see the scaladoc). After
-    // the compaction above, not instead of it: a compact that folded
-    // anything has just recorded tags this clear is entitled to drop.
-    if (noReplayers) UpsertWriter.clearReplayMetadata(martPath)
+    Obs.phase(spark, "maintenance") {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(martPath))
+      val files =
+        try walk.filter(p => p.toString.endsWith(".parquet")).count()
+        finally walk.close()
+      // the worker checkpoint (when a streamed co-writer exists) proves
+      // the replay horizon, so maintenance BOUNDS the folded-tag sidecar
+      // instead of only growing it: the compaction prunes when it fires,
+      // and the cheap metadata-only prune runs on the days it doesn't
+      val horizon = workerCheckpoint.flatMap(UpsertWriter.replayHorizon)
+      if (files > compactOver)
+        UpsertWriter.compact(spark, martPath, replayHorizon = horizon)
+      else horizon.foreach(UpsertWriter.pruneReplayMetadata(martPath, _))
+      // the declared-batch-only deployment's bound: clear the sidecar
+      // outright (checked against live deltas — see the scaladoc). After
+      // the compaction above, not instead of it: a compact that folded
+      // anything has just recorded tags this clear is entitled to drop.
+      if (noReplayers) UpsertWriter.clearReplayMetadata(martPath)
+    }
   }
 
   /** The STREAMING counterpart of [[runDaily]] — the reference's queue

@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * warmup at sf0.001), scoped to the queries named on the command line.
   * After the session stops it prints the fastest run's phase breakdown,
   * one `[timeone-phase]` line per [[Obs]] path under it ("(run)" is the
-  * whole run; each phase's numbers include its nested phases).
+  * whole run, "output" the result's noop write; each phase's numbers
+  * include its nested phases).
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
@@ -50,7 +51,8 @@ object TimeOne {
         val t0 = System.nanoTime()
         Obs.phase(spark, name) {
           Obs.phase(spark, s"run${times.length + 1}") {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            val df = fn(spark, sfDir)
+            Obs.phase(spark, "output")(df.write.format("noop").mode("overwrite").save())
             spark.catalog.clearCache()
           }
         }
@@ -85,13 +87,8 @@ object TimeOne {
       val phases = metrics.totals.keys.filter(_.startsWith(run + "/"))
         .toSeq.sorted
       for (p <- run +: phases) {
-        val t = metrics.under(p)
         val phase = if (p == run) "(run)" else p.stripPrefix(run + "/")
-        println(("[timeone-phase] %s %s wall_s=%.3f jobs=%d stages=%d " +
-          "tasks=%d task_s=%.3f shuffle_mb=%.1f spill_mb=%.1f")
-          .formatLocal(java.util.Locale.ROOT, name, phase, t.wallNs / 1e9,
-            t.jobs, t.stages, t.tasks, t.taskMs / 1e3,
-            t.shuffleBytes / 1048576.0, t.spillBytes / 1048576.0))
+        println(s"[timeone-phase] $name $phase ${metrics.under(p).show}")
       }
     }
   }

@@ -29,6 +29,12 @@ object Obs {
     def +(o: Totals): Totals = Totals(jobs + o.jobs, stages + o.stages,
       tasks + o.tasks, taskMs + o.taskMs, shuffleBytes + o.shuffleBytes,
       spillBytes + o.spillBytes, wallNs + o.wallNs)
+
+    /** The figures TimeOne and the tools print per phase. */
+    def show: String = ("wall_s=%.3f jobs=%d stages=%d tasks=%d task_s=%.3f " +
+      "shuffle_mb=%.1f spill_mb=%.1f").formatLocal(java.util.Locale.ROOT,
+      wallNs / 1e9, jobs, stages, tasks, taskMs / 1e3,
+      shuffleBytes / 1048576.0, spillBytes / 1048576.0)
   }
 
   private val installed = new CopyOnWriteArrayList[Metrics]()

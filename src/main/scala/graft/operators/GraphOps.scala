@@ -8,6 +8,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+/** A graph's max per-node RAW pair count, the number
+  * [[GraphOps.adaptiveAdjacency]]'s degree gate would measure. The gate
+  * trusts it in place of its own probe, and a value below the true max
+  * would select the unbounded set build on a hub graph — so only
+  * [[GraphOps]] makes one, derived from the relation the pairs come
+  * from, and a caller cannot write one down. */
+final class MaxRawDeg private[operators] (val value: Long)
+
 /** Graph analytics over a derived co-occurrence graph — the "related
   * items" shape every catalog pipeline computes from its order stream
   * (the reference keeps parent/variation links only; this is the
@@ -95,13 +103,13 @@ object GraphOps extends OpModule {
     * which is exactly `groupBy(src).count` over [[pairsFrom]]'s stream —
     * the same number [[adaptiveAdjacency]]'s own probe would measure,
     * via one skinny aggregation instead of a cached pair scan. */
-  private def maxRawDegFrom(os: DataFrame): Long =
-    Obs.phase(os.sparkSession, "raw-degree")(
+  private def maxRawDegFrom(os: DataFrame): MaxRawDeg =
+    Obs.phase(os.sparkSession, "raw-degree")(new MaxRawDeg(
       os.select(explode(col("ps")).as("src"),
           (size(col("ps")) - 1).cast(LongType).as("w"))
         .groupBy(col("src")).agg(sum(col("w")).as("deg"))
         .agg(coalesce(max(col("deg")), lit(0L)).as("m"))
-        .head.getLong(0))
+        .head.getLong(0)))
 
   /** Hub-safe sliced adjacency: (src, slice, nbrs, deg) with ≤ `sliceK`
     * neighbors per row — `ceil(deg/K)` rows per node, slices
@@ -200,22 +208,24 @@ object GraphOps extends OpModule {
       sliceK: Int = AdjSliceK,
       hubDegreeLimit: Long = HubBufferDegreeLimit,
       broadcastBudget: Long = BroadcastBudgetBytes,
-      knownMaxRawDeg: Option[Long] = None): DataFrame =
+      knownMaxRawDeg: Option[MaxRawDeg] = None): DataFrame =
     Obs.phase(edges.sparkSession, "adjacency")(buildAdjacency(
       edges, sliceK, hubDegreeLimit, broadcastBudget, knownMaxRawDeg))
 
   private def buildAdjacency(
       edges: DataFrame, sliceK: Int, hubDegreeLimit: Long,
-      broadcastBudget: Long, knownMaxRawDeg: Option[Long]): DataFrame = {
+      broadcastBudget: Long, knownMaxRawDeg: Option[MaxRawDeg]): DataFrame = {
     // knownMaxRawDeg: callers that can derive the probe value cheaply
     // (the lineitem graph reads it off [[orderSets]] — [[maxRawDegFrom]])
     // pass it in, and the ×fanout pair stream is then neither persisted
     // nor scanned twice: the common (no-hub) branch consumes `edges` in
     // its ONE set aggregation, and the hub branch's distinct is equally
     // single-scan. Without the hint the probe must read the stream
-    // itself, so it persists the pairs exactly as before. The hint MUST
-    // equal what the probe would measure (both are groupBy(src).count
-    // of the raw stream) — the branch taken is identical.
+    // itself, so it persists the pairs exactly as before. The hint
+    // equals what the probe would measure (both are groupBy(src).count
+    // of the raw stream), so the branch taken is identical; only
+    // [[maxRawDegFrom]] can make a [[MaxRawDeg]], so no caller can pass
+    // a guessed one.
     val raw = knownMaxRawDeg match {
       case Some(_) => edges
       case None => edges.persist(StorageLevel.MEMORY_AND_DISK)
@@ -224,21 +234,7 @@ object GraphOps extends OpModule {
       raw.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .agg(coalesce(max(col("deg")), lit(0L)).as("m"))
         .head.getLong(0)
-    // Under GRAFT_GATE_DEBUG the hint is AUDITED, not trusted: the probe
-    // recomputes and a mismatch warns loudly (r17, advisor finding — a
-    // future call site passing a value below the true raw max would
-    // silently select the unbounded set build on a hub graph; current
-    // callers derive the hint from the same relation, so production
-    // never pays the extra pass).
-    knownMaxRawDeg.filter(_ => sys.env.contains("GRAFT_GATE_DEBUG"))
-      .foreach { hint =>
-        val measured = probe()
-        if (measured != hint)
-          System.err.println(s"[gate] adaptiveAdjacency knownMaxRawDeg " +
-            s"MISMATCH: hint=$hint measured=$measured — the hint MUST " +
-            s"equal groupBy(src).count's max over the raw pair stream")
-      }
-    val maxRawDeg = knownMaxRawDeg.getOrElse(probe())
+    val maxRawDeg = knownMaxRawDeg.fold(probe())(_.value)
     var intermediates = List.empty[DataFrame]
     val adj = (if (maxRawDeg <= hubDegreeLimit) {
       hubSafeAdjacency(raw, sliceK)
@@ -308,9 +304,6 @@ object GraphOps extends OpModule {
       stream: DataFrame, build: DataFrame, keys: Seq[String],
       bytes: BigInt, budgetBytes: Long,
       joinType: String = "inner"): DataFrame = {
-    if (sys.env.contains("GRAFT_GATE_DEBUG"))
-      System.err.println(s"[gate] bytes=$bytes budget=$budgetBytes " +
-        s"-> ${if (bytes <= BigInt(budgetBytes)) "broadcast" else "shuffle_hash"}")
     if (bytes <= BigInt(budgetBytes)) stream.join(broadcast(build), keys, joinType)
     else stream.join(build.hint("shuffle_hash"), keys, joinType)
   }
@@ -337,7 +330,7 @@ object GraphOps extends OpModule {
       sliceK: Int = AdjSliceK,
       broadcastBudget: Long = BroadcastBudgetBytes,
       hubDegreeLimit: Long = HubBufferDegreeLimit,
-      knownMaxRawDeg: Option[Long] = None): DataFrame = {
+      knownMaxRawDeg: Option[MaxRawDeg] = None): DataFrame = {
     val adjFull = adaptiveAdjacency(symmetric, sliceK, hubDegreeLimit,
       broadcastBudget, knownMaxRawDeg)
     // (node, deg) via a node-sized distinct over the slice rows — every
@@ -418,7 +411,7 @@ object GraphOps extends OpModule {
       sliceK: Int = AdjSliceK,
       broadcastBudget: Long = BroadcastBudgetBytes,
       hubDegreeLimit: Long = HubBufferDegreeLimit,
-      knownMaxRawDeg: Option[Long] = None): DataFrame = {
+      knownMaxRawDeg: Option[MaxRawDeg] = None): DataFrame = {
     // adaptive build (r6 verdict's directive): the measured max-degree
     // gate swaps the transient collect_set buffer for the bounded
     // pre-agg form when a hub would outgrow it. adaptiveAdjacency

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Exprs, OpModule, Q, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1529,17 +1529,10 @@ object RelationalOps extends OpModule {
         // the result reads the table lazily: deleted at JVM exit
         val wh = graft.Fixtures.tempDirDeletedAtExit("graft-k1b")
           .resolve("t").toString
-        val src = Tables.orders(s, d).select(
-          $("o_custkey"), $("o_orderkey"), $("o_orderdate"), $("o_totalprice"),
-          (unix_date(to_date($("o_orderdate"))).cast(LongType) * 10000000000000L +
-            $("o_orderkey")).as("__ver"))
-        graft.sinks.UpsertWriter.upsertBucketed(s, wh,
-          src.filter($("o_orderkey") % 2 === 0),
-          keys = Seq("o_custkey"), versionCol = "__ver", numBuckets = 8)
-        graft.sinks.UpsertWriter.upsertBucketed(s, wh,
-          src.filter($("o_orderkey") % 2 === 1),
-          keys = Seq("o_custkey"), versionCol = "__ver", numBuckets = 8)
-        s.read.parquet(wh).select(
+        k1bState(s, d, wh, numBuckets = 8)
+        // the footer schema, so the read runs no inference job; the
+        // reader still discovers the bucket column from the paths
+        s.read.schema(Tables.footerSchema(s, wh)).parquet(wh).select(
           $("o_custkey"), $("o_orderkey"),
           to_date($("o_orderdate")).as("data_ultimo"), $("o_totalprice"))
       },
@@ -1769,6 +1762,24 @@ object RelationalOps extends OpModule {
     df.select(substring_index(input_file_name(), "/", -1).as("file"))
       .groupBy(col("file"))
       .agg(count(lit(1)).as("n_rows"))
+
+  /** The `k1b_upsert_bucketed` state at `wh`: the orders, versioned so
+    * the version is a total order per key, merged into a
+    * `numBuckets`-way bucketed table by two
+    * [[graft.sinks.UpsertWriter.upsertBucketed]] batches (even, then odd
+    * orderkeys). Returns the versioned orders. */
+  private[graft] def k1bState(
+      s: SparkSession, d: String, wh: String, numBuckets: Int): DataFrame = {
+    val src = Tables.orders(s, d).select(
+      $("o_custkey"), $("o_orderkey"), $("o_orderdate"), $("o_totalprice"),
+      (unix_date(to_date($("o_orderdate"))).cast(LongType) * 10000000000000L +
+        $("o_orderkey")).as("__ver"))
+    for (parity <- 0 to 1)
+      graft.sinks.UpsertWriter.upsertBucketed(s, wh,
+        src.filter($("o_orderkey") % 2 === parity),
+        keys = Seq("o_custkey"), versionCol = "__ver", numBuckets = numBuckets)
+    src
+  }
 
   private def pivotSql(v: String): String =
     s"CAST(CAST(SUM(CASE WHEN event_type = '$v' THEN CAST(value AS DECIMAL(38,6)) END) AS VARCHAR) AS DOUBLE)"

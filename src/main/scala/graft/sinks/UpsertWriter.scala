@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.Tables
+import graft.obs.Obs
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,6 +49,14 @@ import java.nio.file.{Files, Paths}
   * table readable. Renames are same-directory `Files.move` — atomic on
   * POSIX filesystems and HDFS; on an object store this layer maps to a
   * lakehouse table format instead (see above).
+  *
+  * Each write tags its own steps with [[Obs.phase]], so a caller's
+  * [[Obs.Metrics]] split the sink's jobs and wall time without a
+  * stopwatch of its own: `merge-write` (the merged image's staged write,
+  * existing-table read included) and `swap` (the renames that promote
+  * it) in [[upsert]]/[[upsertBucketed]], `append` in [[appendBucketed]]
+  * and [[append]], and `compact`, `rebucket` and `delete` around the
+  * maintenance ops.
   */
 object UpsertWriter {
 
@@ -275,21 +284,24 @@ object UpsertWriter {
 
   /** Write the new table image into staging, then swap it live without a
     * window where committed data is deleted but not yet replaced. */
-  private def swapIn(path: String)(writeStaging: String => Unit): Unit = {
+  private def swapIn(spark: SparkSession, path: String)(
+      writeStaging: String => Unit): Unit = {
     val staging = path + ".__staging"
     writeStaging(staging)
     // maintenance heartbeat between the (possibly TTL-outliving) staged
     // write and the renames — see [[completePartitionSwap]]
     TableLease.renewIfMaintaining(path)
-    val target = Paths.get(path)
-    if (Files.exists(target)) {
+    Obs.phase(spark, "swap") {
+      val target = Paths.get(path)
+      if (Files.exists(target)) {
+        swapFault()
+        Files.move(target, Paths.get(path + ".__old"))
+      }
       swapFault()
-      Files.move(target, Paths.get(path + ".__old"))
+      Files.move(Paths.get(staging), target)
+      swapFault()
+      deleteTree(path + ".__old")
     }
-    swapFault()
-    Files.move(Paths.get(staging), target)
-    swapFault()
-    deleteTree(path + ".__old")
   }
 
   /** Merge `updates` into the keyed table at `path`.
@@ -347,7 +359,7 @@ object UpsertWriter {
     val adopting = exists(path) && partitionBy.nonEmpty &&
       partitionColsOf(path) != partitionBy
 
-    val merged: DataFrame = if (!exists(path)) {
+    def mergedImage(): DataFrame = if (!exists(path)) {
       dedup(seqd, keys, versionCol)
     } else {
       // an unpartitioned table's schema is its first data file's footer,
@@ -397,6 +409,15 @@ object UpsertWriter {
         keys, versionCol)
     }
 
+    // the image is built inside `merge-write`: on a partitioned layout
+    // its existing-table read runs a schema inference job, which books
+    // to the write it serves
+    def writeMerged(target: String): Unit = Obs.phase(spark, "merge-write") {
+      val w = mergedImage().write.mode(SaveMode.Overwrite)
+      if (partitionBy.isEmpty) w.parquet(target)
+      else w.partitionBy(partitionBy: _*).parquet(target)
+    }
+
     // A merge whose swap SUBSUMES delta files must record their tags as
     // folded, exactly like [[compact]]: the one merge that can legally
     // fold an UNCOMMITTED batch's deltas is a full-table maintenance
@@ -413,21 +434,17 @@ object UpsertWriter {
       // files, which the touched-leaf swap would have left in place
       val folded = deltaTagsUnder(Paths.get(path))
       if (folded.nonEmpty) recordFoldedTags(path, folded)
-      swapIn(path) { staging =>
-        merged.write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionBy: _*).parquet(staging)
-      }
+      swapIn(spark, path)(writeMerged)
     } else if (partitionBy.nonEmpty && exists(path)) {
       // Touched-partitions-only merge through a committed staging image
-      // + per-leaf rename swap ([[completePartitionSwap]]). `merged`
+      // + per-leaf rename swap ([[completePartitionSwap]]). The image
       // holds exactly the touched partitions (the left-semi scope
       // above); writing it to `.__pstaging` materializes the read of
       // the live table BEFORE any rename touches it, and the swap never
       // has a deleted-but-not-replaced window — the crash-atomicity
       // Spark's dynamic-partition-overwrite commit (delete touched
       // partition, then promote files) does not give.
-      merged.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionBy: _*).parquet(path + ".__pstaging")
+      writeMerged(path + ".__pstaging")
       // fault point for the staging-committed-but-tags-unrecorded
       // window: recoverPartitionSwap re-derives the record before it
       // completes the swap, and the spec kills here to prove it
@@ -443,16 +460,13 @@ object UpsertWriter {
         .map(rel => deltaTagsUnder(Paths.get(path).resolve(rel)))
         .foldLeft(Set.empty[String])(_ ++ _)
       if (folded.nonEmpty) recordFoldedTags(path, folded)
-      completePartitionSwap(path)
+      Obs.phase(spark, "swap")(completePartitionSwap(path))
     } else if (partitionBy.nonEmpty) {
-      merged.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionBy: _*).parquet(path)
+      writeMerged(path)
     } else {
       val folded = deltaTagsUnder(Paths.get(path))
       if (folded.nonEmpty) recordFoldedTags(path, folded)
-      swapIn(path) { staging =>
-        merged.write.mode(SaveMode.Overwrite).parquet(staging)
-      }
+      swapIn(spark, path)(writeMerged)
     }
   }
 
@@ -799,7 +813,8 @@ object UpsertWriter {
       batchTag: String,
       numBuckets: Int): Boolean = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    appendInternal(spark, path, rows, keys, batchTag, Some(numBuckets))
+    Obs.phase(spark, "append")(
+      appendInternal(spark, path, rows, keys, batchTag, Some(numBuckets)))
   }
 
   /** UNBUCKETED insert-only append — [[appendBucketed]]'s contract and
@@ -819,7 +834,8 @@ object UpsertWriter {
       rows: DataFrame,
       keys: Seq[String],
       batchTag: String): Boolean =
-    appendInternal(spark, path, rows, keys, batchTag, None)
+    Obs.phase(spark, "append")(
+      appendInternal(spark, path, rows, keys, batchTag, None))
 
   private def appendInternal(
       spark: SparkSession,
@@ -1037,7 +1053,7 @@ object UpsertWriter {
         "bucket-pruned merges; delete the table directory and its " +
         ".__buckets pin instead")
     val empty = spark.read.option("mergeSchema", "true").parquet(path).limit(0)
-    swapIn(path) { staging =>
+    swapIn(spark, path) { staging =>
       empty.write.mode(SaveMode.Overwrite).parquet(staging)
     }
   }
@@ -1085,6 +1101,7 @@ object UpsertWriter {
       path: String,
       targetBytes: Long = 128L << 20,
       replayHorizon: Option[Long] = None): Unit =
+      Obs.phase(spark, "compact")(
       TableLease.withMaintenance(Seq(path), maintHolder("compact")) {
     schemaCache.remove(path) // mergeSchema may surface a union schema
     recover(path)
@@ -1123,14 +1140,14 @@ object UpsertWriter {
     val df =
       if (partCols.isEmpty) full.repartition(parts)
       else full.repartition(parts, partCols.map(col): _*)
-    swapIn(path) { staging =>
+    swapIn(spark, path) { staging =>
       if (partCols.isEmpty)
         df.write.mode(SaveMode.Overwrite).parquet(staging)
       else
         df.write.mode(SaveMode.Overwrite)
           .partitionBy(partCols: _*).parquet(staging)
     }
-  }
+  })
 
   private def rebucketIntent(path: String) =
     Paths.get(path + ".__rebucket-intent")
@@ -1232,6 +1249,7 @@ object UpsertWriter {
       newBuckets: Int,
       targetBytes: Long = 128L << 20,
       replayHorizon: Option[Long] = None): Unit =
+      Obs.phase(spark, "rebucket")(
       TableLease.withMaintenance(Seq(path), maintHolder("rebucket")) {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
     require(keys.nonEmpty && !keys.contains(BucketCol),
@@ -1295,7 +1313,7 @@ object UpsertWriter {
             pmod(xxhash64(keys.map(col) :+ lit("__rebucket-slice"): _*),
               lit(filesPerBucket)))
         writeRebucketIntent(path, newBuckets)
-        swapIn(path) { staging =>
+        swapIn(spark, path) { staging =>
           df.write.mode(SaveMode.Overwrite)
             .partitionBy(BucketCol).parquet(staging)
           // epoch INSIDE the committed image, so promotion carries it
@@ -1305,7 +1323,7 @@ object UpsertWriter {
         completeRebucketIntent(path)
       }
     }
-  }
+  })
 
   /** Maintenance POLICY over [[rebucket]] — the piece that makes the
     * bucket count a managed quantity instead of an operator judgment
@@ -1402,6 +1420,7 @@ object UpsertWriter {
       spark: SparkSession,
       path: String,
       predicate: org.apache.spark.sql.Column): Long =
+      Obs.phase(spark, "delete")(
       TableLease.withMaintenance(Seq(path), maintHolder("deleteWhere")) {
     schemaCache.remove(path)
     recover(path)
@@ -1437,7 +1456,7 @@ object UpsertWriter {
     ds.conf.set(
       "spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     deleteWhereInternal(ds, path, predicate)
-  }
+  })
 
   private def deleteWhereInternal(
       spark: SparkSession,
@@ -1453,7 +1472,7 @@ object UpsertWriter {
         val folded = deltaTagsUnder(Paths.get(path))
         if (folded.nonEmpty) recordFoldedTags(path, folded)
         val remaining = full.filter(!hit)
-        swapIn(path) { staging =>
+        swapIn(spark, path) { staging =>
           remaining.write.mode(SaveMode.Overwrite).parquet(staging)
         }
       }

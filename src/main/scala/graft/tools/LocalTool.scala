@@ -1,21 +1,17 @@
 package graft.tools
 
-import graft.{Fixtures, Sessions}
+import graft.Sessions
 import org.apache.spark.sql.SparkSession
 
-/** Shared bootstrap for the optimization-round CLI tools (r17, advisor
-  * finding: the probes each duplicated this block): one local-mode
-  * session built the way the bench builds its own — master and shuffle
-  * partitions from `SPARK_GRAFT_CPUS`, UTC session, nanos-as-long
-  * parquet reads, UI off — then [[Sessions.tune]]d, log-leveled, with
-  * the fixture warehouse for `sfDir` ensured before returning.
-  */
+/** The CLI tools' one session bootstrap, built as the bench builds its
+  * own: master and shuffle partitions from `SPARK_GRAFT_CPUS`, UTC,
+  * nanos-as-long parquet reads, UI off, then [[Sessions.tune]]d. */
 private[tools] object LocalTool {
   /** Fixture dir the tool should measure against (bench default). */
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  def session(sfDir: String = sfDir, logLevel: String = "WARN"): SparkSession = {
+  def session(logLevel: String = "WARN"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -26,7 +22,6 @@ private[tools] object LocalTool {
       .getOrCreate()
     Sessions.tune(spark)
     spark.sparkContext.setLogLevel(logLevel)
-    Fixtures.ensureAll(spark, sfDir)
     spark
   }
 }

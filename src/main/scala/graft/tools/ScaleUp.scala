@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, Tables}
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,16 +127,7 @@ object ScaleUp {
   /** args: srcDir dstDir factor */
   def main(args: Array[String]): Unit = {
     val Array(src, dst, kStr) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Sessions.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalTool.session()
     run(spark, src, dst, kStr.toInt)
     println(s"[scaleup] wrote ${dst} at ${kStr}x of ${src}")
     spark.stop()

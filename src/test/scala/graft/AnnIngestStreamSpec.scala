@@ -12,7 +12,7 @@ import java.nio.file.Files
   * EXACTLY equal to brute-force cosine top-k (probing every cell is
   * exhaustive search, so the equivalence is an equality, not a recall
   * bound). */
-class AnnIngestStreamSpec extends AnyFunSuite {
+class AnnIngestStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   // 8 clusters on axes e0..e7 (training home) and the same labels
@@ -31,7 +31,7 @@ class AnnIngestStreamSpec extends AnyFunSuite {
     yield ((1000 + l * 20 + i).toLong, vec(l + 8), l)
 
   test("kill mid-drain, resume: index exactly-once, full-probe search = brute force") {
-    val base = Files.createTempDirectory("graft-ann-stream")
+    val base = tempDir("graft-ann-stream")
     val flat = base.resolve("vecs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString
@@ -98,7 +98,7 @@ class AnnIngestStreamSpec extends AnyFunSuite {
   }
 
   test("drifting stream: the log's cell_max_share rises when a batch concentrates into few cells") {
-    val base = Files.createTempDirectory("graft-ann-drift")
+    val base = tempDir("graft-ann-drift")
     val flat = base.resolve("vecs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString
@@ -138,7 +138,7 @@ class AnnIngestStreamSpec extends AnyFunSuite {
   }
 
   test("refitIfDrifted: the drifted index rebalances, a 1-cell probe stays exact, and the policy won't loop") {
-    val base = Files.createTempDirectory("graft-ann-refit")
+    val base = tempDir("graft-ann-refit")
     val flat = base.resolve("vecs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString
@@ -207,7 +207,7 @@ class AnnIngestStreamSpec extends AnyFunSuite {
   }
 
   test("runAnnIngestCycle: scheduled drain+maintenance — healthy cycle audits only, drifted cycle refits, manual re-refit appends history") {
-    val base = Files.createTempDirectory("graft-ann-cycle")
+    val base = tempDir("graft-ann-cycle")
     val flat = base.resolve("vecs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString

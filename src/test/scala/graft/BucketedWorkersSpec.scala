@@ -15,7 +15,7 @@ import java.nio.file.{Files, Paths}
   * multi-signal worker's twin lives in ReplayDeterminismSpec (with the
   * crash window); this suite covers the other four.
   */
-class BucketedWorkersSpec extends AnyFunSuite {
+class BucketedWorkersSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -33,7 +33,7 @@ class BucketedWorkersSpec extends AnyFunSuite {
   test("NearDupIngest: bucketed state tables equal the plain run's, pin present") {
     val ids = (0L until 40L)
     def drive(buckets: Option[Int]): String = {
-      val wh = Files.createTempDirectory("graft-bw-nd").resolve("wh").toString
+      val wh = tempDir("graft-bw-nd").resolve("wh").toString
       NearDupIngest.processBatch(
         docsDF(ids.filter(_ % 2 == 0)), 0L, wh, stateBuckets = buckets)
       NearDupIngest.processBatch(
@@ -55,7 +55,7 @@ class BucketedWorkersSpec extends AnyFunSuite {
     val mk = (p: Int) => (0 until 30).filter(_ % 2 == p)
       .map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
     def drive(buckets: Option[Int]): String = {
-      val wh = Files.createTempDirectory("graft-bw-em").resolve("wh").toString
+      val wh = tempDir("graft-bw-em").resolve("wh").toString
       EmbedIngest.processBatch(mk(0), 0L, wh, stateBuckets = buckets)
       EmbedIngest.processBatch(mk(1), 1L, wh, stateBuckets = buckets)
       wh
@@ -69,7 +69,7 @@ class BucketedWorkersSpec extends AnyFunSuite {
 
   test("DedupIngest: bucketed drain through the real harness equals the plain run's") {
     def drive(buckets: Option[Int]): String = {
-      val base = Files.createTempDirectory("graft-bw-dd")
+      val base = tempDir("graft-bw-dd")
       val flat = base.resolve("in").toString
       new java.io.File(flat).mkdirs()
       StreamFiles.landOne(base, flat, "b0", docsDF((0L until 40L).filter(_ % 2 == 0)))
@@ -94,7 +94,7 @@ class BucketedWorkersSpec extends AnyFunSuite {
     // swap, or between the survivors and log upserts); resume must
     // recover the swap and restate, never duplicate or lose a key —
     // the plain-layout twin lives in DedupIngestStreamSpec
-    val base = Files.createTempDirectory("graft-bw-ddkill")
+    val base = tempDir("graft-bw-ddkill")
     val flat = base.resolve("docs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString
@@ -155,13 +155,13 @@ class BucketedWorkersSpec extends AnyFunSuite {
     // LAYOUT, invisible to worker semantics.
     val ids = (0L until 40L)
     def ndDrive(): String = {
-      val wh = Files.createTempDirectory("graft-rb-nd").resolve("wh").toString
+      val wh = tempDir("graft-rb-nd").resolve("wh").toString
       NearDupIngest.processBatch(docsDF(ids.filter(_ % 2 == 0)), 0L, wh)
       NearDupIngest.processBatch(docsDF(ids.filter(_ % 2 == 1)), 1L, wh)
       wh
     }
     val plain = ndDrive()
-    val wh = Files.createTempDirectory("graft-rb-nd").resolve("wh").toString
+    val wh = tempDir("graft-rb-nd").resolve("wh").toString
     NearDupIngest.processBatch(
       docsDF(ids.filter(_ % 2 == 0)), 0L, wh, stateBuckets = Some(4))
     UpsertWriter.rebucket(spark, s"$wh/neardup_survivors",
@@ -186,13 +186,13 @@ class BucketedWorkersSpec extends AnyFunSuite {
         (1 to 6).map(k => s"w${i}x$k").mkString(" "), vec(i)))
       .toDF("doc_id", "text", "embedding")
     def msDrive(): String = {
-      val wh = Files.createTempDirectory("graft-rb-ms").resolve("wh").toString
+      val wh = tempDir("graft-rb-ms").resolve("wh").toString
       graft.streaming.MultiSignalIngest.processBatch(mk(0), 0L, wh)
       graft.streaming.MultiSignalIngest.processBatch(mk(1), 1L, wh)
       wh
     }
     val msPlain = msDrive()
-    val msWh = Files.createTempDirectory("graft-rb-ms").resolve("wh").toString
+    val msWh = tempDir("graft-rb-ms").resolve("wh").toString
     graft.streaming.MultiSignalIngest.processBatch(
       mk(0), 0L, msWh, stateBuckets = Some(4))
     UpsertWriter.rebucket(spark, s"$msWh/ms_survivors",
@@ -216,7 +216,7 @@ class BucketedWorkersSpec extends AnyFunSuite {
     val mkVecs = (p: Int) => (0 until 30).filter(_ % 2 == p)
       .map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
     def emDrive(buckets: Option[Int]): String = {
-      val wh = Files.createTempDirectory("graft-bw-serve-em")
+      val wh = tempDir("graft-bw-serve-em")
         .resolve("wh").toString
       EmbedIngest.processBatch(mkVecs(0), 0L, wh, stateBuckets = buckets)
       EmbedIngest.processBatch(mkVecs(1), 1L, wh, stateBuckets = buckets)
@@ -231,7 +231,7 @@ class BucketedWorkersSpec extends AnyFunSuite {
       "nearDuplicates diverged across layouts")
 
     def msDrive(buckets: Option[Int]): String = {
-      val wh = Files.createTempDirectory("graft-bw-serve-ms")
+      val wh = tempDir("graft-bw-serve-ms")
         .resolve("wh").toString
       val mk = (p: Int) => (0 until 30).filter(_ % 2 == p)
         .map(i => (i.toLong, s"text ${i} " +
@@ -258,7 +258,7 @@ class BucketedWorkersSpec extends AnyFunSuite {
     val mkAnn = (p: Int) => (0 until 24).filter(_ % 2 == p)
       .map(i => (i.toLong, vec(i), i % 4)).toDF("vec_id", "embedding", "label")
     def annDrive(buckets: Option[Int]): String = {
-      val wh = Files.createTempDirectory("graft-bw-serve-ann")
+      val wh = tempDir("graft-bw-serve-ann")
         .resolve("wh").toString
       AnnIngest.processBatch(mkAnn(0), 0L, wh, stateBuckets = buckets)
       AnnIngest.processBatch(mkAnn(1), 1L, wh, stateBuckets = buckets)
@@ -277,7 +277,7 @@ class BucketedWorkersSpec extends AnyFunSuite {
     val mk = (p: Int) => (0 until 24).filter(_ % 2 == p)
       .map(i => (i.toLong, vec(i), i % 4)).toDF("vec_id", "embedding", "label")
     def drive(buckets: Option[Int]): String = {
-      val wh = Files.createTempDirectory("graft-bw-ann").resolve("wh").toString
+      val wh = tempDir("graft-bw-ann").resolve("wh").toString
       AnnIngest.processBatch(mk(0), 0L, wh, stateBuckets = buckets)
       AnnIngest.processBatch(mk(1), 1L, wh, stateBuckets = buckets)
       wh

@@ -30,7 +30,7 @@ class DedupIngestStreamSpec extends AnyFunSuite with TempDirs {
     var afterKill = 3L
     while (afterKill >= 3 && attempt < 8) {
       attempt += 1
-      val base = Files.createTempDirectory("graft-dedup-stream")
+      val base = tempDir("graft-dedup-stream")
       val flat = base.resolve("docs").toString
       val wh = base.resolve("wh").toString
       val ckpt = base.resolve("ckpt").toString

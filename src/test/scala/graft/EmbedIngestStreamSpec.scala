@@ -14,7 +14,7 @@ import java.nio.file.Files
   * shingles; the MASK-WIDENING semantics (corpus crossing an
   * occupancy boundary) are gated cross-engine by
   * `embed_ingest_final_state`, which drains 250+ vectors per batch. */
-class EmbedIngestStreamSpec extends AnyFunSuite {
+class EmbedIngestStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -32,7 +32,7 @@ class EmbedIngestStreamSpec extends AnyFunSuite {
     StreamFiles.landOne(base, flat, name, rows.toDF("vec_id", "embedding"))
 
   test("kill mid-drain, resume: one survivor per cosine cluster, re-masked corpus check, log consistent") {
-    val base = Files.createTempDirectory("graft-embed-stream")
+    val base = tempDir("graft-embed-stream")
     val flat = base.resolve("vecs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString
@@ -112,7 +112,7 @@ class EmbedIngestStreamSpec extends AnyFunSuite {
   }
 
   test("same-batch vec_id reuse: keep-latest collapse counted as a batch dupe, not a corpus dupe") {
-    val base = Files.createTempDirectory("graft-embed-iddup")
+    val base = tempDir("graft-embed-iddup")
     val flat = base.resolve("vecs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString
@@ -144,7 +144,7 @@ class EmbedIngestStreamSpec extends AnyFunSuite {
   }
 
   test("serving lookup: nearDuplicates finds stored near-dups, misses orthogonals, and is empty pre-commit") {
-    val base = Files.createTempDirectory("graft-embed-lookup")
+    val base = tempDir("graft-embed-lookup")
     val flat = base.resolve("vecs").toString
     val wh = base.resolve("wh").toString
     new java.io.File(flat).mkdirs()

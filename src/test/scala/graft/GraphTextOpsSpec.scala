@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * decay scoring, and ANN recall — properties the row-compare oracle
   * can't express (mass conservation, cap enforcement, monotonicity).
   */
-class GraphTextOpsSpec extends AnyFunSuite {
+class GraphTextOpsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -38,7 +38,7 @@ class GraphTextOpsSpec extends AnyFunSuite {
       .withColumn("l_returnflag", lit("N"))
       .withColumn("l_linestatus", lit("O"))
       .withColumn("l_shipdate", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-star").toString
+    val tmp = tempDir("graft-star").toString
     li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
     val ranks = SparkEntry.queries("graph_pagerank")(spark, tmp)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -103,7 +103,7 @@ class GraphTextOpsSpec extends AnyFunSuite {
       (2L, at(1), 2L, "view", 100.0, "{}"),
       (3L, at(5), 3L, "view", 100.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-decay").toString
+    val tmp = tempDir("graft-decay").toString
     ev.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val out = SparkEntry.queries("ts_decay_score")(spark, tmp)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

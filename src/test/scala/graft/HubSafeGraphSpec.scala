@@ -40,6 +40,14 @@ class HubSafeGraphSpec extends AnyFunSuite {
       "multi-slice + shuffle-hash fallback changed triangle counts")
   }
 
+  test("the degree hint is typed: a raw Long or a hand-made MaxRawDeg does not compile") {
+    val edges = plantedEdges()
+    assertCompiles("GraphOps.triangleCounts(edges, knownMaxRawDeg = None)")
+    assertDoesNotCompile("GraphOps.triangleCounts(edges, knownMaxRawDeg = Some(3L))")
+    assertDoesNotCompile("GraphOps.edgeJaccardTopK(edges, knownMaxRawDeg = Some(3L))")
+    assertDoesNotCompile("new graft.operators.MaxRawDeg(3L)")
+  }
+
   test("triangles: the size gate actually flips the second lookup's join strategy") {
     val edges = plantedEdges()
     // only the plan ABOVE the cache boundary counts: the persisted

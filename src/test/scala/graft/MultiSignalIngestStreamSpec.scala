@@ -13,7 +13,7 @@ import java.nio.file.Files
   * vector paraphrases a stored doc drops; a new vector whose text
   * copies a stored doc drops), kill/resume restating, and the
   * admission log. */
-class MultiSignalIngestStreamSpec extends AnyFunSuite {
+class MultiSignalIngestStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -50,7 +50,7 @@ class MultiSignalIngestStreamSpec extends AnyFunSuite {
     // restate claim needs a won race). Seen once in a full-suite run
     // where this spec executed last and everything was JIT-hot.
     def attempt(): (java.nio.file.Path, Long) = {
-      val base = Files.createTempDirectory("graft-ms-stream")
+      val base = tempDir("graft-ms-stream")
       val flat = base.resolve("in").toString
       val wh = base.resolve("wh").toString
       val ckpt = base.resolve("ckpt").toString
@@ -183,7 +183,7 @@ class MultiSignalIngestStreamSpec extends AnyFunSuite {
   }
 
   test("lifecycle through a REAL checkpoint: horizon-pruned compact, takedown, rebucket under stale config") {
-    val base = Files.createTempDirectory("graft-ms-lifecycle")
+    val base = tempDir("graft-ms-lifecycle")
     val flat = base.resolve("in").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString

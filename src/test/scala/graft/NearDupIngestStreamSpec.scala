@@ -10,7 +10,7 @@ import java.nio.file.Files
   * one survivor per near-dup cluster, first arrival wins across
   * batches, the signature index drives the corpus check, and the
   * admission log restates instead of duplicating. */
-class NearDupIngestStreamSpec extends AnyFunSuite {
+class NearDupIngestStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -28,7 +28,7 @@ class NearDupIngestStreamSpec extends AnyFunSuite {
     StreamFiles.landOne(base, flat, name, rows.toDF("doc_id", "text"))
 
   test("kill mid-drain, resume: one survivor per near-dup cluster, index-driven corpus check, log consistent") {
-    val base = Files.createTempDirectory("graft-neardup-stream")
+    val base = tempDir("graft-neardup-stream")
     val flat = base.resolve("docs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString
@@ -107,7 +107,7 @@ class NearDupIngestStreamSpec extends AnyFunSuite {
   }
 
   test("same-batch doc_id reuse: keep-latest collapse counted as a batch dupe, not a corpus dupe") {
-    val base = Files.createTempDirectory("graft-neardup-iddup")
+    val base = tempDir("graft-neardup-iddup")
     val flat = base.resolve("docs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString

@@ -88,16 +88,16 @@ class ObsSpec extends AnyFunSuite with TempDirs {
     withMetrics { m =>
       Obs.within(spark, "nd") {
         NearDupIngest.processBatch(docs(ids).drop("embedding"), 0L,
-          Files.createTempDirectory("graft-obs-nd").resolve("wh").toString)
+          tempDir("graft-obs-nd").resolve("wh").toString)
       }
       Obs.within(spark, "ms") {
         MultiSignalIngest.processBatch(docs(ids), 0L,
-          Files.createTempDirectory("graft-obs-ms").resolve("wh").toString)
+          tempDir("graft-obs-ms").resolve("wh").toString)
       }
       Obs.within(spark, "em") {
         EmbedIngest.processBatch(
           docs(ids).withColumnRenamed("doc_id", "vec_id").drop("text"), 0L,
-          Files.createTempDirectory("graft-obs-em").resolve("wh").toString)
+          tempDir("graft-obs-em").resolve("wh").toString)
       }
       drained(m)
       for (q <- Seq("nd", "ms", "em")) {
@@ -116,7 +116,7 @@ class ObsSpec extends AnyFunSuite with TempDirs {
   }
 
   test("a NearDupIngest.start drain books its batch phases under the scope open at start") {
-    val base = Files.createTempDirectory("graft-obs-drain")
+    val base = tempDir("graft-obs-drain")
     val flat = base.resolve("in").toString
     new java.io.File(flat).mkdirs()
     StreamFiles.landOne(base, flat, "f0",

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * recompute, and the sort-based skyline against an in-memory
   * brute-force dominance check.
   */
-class ParetoGraphSpec extends AnyFunSuite {
+class ParetoGraphSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -34,7 +34,7 @@ class ParetoGraphSpec extends AnyFunSuite {
       (1L, 1L), (1L, 2L), (1L, 3L),
       (2L, 1L), (2L, 2L),
       (3L, 9L)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tri").toString
+    val tmp = tempDir("graft-tri").toString
     li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
     val out = SparkEntry.queries("graph_triangles")(spark, tmp)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -44,7 +44,7 @@ class ParetoGraphSpec extends AnyFunSuite {
 
   test("triangles: clique-4 gives every corner C(3,2)=3 triangles") {
     val li = lineitemDf(Seq((1L, 1L), (1L, 2L), (1L, 3L), (1L, 4L)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tri4").toString
+    val tmp = tempDir("graft-tri4").toString
     li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
     val out = SparkEntry.queries("graph_triangles")(spark, tmp)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -58,7 +58,7 @@ class ParetoGraphSpec extends AnyFunSuite {
     val li = lineitemDf(Seq(
       (1L, 1L), (1L, 2L), (1L, 3L),
       (2L, 1L), (2L, 2L), (2L, 4L)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ej").toString
+    val tmp = tempDir("graft-ej").toString
     li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
     val rows = SparkEntry.queries("graph_edge_jaccard")(spark, tmp)
       .collect()

@@ -12,12 +12,12 @@ import java.nio.file.Files
   * for every incremental query (T1/T2's as-of reads). Asserted on the
   * physical scan, not inferred: the FileSourceScanExec must carry the
   * partition filter and select strictly fewer partition dirs. */
-class PartitionPruneSpec extends AnyFunSuite {
+class PartitionPruneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("date-partitioned upsert table prunes to one partition at the scan") {
-    val dir = Files.createTempDirectory("graft-prune").toString
+    val dir = tempDir("graft-prune").toString
     val path = s"$dir/fact_daily"
     val rows = Seq(
       (1L, "2025-01-01", 10.0), (2L, "2025-01-01", 11.0),
@@ -47,7 +47,7 @@ class PartitionPruneSpec extends AnyFunSuite {
     * types. Round-trips the documents fixture through JSONL and pins
     * row identity under the declared schema. */
   test("JSONL source with explicit schema round-trips the documents fixture") {
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = tempDir("graft-jsonl").toString
     val docs = Tables.documents(spark, TestSpark.sf0001)
       .select(col("doc_id"), col("text"), col("lang"))
     docs.write.json(s"$dir/docs_jsonl")

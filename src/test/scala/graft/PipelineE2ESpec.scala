@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Obs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -41,6 +42,33 @@ class PipelineE2ESpec extends AnyFunSuite with TempDirs {
       alerts.select("alert_key").distinct().count(), "alerts must be keyed")
     assert(alerts.select(max($"run_version")).head().getLong(0) == 2L)
     assert(alerts.filter($"status" === "OPEN").count() == alerts.count())
+  }
+
+  test("every job of a runDaily books under one of its four steps") {
+    val wh = tempDir("graft-pipeline-obs").toString
+    val sf = TestSpark.sf0001
+    Pipeline.runDaily(spark, sf, wh, runVersion = 1L) // the next run merges
+    val m = Obs.install(spark)
+    try {
+      Obs.within(spark, "daily") {
+        Pipeline.runDaily(spark, sf, wh, runVersion = 2L, compactOver = 0)
+      }
+      // listener events arrive in order: once this job's stage is in,
+      // every job submitted before it is too
+      Obs.within(spark, "barrier")(spark.sparkContext.parallelize(1 to 2, 1).count())
+      val deadline = System.currentTimeMillis() + 60000
+      while (m.under("barrier").stages == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      val steps = Seq("consolidate", "mart-upsert", "alert", "maintenance")
+      val booked = m.totals.collect {
+        case (p, t) if t.jobs > 0 && (p == "daily" || p.startsWith("daily/")) => p
+      }
+      assert(booked.nonEmpty && booked.forall(p =>
+        steps.exists(s => p == s"daily/$s" || p.startsWith(s"daily/$s/"))),
+        s"runDaily jobs booked outside its steps: $booked")
+      for (s <- Seq("mart-upsert", "alert", "maintenance"))
+        assert(m.under(s"daily/$s").jobs > 0, s"$s ran no tagged job")
+    } finally m.close()
   }
 
   test("declared batch-only deployment: a long runDaily loop keeps the replay sidecar empty") {

@@ -7,7 +7,7 @@ import java.nio.file.Files
 /** Pipeline.runStreaming end to end: the T4 queue-worker contract under a
   * KILLED-and-resumed query — exactly-once state through the checkpoint +
   * idempotent-upsert pair, with the dim enrichment applied per batch. */
-class PipelineStreamingSpec extends AnyFunSuite {
+class PipelineStreamingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
   private val sf = "/root/testdata/sf0.001"
@@ -17,7 +17,7 @@ class PipelineStreamingSpec extends AnyFunSuite {
     StreamFiles.landOne(base, flat, name, rows.toDF("task_id", "payload"))
 
   test("kill mid-drain, resume on the same checkpoint: every task acked exactly once, enriched") {
-    val base = Files.createTempDirectory("graft-pipe-stream")
+    val base = tempDir("graft-pipe-stream")
     val flat = base.resolve("queue").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString
@@ -80,7 +80,7 @@ class PipelineStreamingSpec extends AnyFunSuite {
     // hold tags (non-vacuous) and that the next orchestrated cycle
     // prunes exactly that residue.
     import graft.sinks.UpsertWriter
-    val base = Files.createTempDirectory("graft-ann-cycles")
+    val base = tempDir("graft-ann-cycles")
     val flat = base.resolve("vecs").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString

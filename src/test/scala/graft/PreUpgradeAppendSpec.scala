@@ -18,7 +18,7 @@ import java.nio.file.{Files, Path, Paths}
   * (2) the backfill repairs the adopted rows' physical NULLs, so the
   * old corpus keeps vetoing near-dups of its own rows; (3) later
   * pure-insert batches ride the append path again (delta files). */
-class PreUpgradeAppendSpec extends AnyFunSuite {
+class PreUpgradeAppendSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -58,7 +58,7 @@ class PreUpgradeAppendSpec extends AnyFunSuite {
   }
 
   test("neardup bucketed: first all-new batch over a pre-upgrade table merges once (adopting the column), then appends again") {
-    val base = Files.createTempDirectory("graft-preupgrade-nd")
+    val base = tempDir("graft-preupgrade-nd")
     val wh = base.resolve("wh").toString
     val b = Some(4)
     def doc(i: Long) = (i, s"unique document number $i with entirely distinct words w${i}a w${i}b w${i}c w${i}d w${i}e w${i}f")
@@ -104,7 +104,7 @@ class PreUpgradeAppendSpec extends AnyFunSuite {
   }
 
   test("embed plain layout: the same wedge batch merges once, backfill repairs NULLs, appends resume") {
-    val base = Files.createTempDirectory("graft-preupgrade-em")
+    val base = tempDir("graft-preupgrade-em")
     val wh = base.resolve("wh").toString
     def vec(i: Int, j: Int = -1, eps: Float = 0f): Seq[Float] =
       Seq.tabulate(64)(d => if (d == i) 1f else if (d == j) eps else 0f)
@@ -138,7 +138,7 @@ class PreUpgradeAppendSpec extends AnyFunSuite {
   }
 
   test("neardup plain layout: the wedge batch merges once, then all-new batches append") {
-    val base = Files.createTempDirectory("graft-preupgrade-ndp")
+    val base = tempDir("graft-preupgrade-ndp")
     val wh = base.resolve("wh").toString
     def doc(i: Long) = (i, s"unique document number $i with entirely distinct words w${i}a w${i}b w${i}c w${i}d w${i}e w${i}f")
     NearDupIngest.processBatch(
@@ -175,7 +175,7 @@ class PreUpgradeAppendSpec extends AnyFunSuite {
   }
 
   test("ann bucketed: pre-upgrade postings index adopts the column through one merge, then appends") {
-    val base = Files.createTempDirectory("graft-preupgrade-ann")
+    val base = tempDir("graft-preupgrade-ann")
     val wh = base.resolve("wh").toString
     val b = Some(4)
     def vec(i: Int): Seq[Float] = Seq.tabulate(64)(d => if (d == i % 64) 1f else 0f)

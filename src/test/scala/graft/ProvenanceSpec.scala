@@ -13,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition of the rows: one tally row per part file, distinct names,
   * every tally > 0, and the tallies re-add to the table total.
   */
-class ProvenanceSpec extends AnyFunSuite {
+class ProvenanceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("fileProvenance partitions rows by part file on a 4-part table") {
-    val dir = Files.createTempDirectory("graft-prov").toString + "/t.parquet"
+    val dir = tempDir("graft-prov").toString + "/t.parquet"
     spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
       .repartition(4)
       .write.mode("overwrite").parquet(dir)
@@ -40,7 +40,7 @@ class ProvenanceSpec extends AnyFunSuite {
     val base = RelationalOps.queries("meta1_file_provenance")
       .run(spark, d1).orderBy("tbl").collect().toSeq
 
-    val d2 = Files.createTempDirectory("graft-prov-sf").toString
+    val d2 = tempDir("graft-prov-sf").toString
     for (t <- Seq("lineitem", "orders", "part"))
       spark.read.parquet(s"$d1/$t.parquet").repartition(3)
         .write.mode("overwrite").parquet(s"$d2/$t.parquet")

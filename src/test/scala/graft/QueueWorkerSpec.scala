@@ -8,12 +8,12 @@ import java.nio.file.Files
 /** T4: the queue micro-batch worker as Structured Streaming — rate-limited
   * claims (maxFilesPerTrigger=1 ⇒ one task file per micro-batch), enrich,
   * idempotent ack into the K1 upsert state table. */
-class QueueWorkerSpec extends AnyFunSuite {
+class QueueWorkerSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("drains the queue in rate-limited batches and acks exactly-once") {
-    val base = Files.createTempDirectory("graft-queue")
+    val base = tempDir("graft-queue")
     val queueDir = base.resolve("queue").toString
     val stateDir = base.resolve("state").toString
     val ckptDir  = base.resolve("ckpt").toString
@@ -61,7 +61,7 @@ class QueueWorkerSpec extends AnyFunSuite {
   }
 
   test("checkpoint resume: a restarted worker processes only new tasks") {
-    val base = Files.createTempDirectory("graft-queue-resume")
+    val base = tempDir("graft-queue-resume")
     val flat = base.resolve("flat").toString
     val stateDir = base.resolve("state").toString
     val ckptDir = base.resolve("ckpt").toString

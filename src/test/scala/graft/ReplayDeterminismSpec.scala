@@ -31,7 +31,7 @@ import java.nio.file.Files
   * candidate-invariant. The immutable `first_admitted_batch` column
   * is what keeps the replay's corpus count — and so the mask, the
   * candidates, and the log — identical. */
-class ReplayDeterminismSpec extends AnyFunSuite {
+class ReplayDeterminismSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -92,11 +92,11 @@ class ReplayDeterminismSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))).toSeq)
 
-    val whClean = Files.createTempDirectory("graft-replay-em-clean").toString
+    val whClean = tempDir("graft-replay-em-clean").toString
     EmbedIngest.processBatch(b0, 0, whClean)
     EmbedIngest.processBatch(b1, 1, whClean)
 
-    val whCrash = Files.createTempDirectory("graft-replay-em-crash").toString
+    val whCrash = tempDir("graft-replay-em-crash").toString
     EmbedIngest.processBatch(b0, 0, whCrash)
     EmbedIngest.processBatch(b1, 1, whCrash) // attempt: state written in full…
     EmbedIngest.processBatch(b1, 1, whCrash) // …checkpoint never committed: replay
@@ -151,11 +151,11 @@ class ReplayDeterminismSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))).toSeq)
 
-    val whClean = Files.createTempDirectory(s"graft-replay-$tag-clean").toString
+    val whClean = tempDir(s"graft-replay-$tag-clean").toString
     MultiSignalIngest.processBatch(b0, 0, whClean, stateBuckets = stateBuckets)
     MultiSignalIngest.processBatch(b1, 1, whClean, stateBuckets = stateBuckets)
 
-    val whCrash = Files.createTempDirectory(s"graft-replay-$tag-crash").toString
+    val whCrash = tempDir(s"graft-replay-$tag-crash").toString
     MultiSignalIngest.processBatch(b0, 0, whCrash, stateBuckets = stateBuckets)
     // attempt: every state table fully merged (incl. the touched-bucket
     // merges when bucketed)…
@@ -206,7 +206,7 @@ class ReplayDeterminismSpec extends AnyFunSuite {
           r.getLong(3), r.getLong(4))).toSeq)
 
     def drive(tag: String, crash: Boolean): String = {
-      val wh = Files.createTempDirectory(s"graft-replay-nd-$tag").toString
+      val wh = tempDir(s"graft-replay-nd-$tag").toString
       NearDupIngest.processBatch(b0, 0, wh, stateBuckets = Some(4))
       if (crash) // append-batch replay: delta files replaced by name
         NearDupIngest.processBatch(b0, 0, wh, stateBuckets = Some(4))

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Goldens for the reference quirks SURVEY §5 calls out: the F6 MySQL
   * precedence bug, C5 timezone day-bucketing, C6 decimal-comma parse,
   * and the F10 attribute-fallback chain. */
-class SemanticsSpec extends AnyFunSuite {
+class SemanticsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -23,7 +23,7 @@ class SemanticsSpec extends AnyFunSuite {
       (4L, 9L, "purchase", shifted(3600L * 1000 * 1000 + 1000)), // +1h +1ms
       (5L, 8L, "purchase", t0) // other user: never counted
     ).toDF("event_id", "user_id", "event_type", "ts")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-range").toString
+    val tmp = tempDir("graft-range").toString
     rows.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val out = SparkEntry.queries("range_join_purchases_1h")(spark, tmp)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * physical node): planned via the injected strategy, equivalent to the
   * composed dedup_minhash pipeline, and optimized by the threshold-
   * pushdown rule. */
-class SimilarityJoinSpec extends AnyFunSuite {
+class SimilarityJoinSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
@@ -59,7 +59,7 @@ class SimilarityJoinSpec extends AnyFunSuite {
       (6L, "ä ö ß strasse ä ö ß strasse ä ö ß strasse"),
       (7L, "")
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-simadv").toString
+    val tmp = tempDir("graft-simadv").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val composed = SparkEntry.queries("dedup_minhash")(spark, tmp)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

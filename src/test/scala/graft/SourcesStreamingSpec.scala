@@ -9,12 +9,12 @@ import java.sql.Timestamp
 /** S7 (JSON file source — the reference's OAuth token file) and the
   * streaming form of T2's late-data watermark (the D-3 delay of
   * tarefa_popular_fila_trafego.php:7-9 as `withWatermark` + windowed agg). */
-class SourcesStreamingSpec extends AnyFunSuite {
+class SourcesStreamingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("S7: single-object JSON file reads as one row (config.php token file)") {
-    val dir = Files.createTempDirectory("graft-json")
+    val dir = tempDir("graft-json")
     val f = dir.resolve("token.json")
     Files.writeString(f,
       """{"access_token": "APP-123", "expires_in": 21600, "scope": "read"}""")

@@ -26,13 +26,13 @@ import scala.jdk.CollectionConverters._
   * coarser batch grain (fold batches 1..k into one row per key) — same
   * upsert path, bounded growth.
   */
-class StreamingIvmSpec extends AnyFunSuite {
+class StreamingIvmSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("foreachBatch partial-merge view equals full recompute; batch replay is idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-ivm").toString
+    val dir = tempDir("graft-ivm").toString
     val path = s"$dir/sku_totals_partials"
 
     def mergeBatch(df: DataFrame, batchId: Long): Unit = {

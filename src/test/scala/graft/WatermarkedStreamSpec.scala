@@ -13,7 +13,7 @@ import java.time.LocalDateTime
   * channel exactly once, and batch replay restates instead of
   * duplicating (the PipelineStreamingSpec contract applied to the
   * watermark worker). */
-class WatermarkedStreamSpec extends AnyFunSuite {
+class WatermarkedStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -26,7 +26,7 @@ class WatermarkedStreamSpec extends AnyFunSuite {
       rows.toDF("order_id", "event_time", "amount"))
 
   test("kill mid-drain, resume: daily totals exact, late row in the error channel exactly once") {
-    val base = Files.createTempDirectory("graft-wm-stream")
+    val base = tempDir("graft-wm-stream")
     val flat = base.resolve("events").toString
     val wh = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString

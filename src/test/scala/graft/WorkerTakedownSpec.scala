@@ -21,12 +21,12 @@ import java.nio.file.Files
   * under the DuckDB oracle (`msb_ingest_takedown_rebucket`) and
   * through a real checkpoint ([[MultiSignalIngestStreamSpec]]); these
   * cases pin the same semantics on the single-signal workers. */
-class WorkerTakedownSpec extends AnyFunSuite {
+class WorkerTakedownSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def wh(): String =
-    Files.createTempDirectory("graft-takedown").resolve("wh").toString
+    tempDir("graft-takedown").resolve("wh").toString
 
   /** 30 distinct words from one vocabulary; one-word variants sit at
     * 3-gram Jaccard ≈ 0.93 ≥ 0.8 (the near-dup constructions the
@@ -40,7 +40,7 @@ class WorkerTakedownSpec extends AnyFunSuite {
     Seq.tabulate(64)(d => if (d == i) 1f else if (d == j) eps else 0f)
 
   test("DedupIngest: a removed doc's exact copy is re-admitted") {
-    val base = Files.createTempDirectory("graft-dedup-takedown")
+    val base = tempDir("graft-dedup-takedown")
     val flat = base.resolve("in").toString
     val w = base.resolve("wh").toString
     val ckpt = base.resolve("ckpt").toString

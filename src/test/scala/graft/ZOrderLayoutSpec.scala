@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the 2-D skipping that justifies it — fewer rows scanned for a box
   * query than a single-dimension layout with the same file count.
   */
-class ZOrderLayoutSpec extends AnyFunSuite {
+class ZOrderLayoutSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -73,7 +73,7 @@ class ZOrderLayoutSpec extends AnyFunSuite {
   }
 
   test("zorderWrite round-trips the data and bounds per-file boxes") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder").toString
     val li = Tables.lineitem(spark, TestSpark.sf0001)
       .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
     LayoutOps.zorderWrite(li, "l_partkey", "l_suppkey", dir, 8)
