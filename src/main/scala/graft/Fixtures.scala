@@ -2,10 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileVisitOption, Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
-/** Derived fixtures materialized once per scale factor under
-  * `.fixtures/<sf-basename>/` in the repo working directory.
+/** Declared derived fixtures, built before any clock starts
+  * ([[ensureAll]]) under `<graft.fixtures.dir>/<sf-basename>-<digest>/`
+  * (default `.fixtures/` in the working directory). The digest keys
+  * each fixture on its source's path AND the (name, size, mtime) of the
+  * source's data files, so a source regenerated at the same path gets
+  * a fresh build. No query result is cached here: every registered
+  * query computes its own result in the call.
   *
   * The reference's sales ingest receives *nested* order payloads
   * (`order_items[]`, tarefa_coletar_financas.php:126); the driver fixtures
@@ -18,20 +24,27 @@ import java.nio.file.{Files, Path, Paths}
 object Fixtures {
   private def root = sys.props.getOrElse("graft.fixtures.dir", ".fixtures")
 
-  private def dirFor(sfDir: String, name: String): String = {
-    val abs = Paths.get(sfDir).toAbsolutePath.normalize.toString
+  private def dirFor(sfDir: String, source: String, name: String): String = {
+    val abs = Paths.get(sfDir).toAbsolutePath.normalize
     // Key on the full absolute path (hashed), not just the basename —
-    // two datasets both named `sf0.1` must not share a cache entry.
+    // two datasets both named `sf0.1` must not share a cache entry —
+    // plus the source's data files, sorted, so a rewrite in place misses.
+    val walk = Files.walk(abs.resolve(source), FileVisitOption.FOLLOW_LINKS)
+    val stats =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+        s"${abs.relativize(p)}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
+      }.toList.sorted
+      finally walk.close()
     val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = Paths.get(sfDir).getFileName.toString
-    s"$root/$base-$digest/$name"
+      .digest((abs.toString +: stats).mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(8)
+    s"$root/${abs.getFileName}-$digest/$name"
   }
 
   /** lineitem regrouped as one row per order with ARRAY<STRUCT> items —
     * the MELI order-detail payload shape (FIXTURES.md "order"). */
   def nestedOrders(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = dirFor(sfDir, "nested_orders")
+    val dir = dirFor(sfDir, "lineitem.parquet", "nested_orders")
     this.synchronized {
       if (!Files.exists(Paths.get(dir, "_SUCCESS"))) {
         Tables
@@ -51,45 +64,6 @@ object Fixtures {
   def ensureAll(spark: SparkSession, sfDir: String): Unit = {
     nestedOrders(spark, sfDir)
     ()
-  }
-
-  /** CONTENT-keyed parquet cache: read `$root/$family/$key` if a committed
-    * image exists, else materialize `build` there and read it back.
-    *
-    * Unlike [[dirFor]] (keyed on the dataset *path*), the caller derives
-    * `key` from a fingerprint of the data itself, so a regenerated fixture
-    * at the same path (the round-6 testdata trap) can never serve a stale
-    * image — it lands in a fresh directory and the old one simply goes
-    * cold. Intended for expensive DETERMINISTIC artifacts reused across
-    * runs (the lossless dedup truth set): correctness never depends on a
-    * hit, only cost does.
-    *
-    * Crash/concurrency safety: the build writes to a unique scratch dir,
-    * then publishes with a directory rename (atomic on one filesystem). A
-    * loser of a publish race discards its scratch and reads the winner's
-    * committed image — both are the same deterministic result. A crash
-    * mid-write leaves only an unpublished scratch dir, never a readable
-    * half-image; `_SUCCESS` inside the published dir guards the remaining
-    * window (rename of a dir written without job commit markers).
-    */
-  private[graft] def cachedParquet(
-      spark: SparkSession, family: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val dir = Paths.get(root, family, key)
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
-      val scratch = Paths.get(
-        root, family, s".tmp-$key-${java.util.UUID.randomUUID().toString.take(8)}")
-      build.write.mode("overwrite").parquet(scratch.toString)
-      try {
-        Files.createDirectories(dir.getParent)
-        Files.move(scratch, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } catch {
-        case _: java.nio.file.FileSystemException =>
-          // Another process published first (or rename raced): keep theirs.
-          deleteRecursively(scratch)
-      }
-    }
-    spark.read.parquet(dir.toString)
   }
 
   /** Scratch dirs whose contents a lazily read query result still

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Reproducible `.explain` evidence: dumps the formatted physical plan of
@@ -135,15 +134,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Sessions.tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("4", logLevel = "ERROR")
 
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan evidence for the headline queries\n\n"

@@ -119,6 +119,22 @@ object Tables {
 }
 
 object Sessions {
+  /** The local session the CLI entry points start from (Bench keeps
+    * its own): `local[cpus]` with as many shuffle partitions, UTC,
+    * nanos-as-long parquet reads, UI off, then [[tune]]d. */
+  def local(cpus: String, logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    tune(spark)
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Session tuning every entry point applies. Idempotent. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -252,11 +268,9 @@ object Exprs {
     pm(s"$h1 * 48271 + 11")
   }
 
-  /** Seeded member of the [[phash]] family (seed prefixed into the input —
-    * avoids 64-bit modular multiplication overflow entirely). */
-  def phashSeeded(seed: Column, c: Column): Column =
-    phash(concat(seed.cast(StringType), lit(":"), c))
-
+  /** Seeded member of the [[phash]] family, as SQL (seed prefixed into
+    * the input — avoids 64-bit modular multiplication overflow
+    * entirely). */
   def phashSeededSql(seed: String, x: String): String =
     phashSql(s"CAST($seed AS VARCHAR) || ':' || $x")
 }

@@ -1,6 +1,5 @@
 package graft
 import graft.obs.Obs
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc single-query timer for perf iteration: same measurement
   * discipline as [[Bench]] (noop write, cache cleared between runs,
@@ -13,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Sessions.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     Fixtures.ensureAll(spark, sfDir)
     val metrics = Obs.install(spark)
     // Warm ALL requested queries once at sf0.001 BEFORE any timing: in a

@@ -432,7 +432,7 @@ object DedupOps extends OpModule {
     * 47 → 36 MB exchanged and ~4 s warm at sf0.1 (the join form ran
     * ~10 s); the doc-keyed rank window then re-partitions once, and
     * the node-sized `sizes` join broadcasts. Shared by
-    * `dedup_prefix_filter` and (as the truth set) `dedup_lsh_recall`.
+    * `dedup_prefix_filter` and (as the truth set) [[lshRecall]].
     *
     * Cache-lifetime contract: callers persist `ex` for the duration of
     * the returned plan (it feeds sizes, dfs, prefixes AND the verify —
@@ -464,92 +464,33 @@ object DedupOps extends OpModule {
     jaccardPairsFromRows(cand, ex, sizes, 0.8)
   }
 
-  /** 128-bit content fingerprint of a (doc_id, text) corpus, as a cache
-    * key string: row count plus two independent seeded-[[phash]] XOR folds
-    * over `doc_id||\u0001||text`. XOR is order- and partitioning-
-    * independent (no shuffle-order nondeterminism) and overflow-free
-    * (ANSI-safe); the count breaks the even-multiplicity blind spot of a
-    * pure XOR fold. One cheap scan — 2 md5 per document.
-    *
-    * Collision posture: keys only gate a CACHE of a deterministic
-    * artifact, and a collision needs two corpora agreeing on both
-    * independent 60-bit folds AND the count — not constructible by the
-    * data this engine ingests, and a miss merely recomputes. */
-  private[graft] def corpusFingerprint(docs: DataFrame): String = {
-    // MEMO behind a (plan, file-stat) signature (round-7 advice nit: the
-    // content scan ran on every invocation just to derive a cache key,
-    // rivaling the cached artifact's cost at bench SFs). The memo key is
-    // the CANONICALIZED plan string (two relations over the same files
-    // with different filters — the sampled recall variant — must not
-    // collide) plus the sorted (path, size, mtime) list of the relation's input
-    // files — a regenerated fixture at the same path changes
-    // size-or-mtime, so the memo can never serve a stale CONTENT key. A
-    // non-file relation (inputFiles empty) or an unstattable path skips
-    // the memo and scans, keeping the content contract unconditional.
-    val stats = docs.inputFiles.sorted.map { f =>
-      try {
-        val p = java.nio.file.Paths.get(new java.net.URI(f).getPath)
-        val sz = java.nio.file.Files.size(p)
-        val mt = java.nio.file.Files.getLastModifiedTime(p).toMillis
-        s"$f|$sz|$mt"
-      } catch { case _: Exception => "" }
-    }
-    if (stats.isEmpty || stats.contains("")) contentFingerprint(docs)
-    else {
-      // FULL canonicalized plan string, not its 32-bit hashCode: two
-      // distinct plans over the same files (different filters) colliding
-      // on the hash would silently serve the wrong content fingerprint —
-      // and that key gates Fixtures.cachedParquet, so the failure mode is
-      // wrong cached results with no error. The string is driver-memory
-      // cheap (plans here are a scan + a filter). Caveat: toString elides
-      // fields past spark.sql.debug.maxToStringFields (default 25), so a
-      // very wide plan could in principle still collide on the string —
-      // the 2-column corpus plans here stay far under that.
-      val planKey = docs.queryExecution.analyzed.canonicalized.toString
-      fingerprintMemo.computeIfAbsent(
-        s"$planKey#${stats.mkString(";")}", _ => contentFingerprint(docs))
-    }
-  }
-
-  private val fingerprintMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def contentFingerprint(docs: DataFrame): String = {
-    val v = concat_ws("\u0001", col("doc_id"), col("text"))
-    val r = docs
-      .select(v.as("v"))
-      .agg(
-        count(lit(1)).as("n"),
-        call_function("bit_xor", graft.Exprs.phashSeeded(lit(1), col("v"))).as("x1"),
-        call_function("bit_xor", graft.Exprs.phashSeeded(lit(2), col("v"))).as("x2"))
-      .head()
-    if (r.getLong(0) == 0L) "empty"
-    else f"${r.getLong(0)}%x-${r.getLong(1)}%016x-${r.getLong(2)}%016x"
-  }
-
-  /** The lossless J ≥ 0.8 truth set over `docs`, served from a
-    * content-keyed parquet cache ([[graft.Fixtures.cachedParquet]]) —
-    * round-6 directive: repeated benches/audits pay the prefix-filter
-    * join once per corpus IMAGE, not once per run. The key is
-    * [[corpusFingerprint]], so a regenerated fixture at the same path
-    * recomputes (never stale); the family name pins the shingle width
-    * and threshold so a retuned contract can't read an old image.
-    * Returns (doc_a, doc_b, jaccard). */
-  private[graft] def cachedTruth08(s: SparkSession, docs: DataFrame): DataFrame = {
-    // The persist handle outlives the by-name build block: cachedParquet
-    // materializes (writes) the result inside the call, so the unpersist
-    // below runs strictly after the one action that needs `ex` — and not
-    // at all on a cache hit, where the block never evaluates.
-    var ex: DataFrame = null
-    val out = graft.Fixtures.cachedParquet(s, "truth-w4-j08-v1", corpusFingerprint(docs)) {
-      ex = docs
-        .select(col("doc_id"), expr("shingle_explode(text, 4)").as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ex.count()
-      prefixPairs08(ex)
-    }
-    if (ex != null) ex.unpersist()
-    out
+  /** (n_truth, n_found, recall) of the (16 bands × 4 rows) LSH
+    * candidates over `docs` against the lossless J ≥ 0.8 truth set,
+    * both computed in the call from ONE persisted shingle-row relation:
+    * the truth set is [[prefixPairs08]] over it and the band signatures
+    * are hashed from the same rows. Candidates and truth pairs are each
+    * distinct, so one left join counts both sides in one aggregate.
+    * recall is NULL (not NaN) on a corpus with zero J ≥ 0.8 pairs — 0/0
+    * would otherwise poison downstream comparisons silently. */
+  private def lshRecall(docs: DataFrame): DataFrame = {
+    val ex = docs
+      .select(col("doc_id"), expr("shingle_explode(text, 4)").as("sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    ex.count()
+    // Persist the BAND SIGNATURES too: `candidates` self-joins them, and
+    // they are the narrowest relation (16 skinny rows/doc) that stops
+    // the minhash aggregate running twice.
+    val bands = bandSigsFromRows(ex, 16, 4)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    bands.count()
+    prefixPairs08(ex)
+      .join(candidates(bands).withColumn("hit", lit(true)),
+        Seq("doc_a", "doc_b"), "left")
+      .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_found"))
+      .select(col("n_truth"), col("n_found"),
+        when(col("n_truth") > 0,
+          col("n_found").cast(DoubleType) /
+            col("n_truth").cast(DoubleType)).as("recall"))
   }
 
   /** Row-form twin of [[jaccardPairs]] for array-free pipelines: `ex` is
@@ -578,6 +519,21 @@ object DedupOps extends OpModule {
        |SELECT doc_a, doc_b, jaccard FROM scored
        |WHERE jaccard >= $thresh ORDER BY doc_a, doc_b""".stripMargin
 
+  /** (src, dst) edges in BOTH directions of each (a, b) pair, emitted
+    * in ONE narrow pass (r17): an explode of a two-struct array. The
+    * old union-of-two-selects referenced the pair pipeline twice, which
+    * r16 patched with an intermediate pair cache (one redundant full
+    * pass of the band self-join + shingle co-count otherwise — ~30 MB
+    * of the survivors query's 75 MB shuffle, ~1.7 s at sf0.1); here a
+    * caller persists the symmetric list itself, and each of the
+    * fixpoint's references is one cache scan. */
+  private[graft] def symmetricEdges(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs
+      .select(explode(array(
+        struct(col(a).as("src"), col(b).as("dst")),
+        struct(col(b).as("src"), col(a).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
   /** Symmetric near-dup edges at minhash settings (used by survivors).
     * Persisted AND eagerly materialized: the caller references the edge
     * list once per label-propagation round, and a lazy cache would make
@@ -587,20 +543,10 @@ object DedupOps extends OpModule {
     val sets = shingled(s, d, 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Obs.phase(s, "shingles")(sets.count())
-    // BOTH directions emitted in ONE narrow pass (r17): the old
-    // union-of-two-selects referenced the pair pipeline twice, which
-    // r16 patched with an intermediate pair cache (one redundant full
-    // pass of the band self-join + shingle co-count otherwise — ~30 MB
-    // of the survivors query's 75 MB shuffle, ~1.7 s at sf0.1). The
-    // explode of a two-struct array needs NO second reference at all,
-    // so the intermediate cache, its materialization job, and its two
-    // scans are gone — the candidate + verify pipeline streams straight
-    // into the one persisted edge list.
-    val edges = jaccardPairs(candidates(bandSigs(sets, 32, 4)), sets, 0.8)
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    // the candidate + verify pipeline streams straight into the one
+    // persisted symmetric edge list ([[symmetricEdges]])
+    val edges = symmetricEdges(
+        jaccardPairs(candidates(bandSigs(sets, 32, 4)), sets, 0.8), "doc_a", "doc_b")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Obs.phase(s, "edges")(edges.count())
     sets.unpersist(blocking = false)
@@ -771,31 +717,23 @@ object DedupOps extends OpModule {
     * (occupancy-scaled cell cosine ≥ 0.4) edge sets — the shared
     * front-end of `dedup_multi_signal` and `ta_split_multi_signal`.
     * The fixture's embeddings share the documents' id space
-    * (vec_id = doc_id — TESTDATA's contract); both generators are the
-    * registered queries' own pipelines, LSH/cell-bounded at scale, and
-    * the union adds no shuffle (CC re-keys anyway). */
-  /** Multi-signal labels run CC on the COLLAPSED graph, not the raw
-    * edge union: every lexical cluster contracts to its representative
-    * (the stored 3-round assignment — the same content-key-cached
-    * artifact `ta_split_leakage_safe` reads, so the three consumers
-    * share ONE stored clustering, exactly how a production pipeline
-    * stores assignments once and derives from them), semantic pairs map
-    * endpoints to representatives, and the exact fixpoint closes over
-    * reps only. The collapsed graph is |clusters| nodes and
-    * |semantic pairs| edges — orders of magnitude below the raw union
-    * (the first-cut fixpoint over raw lexical edges measured 13 s at
-    * sf0.1; this shape is ~2 s warm) — and mixed-edge chains still
-    * collapse: a chain doc→lexdup→paraphrase walks rep-to-rep.
+    * (vec_id = doc_id — TESTDATA's contract).
+    *
+    * CC runs on the COLLAPSED graph, not the raw edge union: every
+    * lexical cluster contracts to its representative (the 3-round
+    * [[propagatedLabels3]] assignment, computed in the call),
+    * semantic pairs map endpoints to representatives, and the exact
+    * fixpoint closes over reps only. The collapsed graph is |clusters|
+    * nodes and |semantic pairs| edges — orders of magnitude below the
+    * raw union (the first-cut fixpoint over raw lexical edges measured
+    * 13 s at sf0.1) — and mixed-edge chains still collapse: a chain
+    * doc→lexdup→paraphrase walks rep-to-rep.
     * Final label = rep-closure label of the doc's lexical label; the
     * union component's min doc_id is itself some lexical label, so
     * labels equal the raw-union CC's (lexical part at the family's
     * registered 3-round horizon). */
   private[graft] def multiSignalLabels(s: SparkSession, d: String): DataFrame = {
-    val lex = graft.Fixtures.cachedParquet(
-      s, "neardup-labels3-mh32x4-j08-v1",
-      corpusFingerprint(Tables.documents(s, d))) {
-      propagatedLabels3(s, d)
-    }
+    val lex = propagatedLabels3(s, d)
     val cells = embeddingCells(s, d)
     val aS = cells.select(col("vec_id").as("va_id"), col("cell"),
       col("v").as("va"), col("norm").as("na"))
@@ -811,17 +749,9 @@ object DedupOps extends OpModule {
       .join(lex.select(col("doc_id").as("dst"), col("label").as("rd")), "dst")
       .filter(col("rs") =!= col("rd"))
       .select(col("rs").as("src"), col("rd").as("dst"))
-    // both directions in ONE narrow pass (r17), so the persisted
-    // relation is the symmetric edge list itself: the fixpoint
-    // references its edges more than once (size probe + propagation),
-    // and each reference is now one cache scan instead of two plus a
-    // union of the old directed-pair cache.
-    val repEdges = semRep
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
+    // the fixpoint references its edges more than once (size probe +
+    // propagation): persist the symmetric list itself
+    val repEdges = symmetricEdges(semRep, "src", "dst").persist()
     val repLabels =
       try
         survivorsToFixpoint(
@@ -1046,36 +976,9 @@ object DedupOps extends OpModule {
     // number on this corpus. Both engines replay identical signatures,
     // so the recall itself is engine-exact. ──
     "dedup_lsh_recall" -> Q(
-      (s, d) => {
-        // Truth set from the content-keyed cache (round-6 directive): the
-        // first run on a corpus image pays the lossless prefix-filter join
-        // and publishes it; every later run — bench run 2, the isolated
-        // child, the next session — reads the committed parquet. The
-        // oracle recomputes from scratch every time, so a hit is proven
-        // identical on every verify. Candidates stay live: they're the
-        // thing under test.
-        val docs = Tables.documents(s, d)
-        val truth = cachedTruth08(s, docs).select(col("doc_a"), col("doc_b"))
-        val ex = docs
-          .select(col("doc_id"), expr("shingle_explode(text, 4)").as("sh"))
-        // Persist the BAND SIGNATURES, not the shingle rows: `candidates`
-        // self-joins them, and this is the narrowest relation (16 skinny
-        // rows/doc) that stops the minhash pipeline running twice.
-        val bands = bandSigsFromRows(ex, 16, 4)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        bands.count()
-        val cand = candidates(bands)
-        val t = truth.agg(count(lit(1)).as("n_truth"))
-        val f = truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
-          .agg(count(lit(1)).as("n_found"))
-        // recall is NULL (not NaN) on a corpus with zero J≥0.8 pairs —
-        // 0/0 would otherwise poison downstream comparisons silently
-        t.crossJoin(f).select(
-          col("n_truth"), col("n_found"),
-          when(col("n_truth") > 0,
-            col("n_found").cast(DoubleType) /
-              col("n_truth").cast(DoubleType)).as("recall"))
-      },
+      // Truth set and candidates both computed in the call; the oracle
+      // recomputes both from scratch independently.
+      (s, d) => lshRecall(Tables.documents(s, d)),
       Some(s"""WITH sh AS MATERIALIZED (${shingledSql(4)}),
               |s AS MATERIALIZED (SELECT doc_id, shingles, len(shingles) AS sz
               |      FROM sh WHERE len(shingles) > 0),
@@ -1111,27 +1014,7 @@ object DedupOps extends OpModule {
       (s, d) => {
         val sampled = Tables.documents(s, d)
           .where(pmod(phash(col("text")), lit(4L)) === 0L)
-        // Same content-keyed truth cache as the full-corpus recall: the
-        // fingerprint is computed over the SAMPLED (doc_id, text) set, so
-        // the key is automatically distinct from the full corpus image
-        // and from any other sample spec — a changed corpus or sample
-        // recomputes, an unchanged one reads the committed parquet.
-        val truth = cachedTruth08(s, sampled).select(col("doc_a"), col("doc_b"))
-        val ex = sampled
-          .select(col("doc_id"), expr("shingle_explode(text, 4)").as("sh"))
-        val bands = bandSigsFromRows(ex, 16, 4)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        bands.count()
-        val cand = candidates(bands)
-        val nd = sampled.agg(count(lit(1)).as("n_docs"))
-        val t = truth.agg(count(lit(1)).as("n_truth"))
-        val f = truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
-          .agg(count(lit(1)).as("n_found"))
-        nd.crossJoin(t).crossJoin(f).select(
-          col("n_docs"), col("n_truth"), col("n_found"),
-          when(col("n_truth") > 0,
-            col("n_found").cast(DoubleType) /
-              col("n_truth").cast(DoubleType)).as("recall"))
+        sampled.agg(count(lit(1)).as("n_docs")).crossJoin(lshRecall(sampled))
       },
       Some(s"""WITH docs_s AS (
               |  SELECT doc_id, text FROM documents
@@ -1523,20 +1406,12 @@ object DedupOps extends OpModule {
     // bucket is the portable content-hash family over the cluster id,
     // so both engines (and every rerun) place every cluster
     // identically. Scale: one hash per row on top of the cluster
-    // labeling — the split itself is map-only, and the labeling rides
-    // the content-keyed cache (the production pipeline splits over
-    // STORED cluster assignments, not a fresh clustering per split —
-    // same modeling as the recall truth set; a changed corpus
-    // recomputes, `dedup_survivors` itself always computes live). ──
+    // labeling, which is computed in the call — the split itself is
+    // map-only. ──
     "ta_split_leakage_safe" -> Q(
       (s, d) => {
-        val labels = graft.Fixtures.cachedParquet(
-          s, "neardup-labels3-mh32x4-j08-v1",
-          corpusFingerprint(Tables.documents(s, d))) {
-          propagatedLabels3(s, d)
-        }
         val bucket = pmod(phash(col("label").cast(StringType)), lit(10L))
-        labels
+        propagatedLabels3(s, d)
           .select(col("doc_id"), col("label").as("cluster_id"),
             when(bucket < 8, lit("train"))
               .when(bucket === 8, lit("val"))
@@ -1716,7 +1591,7 @@ object DedupOps extends OpModule {
     // the families separately and intersecting survivor sets does NOT
     // give this (chains through mixed edges survive both single-signal
     // passes). Computed on the COLLAPSED graph (see
-    // [[multiSignalLabels]]): stored 3-round lexical clusters contract
+    // [[multiSignalLabels]]): 3-round lexical clusters contract
     // to representatives, semantic edges walk rep-to-rep, and the
     // EXACT fixpoint closes over reps — the twin replays the identical
     // 3 lexical rounds plus a recursive closure, so nothing diverges.

@@ -68,9 +68,9 @@ object StreamingIngestOps extends OpModule {
     * processBatch, and the harness machinery is covered here and by
     * every kill/resume spec.
     *
-    * The drain runs at shuffle.partitions=2 (saved/restored around the
-    * synchronous AvailableNow window): the capped corpus's micro-batch
-    * states are a few hundred rows, AQE cannot coalesce inside a
+    * The synchronous AvailableNow window runs inside
+    * [[withMicroBatchConf]] (2 shuffle partitions): the capped corpus's
+    * micro-batch states are a few hundred rows, AQE cannot coalesce inside a
     * stream, and at 32 partitions every per-batch upsert schedules 32
     * tasks and lands 32 near-empty files that the NEXT batch re-reads —
     * measured as the dominant cost of these gates. Production sizes
@@ -102,22 +102,7 @@ object StreamingIngestOps extends OpModule {
       Files.move(part.head.toPath, target.toPath)
       target.setLastModified(mtime)
     }
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    val prevWsc = s.conf.get("spark.sql.codegen.wholeStage")
-    val prevFac = s.conf.get("spark.sql.codegen.factoryMode")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    // AQE off inside the drain window, same reasoning as
-    // [[driveTwoBatches]]: per-exchange stage jobs are the gate's
-    // dominant fixed cost at micro-batch sizes
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    // codegen off in the window too ([[driveTwoBatches]] has the
-    // numbers): every micro-batch's plan embeds its batch id, so no
-    // generated class is ever reused — the gate was paying a Janino
-    // compile per stage to process a few hundred rows
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withMicroBatchConf(s) {
       val q = run(s, flat, wh, ckpt)
       // awaitTermination(timeout) returns FALSE on timeout with the drain
       // still live — stop it and fail the gate loudly. Letting the
@@ -131,11 +116,6 @@ object StreamingIngestOps extends OpModule {
           s"streaming gate '$tag' did not drain within 300s; failing " +
             "instead of reading a partial warehouse")
       }
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      s.conf.set("spark.sql.codegen.wholeStage", prevWsc)
-      s.conf.set("spark.sql.codegen.factoryMode", prevFac)
     }
     wh
   }
@@ -154,51 +134,54 @@ object StreamingIngestOps extends OpModule {
       run: (DataFrame, Long, String) => Unit,
       mid: (String, DataFrame) => Unit = (_, _) => ()): String = {
     val wh = gateDir("direct").resolve("wh").toString
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    val prevWsc = s.conf.get("spark.sql.codegen.wholeStage")
-    val prevFac = s.conf.get("spark.sql.codegen.factoryMode")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    // AQE off for the drive window: at 2 shuffle partitions there is
-    // nothing for it to coalesce, and its per-exchange stage
-    // materialization schedules every tiny shuffle as its own job —
-    // measured as pure driver overhead at micro-batch state sizes
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    // CODEGEN off for the drive window: every micro-batch's plan embeds
-    // its batch id (`lit(batchId)`), so no generated class is ever
-    // reused across batches or runs — the gates were paying a Janino
-    // whole-stage compile per stage (~99 stages/run measured) to
-    // process a few hundred rows each, which is also exactly the
-    // JIT-warmth sensitivity that made fresh-JVM re-times diverge from
-    // session numbers. Interpreted mode is the right engine at
-    // micro-batch sizes; production batches are orders of magnitude
-    // past the crossover and keep codegen (this save/restore scopes
-    // the override to the drive window).
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    // the two parity batches derive from one cached upstream read
-    // instead of recomputing the source scan/join per batch. The
-    // narrow coalesce caps the cached partition count at the drive
-    // window's shuffle size: the fixture loaders spread single-file
-    // tables to defaultParallelism (right for the big batch queries),
-    // and every downstream cache scan here would otherwise schedule 32
-    // near-empty tasks per job — a real stream's micro-batch arrives as
-    // one file and never has this shape.
-    val cached = rows.coalesce(2).persist()
-    try {
-      run(cached.filter(col(idCol) % 2 === 0), 0L, wh)
-      // mid-stream hook: the lifecycle gate interposes replays and
-      // maintenance ops (takedown, rebucket) between the two batches
-      mid(wh, cached)
-      run(cached.filter(col(idCol) % 2 === 1), 1L, wh)
-    } finally {
-      cached.unpersist()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      s.conf.set("spark.sql.codegen.wholeStage", prevWsc)
-      s.conf.set("spark.sql.codegen.factoryMode", prevFac)
+    withMicroBatchConf(s) {
+      // the two parity batches derive from one cached upstream read
+      // instead of recomputing the source scan/join per batch. The
+      // narrow coalesce caps the cached partition count at the drive
+      // window's shuffle size: the fixture loaders spread single-file
+      // tables to defaultParallelism (right for the big batch queries),
+      // and every downstream cache scan here would otherwise schedule 32
+      // near-empty tasks per job — a real stream's micro-batch arrives as
+      // one file and never has this shape.
+      val cached = rows.coalesce(2).persist()
+      try {
+        run(cached.filter(col(idCol) % 2 === 0), 0L, wh)
+        // mid-stream hook: the lifecycle gate interposes replays and
+        // maintenance ops (takedown, rebucket) between the two batches
+        mid(wh, cached)
+        run(cached.filter(col(idCol) % 2 === 1), 1L, wh)
+      } finally cached.unpersist()
     }
     wh
+  }
+
+  /** The gates' micro-batch conf window: `body` runs at these settings
+    * and the session's own values come back however it ends.
+    *  - 2 shuffle partitions: the capped corpus's batch states are a
+    *    few hundred rows (see [[drainTwoBatches]]).
+    *  - AQE off: at 2 partitions there is nothing for it to coalesce,
+    *    and its per-exchange stage materialization schedules every tiny
+    *    shuffle as its own job — measured as pure driver overhead at
+    *    micro-batch state sizes.
+    *  - Codegen off: every micro-batch's plan embeds its batch id
+    *    (`lit(batchId)`), so no generated class is ever reused across
+    *    batches or runs — the gates were paying a Janino whole-stage
+    *    compile per stage (~99 stages/run measured) to process a few
+    *    hundred rows each, which is also exactly the JIT-warmth
+    *    sensitivity that made fresh-JVM re-times diverge from session
+    *    numbers. Interpreted mode is the right engine at micro-batch
+    *    sizes; production batches are orders of magnitude past the
+    *    crossover and keep codegen. */
+  private def withMicroBatchConf[T](s: SparkSession)(body: => T): T = {
+    val window = Seq(
+      "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = window.map { case (k, _) => k -> s.conf.get(k) }
+    window.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => s.conf.set(k, v) }
   }
 
   def queries: Map[String, Q] = Map(

@@ -35,10 +35,11 @@ import scala.util.Try
   *     while the keyed write collapses them, booking the collapse as a
   *     phantom corpus dupe. Highest arrival order (`__seq`) wins,
   *     matching [[UpsertWriter]]'s within-batch tie-break.
-  *  3. `pairs-mat` + `cluster-fixpt`: the signal's DIRECTED pairs are
-  *     persisted (the symmetric union is then two cache scans instead
-  *     of two re-runs of the candidate join + verify), and min-label
-  *     propagation ([[DedupOps.survivorsToFixpoint]]) keeps one winner
+  *  3. `pairs-mat` + `cluster-fixpt`: the signal's directed pairs
+  *     become ONE persisted symmetric edge list
+  *     ([[DedupOps.symmetricEdges]], one pass of the candidate join +
+  *     verify), and min-label propagation
+  *     ([[DedupOps.survivorsToFixpoint]]) keeps one winner
   *     per cluster — the lowest key, a total order, so a replayed batch
   *     picks the same winners.
   *  4. `corpus-check`: winners the signal matches against the PRIOR
@@ -157,18 +158,17 @@ private[streaming] object Admission {
           val prior = stored.map(_.filter(col("first_admitted_batch") < batchId))
           val sig = signal(docs, nPrior + nBatch)
           try {
-            val pairs = sig.pairs.persist()
-            // the count that materializes the cache doubles as the
-            // fixpoint's size gate (skips its probe job); the fixpoint
-            // checkpoints eagerly, so the cache releases when it returns
-            val nPairs = Obs.phase(s, "pairs-mat")(pairs.count())
+            // the symmetric edge list, persisted once: the count that
+            // materializes the cache doubles as the fixpoint's size gate
+            // (skips its probe job); the fixpoint checkpoints eagerly, so
+            // the cache releases when it returns
+            val edges = DedupOps.symmetricEdges(sig.pairs, "src", "dst").persist()
+            val nEdges = Obs.phase(s, "pairs-mat")(edges.count())
             val labels = Obs.phase(s, "cluster-fixpt")(
               try DedupOps.survivorsToFixpoint(
-                docs.select(col(key).as("doc_id")),
-                pairs.unionByName(
-                  pairs.select(col("dst").as("src"), col("src").as("dst"))),
-                knownEdgeCount = Some(2L * nPairs))
-              finally pairs.unpersist())
+                docs.select(col(key).as("doc_id")), edges,
+                knownEdgeCount = Some(nEdges))
+              finally edges.unpersist())
             val winners = docs.join(
               labels.filter(col("is_survivor")).select(col("doc_id").as(key)),
               Seq(key), "left_semi")

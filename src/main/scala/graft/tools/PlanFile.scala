@@ -16,7 +16,7 @@ object PlanFile {
     require(args.length >= 3, "usage: PlanFile <outDir> <tag> <query>...")
     val (outDir, tag, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = LocalTool.sfDir
-    val spark = LocalTool.session(logLevel = "ERROR")
+    val spark = graft.Sessions.local(LocalTool.cpus, logLevel = "ERROR")
     Files.createDirectories(Paths.get(outDir))
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -127,7 +127,7 @@ object ScaleUp {
   /** args: srcDir dstDir factor */
   def main(args: Array[String]): Unit = {
     val Array(src, dst, kStr) = args.take(3)
-    val spark = LocalTool.session()
+    val spark = graft.Sessions.local(LocalTool.cpus)
     run(spark, src, dst, kStr.toInt)
     println(s"[scaleup] wrote ${dst} at ${kStr}x of ${src}")
     spark.stop()

@@ -48,7 +48,7 @@ object SinkDriver {
     "takedown" -> takedown, "interleave" -> interleave)
 
   def main(args: Array[String]): Unit = {
-    val spark = LocalTool.session()
+    val spark = graft.Sessions.local(LocalTool.cpus)
     val r = new Run(spark, Obs.install(spark), args.headOption.getOrElse(LocalTool.sfDir),
       args.lift(1).map(_.toInt).getOrElse(24))
     val reports = steps.map { case (name, step) => name -> Obs.phase(spark, name)(step(r)) }
