@@ -1,7 +1,11 @@
 package graft.sinks
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.StandardOpenOption.{CREATE, READ, WRITE}
+import scala.collection.mutable
 
 /** Checked mutual exclusion between a DRAIN window (streaming batches
   * that may replay) and a MAINTENANCE window (compact / truncate /
@@ -11,48 +15,64 @@ import java.nio.charset.StandardCharsets.UTF_8
   * batch's delta files mid-contract, and the replayed batch then
   * re-appends rows the compaction already merged.
   *
-  * The lease is a sibling marker file (`<table>.__drain-lease` /
-  * `<table>.__maint-lease`) holding `<holder>\n<epochMillis>`, written
-  * atomically (temp + same-directory rename, like every marker in this
-  * package). Exclusion is BETWEEN classes, not within one — single
-  * drain per table and single maintenance pass at a time are the
-  * package's existing conventions; what was unchecked is the cross:
+  * Exclusion is BETWEEN classes:
   *
-  *  - a maintenance op refuses to start while a FRESH drain lease is
-  *    held ([[withMaintenance]] checks, then takes its own lease);
-  *  - a writer merge/append refuses while a FOREIGN fresh maintenance
-  *    lease is held ([[requireNoForeignMaintenance]] — "foreign" means
-  *    not this thread's own maintenance pass, so compact's internal
-  *    rewrite and refit's reassignment merges pass their own gate).
+  *  - a maintenance op refuses to start while a drain window is open
+  *    ([[withMaintenance]]), and a drain refuses while a maintenance
+  *    window is open;
+  *  - a writer merge/append refuses while a FOREIGN maintenance window
+  *    is open ([[requireNoForeignMaintenance]] — "foreign" means not
+  *    this thread's own maintenance pass, so compact's internal rewrite
+  *    and refit's reassignment merges pass their own gate).
   *
-  * STALE-SAFE: a lease older than its TTL is a crashed holder — it is
-  * deleted (stolen) instead of wedging the table forever. The TTL is
-  * the recovery bound, not a correctness proof: a drain that crashed
-  * mid-batch may still REPLAY that batch after its lease expires, which
-  * a lease cannot see (nothing is running). That residual window is
-  * closed separately for the append path by [[UpsertWriter.compact]]'s
-  * folded-tag sidecar, which makes a replayed append idempotent across
-  * a compaction instead of relying on timing.
+  * Within a class, a second holder of the same kind is refused; the
+  * same holder re-acquiring is a no-op.
   *
-  * FILESYSTEM MODEL: the protocol requires POSIX rename semantics —
-  * same-directory `rename(2)` atomically replaces an existing target
-  * (the ATOMIC_MOVE healthy-heartbeat renewal) and is the
-  * linearization point of every tomb claim. On a filesystem where
-  * `ATOMIC_MOVE` is unsupported (some network mounts),
-  * `AtomicMoveNotSupportedException` fails the renewal loudly — there
-  * is deliberately NO non-atomic fallback, because a fallback would
-  * reintroduce the measured 344/3000 absence-window admissions the
-  * atomic form exists to close.
+  * KERNEL LOCKS: a window is held exactly while its holder holds an
+  * exclusive `fcntl` lock ([[java.nio.channels.FileLock]]) on the
+  * table's lock file for that kind, `<table>.__drain-lease` or
+  * `<table>.__maint-lease`. The kernel drops the lock when the holding
+  * process exits, however it exits, so:
   *
-  * CLOCK MODEL: lease ages compare a stored `System.currentTimeMillis`
-  * against the READER'S clock, so every soundness argument phrased as
-  * "the thief's qualifying read must come ≥ ttl/4 after ours" assumes
-  * all holders share one clock: a single host (the local[*] deployment
-  * this package targets), or hosts whose clocks are synchronized to
-  * well under ttl/4. On a shared warehouse mounted from multiple
-  * unsynchronized hosts, skew ≥ ttl/4 lets a healthy in-place renewal
-  * clobber a legal thief's fresh lease — deploy with synchronized
-  * clocks or a per-deployment TTL sized ≥ 4× the worst-case skew.
+  *  - a crashed holder's window frees the moment its process is gone;
+  *  - a live but hung holder is never stolen from — the operator kills
+  *    it;
+  *  - a lock file that no process holds grants nothing and refuses
+  *    nothing.
+  *
+  * There is no clock, no staleness bound and no renewal. A drain that
+  * crashed mid-batch may still REPLAY that batch after its window
+  * freed, which no lock can see (nothing is running). That window is
+  * closed for the append path by [[UpsertWriter.compact]]'s folded-tag
+  * sidecar, which makes a replayed append idempotent across a
+  * compaction. Lock files are never unlinked: a lock on an unlinked
+  * file still excludes holders of that inode only, so a later acquirer
+  * would lock a new file beside a live window. The file's content is
+  * the last holder's name, for refusal messages only.
+  *
+  * CROSS-KIND: an acquirer locks its own kind's file, then PROBES the
+  * opposite kind's (a shared `tryLock` plus release, on a channel
+  * opened without CREATE) and backs out if it is held. Each of two
+  * opposite-kind acquirers locks before it probes, so at least one sees
+  * the other: at most one proceeds, and both may back out (safe; the
+  * caller retries into an empty field). A probe holds the probed file's
+  * lock for one `tryLock`, so an acquirer of that kind racing it is
+  * refused — the safe side.
+  *
+  * ONE JVM: a JVM holds `fcntl` locks as one process. A second
+  * `tryLock` on a file it holds throws `OverlappingFileLockException`,
+  * and closing ANY channel on a lock file drops every lock the process
+  * holds on that file. So every window this JVM holds sits in one
+  * registry ([[held]]) under this object's monitor, with the one
+  * channel that holds it open for the window's lifetime. In-process
+  * conflicts are answered from the registry, and a lock file is opened
+  * — to lock or to probe — only under the monitor and only when the
+  * registry does not hold it. `graft.LeaseGuardSpec` keeps every file
+  * lock in the code base inside this object.
+  *
+  * FILESYSTEM MODEL: one host's local filesystem with POSIX `fcntl`
+  * locks — the deployment this package targets (scheduled jobs and
+  * streaming workers on one host writing one warehouse).
   */
 object TableLease {
 
@@ -66,392 +86,109 @@ object TableLease {
     private[sinks] val suffix = ".__maint-lease"
   }
 
-  /** Default staleness bound: a holder silent this long is crashed. A
-    * production drain's micro-batches and a maintenance rewrite both
-    * finish far inside it; a wedged table recovers without manual
-    * intervention after it. */
-  val DefaultTtlMs: Long = 15L * 60 * 1000
+  private def opposite(kind: Kind): Kind =
+    if (kind == Drain) Maintenance else Drain
 
-  private def leaseFile(path: String, kind: Kind): Path =
+  private def lockFile(path: String, kind: Kind): Path =
     Paths.get(path + kind.suffix)
 
-  /** (holder, ageMs) of the marker file at `f`, if one exists. An
-    * unreadable/garbled file reports age 0 with a diagnostic holder —
-    * treated as FRESH (refuse rather than steal what can't be read;
-    * the TTL still unwedges it once the file's mtime is old enough). */
-  private def readFile(f: Path): Option[(String, Long)] = {
-    if (!Files.exists(f)) None
-    else {
-      val now = System.currentTimeMillis()
-      try {
-        val lines = new String(Files.readAllBytes(f), UTF_8).split("\n")
-        Some((lines(0), now - lines(1).trim.toLong))
-      } catch {
-        case _: Exception =>
-          val mtime =
-            try Files.getLastModifiedTime(f).toMillis
-            catch { case _: Exception => now }
-          Some(("<unreadable lease>", now - mtime))
-      }
+  /** Registry key of a lock file: its directory's real path plus its
+    * name, so two spellings of one table path share one window. */
+  private def key(f: Path): Path = {
+    val abs = f.toAbsolutePath
+    try abs.getParent.toRealPath().resolve(abs.getFileName)
+    catch { case _: java.io.IOException => abs.normalize }
+  }
+
+  /** A window this JVM holds: its holder, and the one channel whose
+    * lock holds it. */
+  private final case class Held(holder: String, channel: FileChannel)
+
+  /** Every window this JVM holds, by lock-file [[key]]. Guarded by this
+    * object's monitor. */
+  private val held = mutable.Map.empty[Path, Held]
+
+  /** The holder name a lock file records (diagnostic only). */
+  private def content(ch: FileChannel): String = {
+    val buf = ByteBuffer.allocate(math.min(ch.size, 4096L).toInt)
+    ch.read(buf, 0L)
+    val s = new String(buf.array, 0, buf.position(), UTF_8).trim
+    if (s.isEmpty) "<unknown>" else s
+  }
+
+  /** Who holds the `kind` window on `path`, if anyone: this JVM's
+    * registry answers for its own windows; any other lock file is
+    * probed with a shared `tryLock` plus release on a channel that
+    * cannot create it. Caller holds the monitor. */
+  private def holderOf(path: String, kind: Kind): Option[String] = {
+    val f = lockFile(path, kind)
+    held.get(key(f)) match {
+      case Some(h) => Some(h.holder)
+      case None if !Files.exists(f) => None
+      case None =>
+        val ch = FileChannel.open(f, READ)
+        try {
+          val probe = ch.tryLock(0L, Long.MaxValue, true)
+          if (probe == null) Some(content(ch))
+          else { probe.release(); None }
+        } finally ch.close()
     }
   }
 
-  private def read(path: String, kind: Kind): Option[(String, Long)] =
-    readFile(leaseFile(path, kind))
-
-  /** THE MODULE CONTRACT (r16): the lease file of a LIVE window is
-    * NEVER absent — every read-only gate is therefore ONE lease-file
-    * read, deterministic, with no alignment windows and no probability
-    * argument anywhere in the protocol. Three mechanisms add up to it:
-    *
-    *  - HEALTHY heartbeats (age ≤ ttl − ttl/4, the overwhelming case)
-    *    refresh the payload in place with an atomic same-directory
-    *    REPLACE rename — adopted in r15 after the tomb-and-re-create
-    *    renewal was falsified by its own spec (10/3000 cross-process
-    *    gate admissions; correlated passes under a periodic adversary);
-    *  - the RARE exchanges that used to absent the file — a
-    *    near-boundary renewal, a stale claim's verify, a release —
-    *    serialize on a short-lived EXCHANGE LOCK ([[withExchangeLock]])
-    *    and then also mutate in place (replace or delete-when-ours),
-    *    never tomb-and-re-create. Adopted in r16 after the r15
-    *    sentinel-bracket defense of the boundary branch was likewise
-    *    falsified by measurement (11/3000 admissions through the
-    *    bracket's two-instant lease-then-sentinel read, even with a
-    *    completed-exchange re-read — the same correlated-adversary
-    *    failure class, one branch over);
-    *  - the only remaining absences are CONTRACTUALLY UNHELD states:
-    *    a never-acquired or released window, and a verified-stale
-    *    lease deleted under the exchange lock (the crashed holder the
-    *    TTL model already declares dead).
-    *
-    * [[graft.LeaseForkRaceSpec]] pins both hammers at zero admissions
-    * in 3000 cross-process gate reads — against a zero-work healthy
-    * heartbeat loop AND against back-to-back forced near-boundary
-    * renewals. */
-  private def readEffective(
-      path: String, kind: Kind, ttlMs: Long): Option[(String, Long)] =
-    read(path, kind)
-
-  /** Serialize a RARE lease-file exchange (near-boundary renewal,
-    * stale-claim verify, release) on `<lease>.__xlock` so the
-    * read-decide-mutate sequence is atomic against every other
-    * exchange on the same lease file — which is what lets each of them
-    * mutate IN PLACE (replace / delete) instead of tombing the file
-    * through an absence window a read-only gate could land in.
-    *
-    * The lock is held for a handful of file ops (µs); acquisition
-    * polls CREATE_NEW briefly and fails LOUDLY after `AcquireWaitMs`
-    * rather than blocking a writer behind a wedged lock. A lock left
-    * by a crashed holder (a kill inside the µs-scale critical
-    * section) is tomb-claimed once it is older than ttl/4 — the same
-    * "stalled ≥ ttl/4 between adjacent syscalls ⇒ outside the model,
-    * declared crashed" threshold the healthy in-place renewal already
-    * leans on, so the protocol has exactly one stall bound, not two.
-    * Never nested (no call inside `body` takes another exchange lock —
-    * locks are per lease file and each critical section touches one
-    * lease file only). */
-  private val AcquireWaitMs = 5000L
-  private def withExchangeLock[A](
-      f: Path, ttlMs: Long)(body: => A): A = {
-    val lock = f.resolveSibling(f.getFileName.toString + ".__xlock")
-    val staleMs = math.max(1000L, ttlMs / 4)
-    val deadline = System.currentTimeMillis() + AcquireWaitMs
-    var held = false
-    while (!held) {
-      if (f.getParent != null) Files.createDirectories(f.getParent)
-      try {
-        Files.write(lock, leasePayload("xlock"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        held = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val age = readFile(lock).map(_._2).getOrElse(0L)
-          if (age > staleMs) tombClaim(lock, staleMs)
-          else if (System.currentTimeMillis() > deadline)
-            throw new IllegalStateException(
-              s"exchange lock $lock held for ${age}ms and not yet " +
-                s"stale (bound ${staleMs}ms) — a concurrent exchange " +
-                "is wedged; retry after it is declared crashed")
-          else java.util.concurrent.locks.LockSupport.parkNanos(200000)
-      }
-    }
-    try body
-    finally Files.deleteIfExists(lock)
-  }
-
-  /** Atomically CLAIM a stale marker file (today: only a crashed
-    * exchange lock): rename it to a unique tomb, VERIFY the tombed
-    * content is actually stale, then drop the tomb. The rename is the
-    * claim's linearization point — of N concurrent claimants exactly
-    * one rename succeeds; a loser's throws NoSuchFileException (the
-    * file is already gone — claimed; report success, the creation race
-    * downstream decides the winner). The verify step closes the ABA
-    * window between the caller's read and the rename: if the crashed
-    * holder's file was meanwhile replaced by someone ELSE's fresh one,
-    * the rename tombed a LIVE window — restore it and report failure.
-    * NOT used on lease files anymore ([[claimStale]] re-verifies under
-    * the exchange lock instead, so a live lease is never even briefly
-    * absent); the tomb dance is the bootstrap primitive for the lock
-    * file itself, where no further serialization exists to stand on. */
-  private def tombClaim(f: Path, ttlMs: Long): Boolean = {
-    val tomb = f.resolveSibling(f.getFileName.toString +
-      s".tomb-${ProcessHandle.current().pid()}-" +
-      s"${Thread.currentThread().getId}-${System.nanoTime()}")
-    try Files.move(f, tomb)
-    catch { case _: java.nio.file.NoSuchFileException => return true }
-    val now = System.currentTimeMillis()
-    val ageMs =
-      try {
-        val lines = new String(Files.readAllBytes(tomb), UTF_8).split("\n")
-        now - lines(1).trim.toLong
-      } catch {
-        // unreadable content: age by mtime (preserved by the rename),
-        // exactly like [[read]] does for a garbled lease
-        case _: Exception =>
-          try now - Files.getLastModifiedTime(tomb).toMillis
-          catch { case _: Exception => 0L }
-      }
-    if (ageMs <= ttlMs) {
-      // tombed a LIVE file (refreshed/re-created between the caller's
-      // read and the rename): put it back and fail the claim. If a new
-      // file already appeared where it was, the restore loses — drop
-      // the tomb (that new file now owns the window) and still fail.
-      try Files.move(tomb, f)
-      catch { case _: Exception => Files.deleteIfExists(tomb) }
-      false
-    } else {
-      Files.deleteIfExists(tomb)
-      true
-    }
-  }
-
-  /** Claim a STALE lease file: re-verify its age under the exchange
-    * lock, then delete it in place. True = the field is clear (deleted
-    * here, or already gone); false = the lease is fresh again (someone
-    * renewed or re-created it since the caller's read) — refuse.
-    *
-    * Under the lock the read-verify-delete is atomic against every
-    * other exchange, so a FRESH lease is never deleted (the old
-    * tomb-rename form restored a tombed-live lease after the fact,
-    * which left a sentinel-less absence gap a gate read could land
-    * in). The non-serialized writers stay safe by the timestamp
-    * argument: a healthy in-place replace lands within syscalls of a
-    * read that saw age ≤ ttl − ttl/4, while this delete runs after a
-    * read that saw age > ttl — on one clock those reads are ≥ ttl/4
-    * apart, so the replace cannot land inside this critical section
-    * unless its holder stalled ≥ ttl/4 between two adjacent syscalls
-    * (outside the model, declared crashed); and a CREATE_NEW first
-    * acquisition cannot land while the file exists at all. */
-  private def claimStale(f: Path, ttlMs: Long): Boolean =
-    withExchangeLock(f, ttlMs) {
-      readFile(f) match {
-        case None => true
-        case Some((_, age)) if age > ttlMs =>
-          Files.deleteIfExists(f)
-          true
-        case _ => false
-      }
-    }
-
-  private def leasePayload(holder: String): Array[Byte] =
-    s"$holder\n${System.currentTimeMillis()}".getBytes(UTF_8)
-
-  /** Atomic first acquisition: CREATE_NEW open — exactly one creator
-    * wins; losers see FileAlreadyExistsException. (A rename without
-    * REPLACE_EXISTING is NOT atomic on POSIX — the existence check is
-    * separate from the rename — so creation, not rename, is the
-    * primitive here. A reader racing the content write sees a partial
-    * file, which [[read]] already treats as fresh-unreadable: it
-    * refuses rather than steals.) */
-  private def tryCreate(f: Path, holder: String): Boolean = {
-    if (f.getParent != null) Files.createDirectories(f.getParent)
-    try {
-      Files.write(f, leasePayload(holder),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    }
-  }
-
-  /** Refresh lease file `f`'s payload IN PLACE: fresh payload to a
-    * unique temp sibling, atomic same-directory REPLACE rename onto
-    * the lease file. The file is NEVER absent, so every read-only gate
-    * sees the held window deterministically ([[readEffective]]'s
-    * contract). ATOMIC_MOVE, not REPLACE_EXISTING: REPLACE without
-    * ATOMIC is implemented as unlink-target-then-rename — an absence
-    * window that re-opens the exact gap this form exists to close (the
-    * fork gate-hammer spec measured 344/3000 admissions through it).
-    * ATOMIC_MOVE maps to plain rename(2), which replaces an existing
-    * target atomically on POSIX. A failed write/rename (disk full,
-    * non-POSIX mount) fails the renewal loudly but must not leak the
-    * temp sibling beside the lease forever: it is deleted on the way
-    * out. */
-  private def replaceInPlace(f: Path, holder: String): Unit = {
-    val tmp = f.resolveSibling(f.getFileName.toString +
-      s".renew-${ProcessHandle.current().pid()}-" +
-      s"${Thread.currentThread().getId}-${System.nanoTime()}")
-    var moved = false
-    try {
-      Files.write(tmp, leasePayload(holder))
-      Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      moved = true
-    } finally if (!moved) Files.deleteIfExists(tmp)
-  }
-
-  /** Take the `kind` lease on `path` for `holder`, refusing loudly if
-    * the OPPOSITE kind is held fresh, or the SAME kind is held fresh by
-    * a different holder. A stale lease (older than `ttlMs`) is a
-    * crashed holder and is stolen — atomically: concurrent stealers
-    * serialize on the exchange lock for the verified delete
-    * ([[claimStale]]) and then race CREATE_NEW, so exactly one wins
-    * (the losers are refused, never silently co-admitted).
-    * Re-acquiring one's own FRESH lease refreshes its timestamp — the
-    * heartbeat a long drain rides ([[renewIfDraining]]). */
-  def acquire(
-      path: String, kind: Kind, holder: String,
-      ttlMs: Long = DefaultTtlMs): Unit = {
-    val opposite = if (kind == Drain) Maintenance else Drain
-    def refuseOpposite(h: String, age: Long): Nothing =
-      throw new IllegalStateException(
-        s"cannot open a $kind window on $path: a $opposite lease is " +
-          s"held by '$h' (${age / 1000}s old, ttl ${ttlMs / 1000}s) — " +
-          "wait for the window to close, or delete the lease file if " +
-          "the holder is known dead")
-    // one deterministic read: a live opposite window's lease file is
-    // never absent (the module contract), so absence here IS absence
-    readEffective(path, opposite, ttlMs).foreach { case (h, age) =>
-      if (age <= ttlMs) refuseOpposite(h, age)
-      // stale: crashed holder — claim atomically; a failed claim means
-      // the window was re-opened fresh under us, so refuse
-      if (!claimStale(leaseFile(path, opposite), ttlMs)) {
-        val (h2, age2) = read(path, opposite).getOrElse((h, 0L))
-        refuseOpposite(h2, age2)
-      }
-    }
-    val f = leaseFile(path, kind)
-    // SAME-kind read rides the same contract: a foreign holder's
-    // renewal never absents its lease file (in-place replace, healthy
-    // or lock-serialized near-boundary), so a concurrent acquirer can
-    // never walk into a spuriously "empty" field and CREATE_NEW-win a
-    // window whose legitimate holder was mid-heartbeat (caught by the
-    // forked-JVM race spec's renew rounds, not the same-JVM hammers:
-    // only a second process's acquire ever lands there).
-    readEffective(path, kind, ttlMs) match {
-      case Some((h, age)) if age <= ttlMs && h != holder =>
+  /** Take the `kind` window on `path` for `holder`, refusing loudly if
+    * the OPPOSITE kind is held, or the SAME kind is held by a different
+    * holder (in this JVM or another process). Re-acquiring one's own
+    * window is a no-op. */
+  def acquire(path: String, kind: Kind, holder: String): Unit =
+    synchronized {
+      val f = lockFile(path, kind)
+      Files.createDirectories(f.toAbsolutePath.getParent)
+      val k = key(f)
+      def refuse(why: String): Nothing =
         throw new IllegalStateException(
-          s"cannot open a $kind window on $path: another $kind lease is " +
-            s"held by '$h' (${age / 1000}s old) — two concurrent " +
-            s"$kind holders violate the single-writer contract")
-      case Some((_, age)) if age <= ttlMs - ttlMs / 4 =>
-        // HEALTHY heartbeat (the overwhelming case — per-write renewals
-        // keep the age at seconds against a minutes TTL): refresh one's
-        // OWN fresh lease IN PLACE, lock-free. Soundness of the
-        // replace: a thief may legally delete only a STALE lease
-        // (age > ttl, re-verified under the exchange lock), but this
-        // branch ran only because OUR read said age ≤ ttl − ttl/4 —
-        // the thief's qualifying read must come ≥ ttl/4 AFTER ours
-        // (same file, same stored timestamp, same clock — see the
-        // module doc's clock model), while our read-to-rename spans
-        // two adjacent file ops. Clobbering a thief would therefore
-        // take a ttl/4 stall between two syscalls — minutes at the
-        // default TTL, a holder the TTL model already declares
-        // crashed. Concurrent renewals by threads of the SAME holder
-        // commute (identical content modulo timestamp).
-        replaceInPlace(f, holder)
-      case Some((_, age)) if age <= ttlMs =>
-        // NEAR-BOUNDARY renewal (age inside the last ttl/4 — the
-        // heartbeat all but went stale, so a concurrent thief's
-        // stale-read may become legal within syscalls and a LOCK-FREE
-        // in-place replace could clobber its fresh lease): serialize
-        // on the exchange lock and re-verify. Under the lock the
-        // verify-then-replace is atomic against every stale claim and
-        // release, so the replace never clobbers a thief — and the
-        // lease file is still NEVER absent (the r15 form tombed and
-        // re-created it here behind a sentinel bracket; the r16 fork
-        // hammer measured 11/3000 cross-process gate admissions
-        // through that bracket's two-instant read and the exchange
-        // was replaced with this serialized in-place form, which the
-        // same hammer pins at zero).
-        withExchangeLock(f, ttlMs) {
-          readFile(f) match {
-            case Some((h, _)) if h == holder =>
-              replaceInPlace(f, holder)
-            case other =>
-              throw new IllegalStateException(
-                s"cannot renew the $kind lease on $path: the lease " +
-                  s"was taken by '${other.map(_._1).getOrElse("<gone>")}'" +
-                  " — the window was stolen at the TTL boundary")
+          s"cannot open a $kind window on $path: $why")
+      def sameKind(h: String): Nothing =
+        refuse(s"another $kind lease is held by '$h' — two concurrent " +
+          s"$kind holders violate the single-writer contract")
+      held.get(k) match {
+        case Some(h) if h.holder == holder => ()
+        case Some(h) => sameKind(h.holder)
+        case None =>
+          val ch = FileChannel.open(f, CREATE, READ, WRITE)
+          try {
+            if (ch.tryLock() == null) sameKind(content(ch))
+            held(k) = Held(holder, ch)
+            holderOf(path, opposite(kind)).foreach { h =>
+              refuse(s"a ${opposite(kind)} lease is held by '$h' — wait " +
+                "for the window to close, or kill the holder if it is hung")
+            }
+            ch.truncate(0L)
+            ch.write(ByteBuffer.wrap(holder.getBytes(UTF_8)), 0L)
+            ()
+          } catch {
+            case e: Throwable =>
+              held.remove(k)
+              ch.close() // drops the lock, if this channel took it
+              throw e
           }
-        }
-      case stale =>
-        // stale same-kind: claim the crashed holder's file (a failed
-        // claim = someone re-created it fresh; fall through — tryCreate
-        // loses and the winner check below surfaces them), then race to
-        // CREATE — exactly one concurrent acquirer wins
-        stale.foreach(_ => claimStale(f, ttlMs))
-        if (!tryCreate(f, holder)) {
-          // lost the creation race; surface the winner (same holder =
-          // another thread of this process re-entered — already held)
-          val winner = read(path, kind).map(_._1).getOrElse("<unknown>")
-          if (winner != holder)
-            throw new IllegalStateException(
-              s"cannot open a $kind window on $path: lost the " +
-                s"acquisition race to '$winner'")
-        }
-    }
-    // POST-win cross-kind double-check: the opposite gate above and our
-    // create are two files apart, so two OPPOSITE-kind acquirers can
-    // each pass the other's gate before either creates (the classic
-    // two-file TOCTOU). Both sides re-checking AFTER their create
-    // closes it: for both to proceed, each create would have to precede
-    // the other's check, and each check follows its own create — so at
-    // least one side sees the other's fresh lease here and backs out
-    // (releases its own, refuses loudly). Simultaneous starts can
-    // BOTH back out — safe, the caller retries into an empty field.
-    readEffective(path, opposite, ttlMs).foreach { case (h, age) =>
-      if (age <= ttlMs) {
-        release(path, kind, holder)
-        refuseOpposite(h, age)
       }
     }
-  }
 
-  /** Release `holder`'s lease. Releasing a lease someone else stole
-    * (after this holder went stale) is a no-op — the thief owns it.
-    *
-    * READ-AND-COMPARE first, lock-free: a foreign fresh lease (the
-    * common post-steal state) is never touched at all. Only when the
-    * content reads as OURS (or unreadable) does the serialized
-    * exchange run: under the exchange lock, re-verify ownership and
-    * delete in place. A thief that replaced the file between the
-    * outer read and the lock is seen by the re-verify and left alone —
-    * its window is never moved, tombed, or even briefly absent (the
-    * r15 form tombed first and restored after, a gap class the r16
-    * serialization removes entirely). The absence AFTER a successful
-    * delete is the contractually correct state: the window is over. */
-  def release(path: String, kind: Kind, holder: String): Unit = {
-    val f = leaseFile(path, kind)
-    readFile(f) match {
-      case None => ()
-      case Some((h, _)) if h != holder && h != "<unreadable lease>" => ()
-      case _ =>
-        withExchangeLock(f, DefaultTtlMs) {
-          readFile(f) match {
-            case Some((h, _)) if h == holder =>
-              Files.deleteIfExists(f)
-              ()
-            case _ => () // foreign, unreadable, or gone: not ours to remove
-          }
-        }
+  /** Release `holder`'s `kind` window on `path`. A window this JVM does
+    * not hold for `holder` is left alone. */
+  def release(path: String, kind: Kind, holder: String): Unit =
+    synchronized {
+      val k = key(lockFile(path, kind))
+      held.get(k).filter(_.holder == holder).foreach { h =>
+        held.remove(k)
+        h.channel.close() // closing the holding channel drops its lock
+      }
     }
-  }
 
   // ── enforcement hooks the writers call ──────────────────────────────
 
-  /** Paths whose maintenance lease THIS thread holds — so a maintenance
-    * pass's own internal writes (compact's rewrite, refit's
+  /** Paths whose maintenance window THIS thread holds — so a
+    * maintenance pass's own internal writes (compact's rewrite, refit's
     * reassignment merge) pass [[requireNoForeignMaintenance]] while
     * every other writer is refused. Thread-local because the package's
     * maintenance ops are synchronous driver-side calls; a streaming
@@ -463,13 +200,12 @@ object TableLease {
 
   /** Acquire `kind` on every path, ROLLING BACK the ones already taken
     * if a later acquire is refused — without this, a two-table window
-    * refused on its second table would leak the first table's lease
-    * until the TTL steals it, wedging that table's opposite class for
-    * the whole window. */
+    * refused on its second table would hold the first table's window
+    * until this process exits. */
   private def acquireAll(
-      paths: Seq[String], kind: Kind, holder: String, ttlMs: Long): Unit = {
-    val taken = scala.collection.mutable.ListBuffer.empty[String]
-    try paths.foreach { p => acquire(p, kind, holder, ttlMs); taken += p }
+      paths: Seq[String], kind: Kind, holder: String): Unit = {
+    val taken = mutable.ListBuffer.empty[String]
+    try paths.foreach { p => acquire(p, kind, holder); taken += p }
     catch {
       case e: Throwable =>
         taken.foreach(release(_, kind, holder))
@@ -478,7 +214,7 @@ object TableLease {
   }
 
   /** Run `body` inside a maintenance window over `paths`: refuse if any
-    * has a fresh drain lease, take maintenance leases on all (all-or-
+    * has a drain window open, take maintenance windows on all (all-or-
     * nothing), mark them owned for this thread, and always release.
     *
     * RE-ENTRANT per thread: a path this thread's OUTER maintenance
@@ -489,114 +225,18 @@ object TableLease {
     * survivors + index) take ONE window over all its tables and call
     * the per-table maintenance primitives ([[graft.sinks.UpsertWriter
     * .deleteWhere]]) inside it: the pair of deletes is then
-    * all-or-nothing against concurrent windows — a foreign lease on
+    * all-or-nothing against concurrent windows — a foreign window on
     * EITHER table refuses the whole op before the first delete runs,
     * never between them. */
-  def withMaintenance[A](
-      paths: Seq[String], holder: String,
-      ttlMs: Long = DefaultTtlMs)(body: => A): A = {
+  def withMaintenance[A](paths: Seq[String], holder: String)(body: => A): A = {
     val prev = ownMaintenance.get()
     val fresh = paths.filterNot(prev.contains)
-    acquireAll(fresh, Maintenance, holder, ttlMs)
+    acquireAll(fresh, Maintenance, holder)
     ownMaintenance.set(prev ++ fresh)
-    fresh.foreach(p => activeMaintenance.put(p, (holder, ttlMs)))
     try body
     finally {
-      fresh.foreach(activeMaintenance.remove)
       ownMaintenance.set(prev)
       fresh.foreach(release(_, Maintenance, holder))
-    }
-  }
-
-  /** Paths currently inside a [[withDrain]] window of THIS process,
-    * with their holder + ttl — so the write path can renew the drain
-    * lease on every state write ([[renewIfDraining]]). Process-global
-    * (not thread-local): the drain bracket runs on the orchestrator
-    * thread while foreachBatch writes run on stream-execution threads,
-    * and it is exactly those writes that must carry the heartbeat. */
-  private val activeDrains =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  /** HEARTBEAT: renew the drain lease on `path` if this process is
-    * inside a [[withDrain]] window over it. Without renewal, a drain
-    * whose batches legitimately outlive the TTL goes stale mid-run and
-    * a scheduled maintenance pass STEALS the lease and races the still-
-    * running drain — the exact hazard the lease exists to prevent.
-    * Re-acquiring one's own lease refreshes the timestamp, so calling
-    * this per state write bounds staleness by the gap between writes
-    * (≪ a batch) instead of the whole drain. Loud failure is the
-    * point: if the lease WAS stolen and a foreign maintenance window
-    * is open now, the renewal throws and the write never races it.
-    *
-    * Two exemptions keep the heartbeat from misfiring:
-    *  - a path whose MAINTENANCE lease this thread holds skips renewal
-    *    entirely — a maintenance pass that legitimately stole a
-    *    same-process wedged drain's stale lease would otherwise abort
-    *    on its own internal writes (its fresh Maintenance lease reads
-    *    as the "opposite window" to the drain renewal);
-    *  - a renewal racing the [[withDrain]] exit re-checks the registry
-    *    after acquiring and self-releases if the bracket already left —
-    *    otherwise the freshly re-created lease would be orphaned (the
-    *    bracket's release already ran) and wedge maintenance for a full
-    *    TTL against a holder that no longer exists. */
-  private[graft] def renewIfDraining(path: String): Unit = {
-    if (ownMaintenance.get().contains(path)) return
-    val e = activeDrains.get(path)
-    if (e != null) {
-      requireStillHeld(path, Drain, e._1, e._2)
-      acquire(path, Drain, e._1, e._2)
-      if (activeDrains.get(path) == null) release(path, Drain, e._1)
-    }
-  }
-
-  /** A heartbeat must RENEW a window, never silently re-open one that
-    * was lost: an ABSENT lease file at renewal time means a thief stole
-    * the stale lease and has since finished and released — without this
-    * check, acquire()'s stale/None path would simply re-create the
-    * lease and the long-running pass would resume over a table someone
-    * else legally mutated in between (for a maintenance pass, its
-    * pre-theft staged image would then fold away the thief's committed
-    * writes — permanent loss). A foreign holder, or a thief still
-    * INSIDE its stolen window, is left to acquire()'s own checks (their
-    * refusals carry the more useful who-holds-it message); absence with
-    * no fresh opposite window is the case only this check can see. */
-  private def requireStillHeld(
-      path: String, kind: Kind, holder: String, ttlMs: Long): Unit =
-    if (read(path, kind).isEmpty) {
-      val opposite = if (kind == Drain) Maintenance else Drain
-      val oppositeFresh = read(path, opposite).exists(_._2 <= ttlMs)
-      if (!oppositeFresh)
-        throw new IllegalStateException(
-          s"cannot renew the $kind lease on $path for '$holder': the " +
-            "lease file is gone — the window went stale, was stolen, and " +
-            "the thief has since released; the pass must abort (its view " +
-            "of the table predates the thief's writes), not resume")
-    }
-
-  /** Paths inside a [[withMaintenance]] window of THIS process — the
-    * maintenance twin of [[activeDrains]], so the long write phases of
-    * compact/rebucket/deleteWhere can carry a heartbeat too. */
-  private val activeMaintenance =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  /** Maintenance-side HEARTBEAT — the symmetric half of
-    * [[renewIfDraining]]: a maintenance rewrite whose staged write
-    * outlives the TTL (a 100 TB compact or rebucket legitimately can)
-    * would otherwise go stale mid-pass, be stolen by a drain's acquire,
-    * and keep mutating beside the live drain — its internal writes are
-    * exempted from [[requireNoForeignMaintenance]] by design, so
-    * nothing else would catch it. Called by the writers at the start of
-    * every mutation phase (staging committed, renames about to begin):
-    * a stolen window throws BEFORE any rename, leaving the committed
-    * staging for the next recover() to resolve under whoever owns the
-    * table then. No-op outside a [[withMaintenance]] window. */
-  private[graft] def renewIfMaintaining(path: String): Unit = {
-    val e = activeMaintenance.get(path)
-    if (e != null && ownMaintenance.get().contains(path)) {
-      requireStillHeld(path, Maintenance, e._1, e._2)
-      acquire(path, Maintenance, e._1, e._2)
-      if (activeMaintenance.get(path) == null)
-        release(path, Maintenance, e._1)
     }
   }
 
@@ -604,48 +244,23 @@ object TableLease {
     * orchestrator puts around a drain-and-stop streaming cycle so a
     * concurrently scheduled maintenance pass is refused instead of
     * racing the drain's replayable batches. Acquisition is
-    * all-or-nothing, like [[withMaintenance]]; while the window is
-    * open, every [[UpsertWriter]] write to one of `paths` renews the
-    * lease ([[renewIfDraining]]), so a drain longer than the TTL never
-    * goes stale between batches. Windows over one path don't nest. */
-  def withDrain[A](
-      paths: Seq[String], holder: String,
-      ttlMs: Long = DefaultTtlMs)(body: => A): A = {
-    acquireAll(paths, Drain, holder, ttlMs)
-    paths.foreach(p => activeDrains.put(p, (holder, ttlMs)))
+    * all-or-nothing, like [[withMaintenance]]. Windows over one path
+    * don't nest. */
+  def withDrain[A](paths: Seq[String], holder: String)(body: => A): A = {
+    acquireAll(paths, Drain, holder)
     try body
-    finally {
-      paths.foreach(activeDrains.remove)
-      paths.foreach(release(_, Drain, holder))
-    }
+    finally paths.foreach(release(_, Drain, holder))
   }
 
-  /** Writer-side gate: refuse the write while a fresh maintenance lease
-    * is held by anyone other than this thread's own maintenance pass.
-    * ONE deterministic read ([[readEffective]]'s contract): a live
-    * maintenance window's lease file is never absent — healthy
-    * renewals replace it in place and the rare exchanges are
-    * serialized in-place mutations under the exchange lock — so a
-    * bare lease read decides, with no sentinel scan and no residual
-    * window (both fork hammers pin this at 0/3000 cross-process
-    * admissions). */
-  private[graft] def requireNoForeignMaintenance(
-      path: String, ttlMs: Long = DefaultTtlMs): Unit =
+  /** Writer-side gate: refuse the write while a maintenance window is
+    * held by anyone other than this thread's own maintenance pass. */
+  private[graft] def requireNoForeignMaintenance(path: String): Unit =
     if (!ownMaintenance.get().contains(path))
-      readEffective(path, Maintenance, ttlMs).foreach { case (h, age) =>
-        def refuse(h2: String, age2: Long): Nothing =
-          throw new IllegalStateException(
-            s"write to $path refused: a maintenance window is open " +
-              s"(lease held by '$h2', ${age2 / 1000}s old) — a merge or " +
-              "append racing compact/truncate/refit would be folded or " +
-              "double-applied; retry after the window closes")
-        if (age <= ttlMs) refuse(h, age)
-        // stale holder: claim atomically — a plain delete here could
-        // remove a FRESH lease re-created between the read and the
-        // delete, unprotecting a live maintenance window
-        if (!claimStale(leaseFile(path, Maintenance), ttlMs)) {
-          val (h2, age2) = read(path, Maintenance).getOrElse((h, 0L))
-          refuse(h2, age2)
-        }
+      synchronized(holderOf(path, Maintenance)).foreach { h =>
+        throw new IllegalStateException(
+          s"write to $path refused: a maintenance window is open " +
+            s"(lease held by '$h') — a merge or append racing " +
+            "compact/truncate/refit would be folded or double-applied; " +
+            "retry after the window closes")
       }
 }

@@ -203,11 +203,6 @@ object UpsertWriter {
     * already promoted is no longer in staging; a leaf moved aside but
     * not promoted has no live directory and skips the rename-aside). */
   private def completePartitionSwap(path: String): Unit = {
-    // maintenance heartbeat before the renames begin: a pass whose
-    // staged write outlived the TTL aborts LOUDLY here (committed
-    // staging left for the next recover) instead of racing whoever
-    // stole the window. No-op outside a maintenance window.
-    TableLease.renewIfMaintaining(path)
     val pstaging = Paths.get(path + ".__pstaging")
     val oldparts = Paths.get(path + ".__oldparts")
     val root = Paths.get(path)
@@ -288,9 +283,6 @@ object UpsertWriter {
       writeStaging: String => Unit): Unit = {
     val staging = path + ".__staging"
     writeStaging(staging)
-    // maintenance heartbeat between the (possibly TTL-outliving) staged
-    // write and the renames — see [[completePartitionSwap]]
-    TableLease.renewIfMaintaining(path)
     Obs.phase(spark, "swap") {
       val target = Paths.get(path)
       if (Files.exists(target)) {
@@ -330,10 +322,6 @@ object UpsertWriter {
       s"table at $path is pinned ${pinnedBuckets(path).getOrElse(0)}-way " +
         "bucketed; merge it through upsertBucketed, not a plain upsert")
 
-    // heartbeat: a state write inside a withDrain window refreshes the
-    // drain lease, so a drain longer than the TTL never goes stale
-    // between batches (loud failure if the window was stolen meanwhile)
-    TableLease.renewIfDraining(path)
     TableLease.requireNoForeignMaintenance(path)
     schemaCache.remove(path) // a merge may grow the table schema
     recover(path)
@@ -478,25 +466,22 @@ object UpsertWriter {
   private def bucketMarker(path: String) =
     Paths.get(path + ".__buckets")
 
-  /** Pin the bucket count marker ATOMICALLY: temp sibling + same-dir
-    * rename. A plain `Files.write` can crash mid-write and leave an
-    * empty/partial marker that wedges every later call on an
-    * unparseable pin — the one file of the crash protocol that was not
-    * itself crash-safe. */
-  private def pinBuckets(path: String, numBuckets: Int): Unit = {
-    val marker = bucketMarker(path)
-    Files.createDirectories(marker.getParent)
-    val tmp = marker.resolveSibling(marker.getFileName.toString + ".tmp")
-    Files.write(tmp,
-      numBuckets.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // ATOMIC_MOVE: REPLACE_EXISTING alone is implemented as
-    // unlink-then-rename (measured by the lease fork spec), leaving a
-    // reader-visible absence window; rename(2) replaces atomically.
-    // Readers of this pin are lease-disciplined today — this is
-    // defense-in-depth for any future lock-free reader.
-    Files.move(tmp, marker,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  /** Replace the sidecar file `f` with `text` ATOMICALLY: temp sibling
+    * + same-directory `ATOMIC_MOVE`. A plain `Files.write` can crash
+    * mid-write and leave an empty/partial marker (an unparseable pin
+    * wedges every later call); `REPLACE_EXISTING` without
+    * `ATOMIC_MOVE` is unlink-then-rename, a window where readers see no
+    * file at all. `rename(2)` replaces the target in one step. */
+  private def writeAtomically(f: java.nio.file.Path, text: String): Unit = {
+    Files.createDirectories(f.toAbsolutePath.getParent)
+    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
+    Files.write(tmp, text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
+
+  /** Pin the bucket count marker (atomically — see [[writeAtomically]]). */
+  private def pinBuckets(path: String, numBuckets: Int): Unit =
+    writeAtomically(bucketMarker(path), numBuckets.toString)
 
   private def foldedMarker(path: String) =
     Paths.get(path + ".__folded-tags")
@@ -548,16 +533,8 @@ object UpsertWriter {
   private[graft] def recordFoldedTags(path: String, tags: Set[String]): Unit =
     writeFoldedTags(path, foldedTags(path) ++ tags)
 
-  private def writeFoldedTags(path: String, all: Set[String]): Unit = {
-    val tmp = foldedMarker(path)
-      .resolveSibling(foldedMarker(path).getFileName.toString + ".tmp")
-    Files.write(tmp, all.toSeq.sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // ATOMIC_MOVE for the same reason as [[pinBuckets]]: never a
-    // reader-visible absence of the replay-idempotence record
-    Files.move(tmp, foldedMarker(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeFoldedTags(path: String, all: Set[String]): Unit =
+    writeAtomically(foldedMarker(path), all.toSeq.sorted.mkString("\n"))
 
   /** Drop sidecar tags whose batches can NEVER replay: a tag of the
     * worker convention `b<id>` with id < `horizon` belongs to a batch
@@ -859,8 +836,6 @@ object UpsertWriter {
           "appends would sit outside the partition layout — merge " +
           "through upsert instead")
     }
-    // heartbeat: see [[upsert]] — per-write drain-lease renewal
-    TableLease.renewIfDraining(path)
     TableLease.requireNoForeignMaintenance(path)
     recover(path)
     // a tag a compaction already FOLDED is a crashed batch whose rows
@@ -1108,18 +1083,12 @@ object UpsertWriter {
     require(exists(path), s"no committed table at $path")
     import scala.jdk.CollectionConverters._
     val walk = Files.walk(Paths.get(path))
-    val (bytes, deltaTags) = {
-      val files =
-        try walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".parquet") &&
-            Files.isRegularFile(p)).toList
-        finally walk.close()
-      (files.map(Files.size).sum,
-        files.map(_.getFileName.toString)
-          .filter(_.startsWith("delta-"))
-          .map(_.stripPrefix("delta-").replaceAll("-\\d+\\.parquet$", ""))
-          .toSet)
-    }
+    val bytes =
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
+        .map(Files.size).sum
+      finally walk.close()
+    val deltaTags = deltaTagsUnder(Paths.get(path))
     // record folded append tags BEFORE the rewrite (see [[foldedTags]]):
     // a replayed append whose deltas this fold subsumes must become a
     // no-op, not a duplicate
@@ -1161,13 +1130,8 @@ object UpsertWriter {
   private def bucketEpochFile(n: Int) = s"_GRAFT_BUCKETS_$n"
 
   private def writeRebucketIntent(path: String, n: Int): Unit = {
-    val f = rebucketIntent(path)
-    if (f.getParent != null) Files.createDirectories(f.getParent)
-    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-    Files.write(tmp,
-      n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     swapFault()
-    Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    writeAtomically(rebucketIntent(path), n.toString)
   }
 
   /** Finish (or discard) a [[rebucket]] whose crash window split the
@@ -1196,8 +1160,8 @@ object UpsertWriter {
         pinBuckets(path, nb)
         swapFault()
         // deleteIfExists: two writers healing the same crashed rebucket
-        // (e.g. after a maintenance-lease steal) race this delete — the
-        // loser's heal must complete idempotently, not throw
+        // race this delete — the loser's heal must complete
+        // idempotently, not throw
         Files.deleteIfExists(epoch)
       }
     }
@@ -1216,7 +1180,7 @@ object UpsertWriter {
     *
     * One FULL crash-atomic rewrite (read, re-hash on `keys`, staged
     * write, whole-directory swap) under the MAINTENANCE lease: it
-    * refuses while a drain lease is fresh, and every writer refuses
+    * refuses while a drain window is open, and every writer refuses
     * while it runs. Folded-tag records CARRY FORWARD and every live
     * delta file's tag is recorded as folded before the swap (the
     * rewrite merges them), so a crashed batch replaying after the

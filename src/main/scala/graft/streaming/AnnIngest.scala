@@ -7,7 +7,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
 
 /** Continuous ANN-index maintenance — the IVF ingest loop every
   * embedding store runs: a fixed coarse quantizer assigns each arriving
@@ -66,7 +65,7 @@ object AnnIngest {
             // after — written once, before the index, so a crash
             // between the writes replays assignment against the
             // identical centroids)
-            if (!Files.exists(Paths.get(centroidsDir, "_SUCCESS"))) {
+            if (!Admission.committed(centroidsDir)) {
               val withN = fitCentroids(vecs, dim)
                 .withColumn("batch_id", lit(batchId))
               UpsertWriter.upsert(s, centroidsDir, withN,
@@ -260,8 +259,9 @@ object AnnIngest {
     * window BETWEEN AvailableNow drains (the package's operating mode —
     * every drain stops). Run concurrently with a live drain, refit's
     * merged image could be built from a read that predates the drain's
-    * latest commit and swap that batch away; plain parquet has no
-    * cross-process lock to prevent it (a lakehouse MERGE would).
+    * latest commit and swap that batch away. The maintenance window
+    * ([[graft.sinks.TableLease]]) refuses a refit while a drain window
+    * is open on the index or centroids, in any process.
     *
     * @param dim embedding width — must match the width [[start]] ran
     *            with (the re-fit folds into a `dim`-long zero vector;
@@ -271,8 +271,7 @@ object AnnIngest {
     val centroidsDir = s"$warehouseDir/ann_centroids"
     val indexDir = s"$warehouseDir/ann_index"
     requireNoActiveDrain(spark)
-    require(Files.exists(Paths.get(indexDir, "_SUCCESS")) &&
-        Files.exists(Paths.get(centroidsDir, "_SUCCESS")),
+    require(Admission.committed(indexDir) && Admission.committed(centroidsDir),
       s"refit needs a committed index and centroids under $warehouseDir")
     // checked maintenance window ([[graft.sinks.TableLease]]): a drain
     // bracketed in withDrain is refused here instead of raced — the
@@ -308,8 +307,9 @@ object AnnIngest {
     * mode is drain-and-stop, so "no active streams" is exactly the
     * maintenance window — cheap to check, loud when violated. (Session-
     * scoped: a drain driven from a different SparkSession over the same
-    * warehouse is invisible here — plain parquet has no cross-process
-    * lock; a lakehouse MERGE would. The doc contract still covers that.) */
+    * warehouse is invisible here; the maintenance window's kernel lock
+    * refuses a drain bracketed in `TableLease.withDrain`, in any
+    * process.) */
   private def requireNoActiveDrain(spark: SparkSession): Unit = {
     val active = spark.streams.active
     require(active.isEmpty,
@@ -400,8 +400,7 @@ object AnnIngest {
     val centroidsDir = s"$warehouseDir/ann_centroids"
     val indexDir = s"$warehouseDir/ann_index"
     requireNoActiveDrain(spark)
-    if (!Files.exists(Paths.get(indexDir, "_SUCCESS")) ||
-        !Files.exists(Paths.get(centroidsDir, "_SUCCESS"))) None
+    if (!Admission.committed(indexDir) || !Admission.committed(centroidsDir)) None
     else graft.sinks.TableLease.withMaintenance(
         Seq(centroidsDir, indexDir), s"refit:pid${
           ProcessHandle.current().pid()}") {

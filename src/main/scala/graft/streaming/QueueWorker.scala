@@ -3,7 +3,7 @@ package graft.streaming
 import graft.sinks.UpsertWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** SURVEY §2.9 T4 — the reference's queue-worker loop
   * (`tarefa_popular_fila_*` → `worker_*`: claim ≤ 50 `pendente` rows,
@@ -35,21 +35,13 @@ object QueueWorker {
       process: DataFrame => DataFrame,
       filesPerTrigger: Int = 1): StreamingQuery = {
 
-    val schema = spark.read.parquet(queueDir).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(queueDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Admission.start(spark, queueDir, checkpointDir, filesPerTrigger) {
+      (batch, batchId) =>
         val processed = process(batch)
           .withColumn("status", lit("concluido"))
           .withColumn("batch_id", lit(batchId))
         UpsertWriter.upsert(
           batch.sparkSession, stateDir, processed, keys, versionCol)
-      }
-      .start()
+    }
   }
 }

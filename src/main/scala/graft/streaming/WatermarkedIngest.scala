@@ -4,8 +4,7 @@ import graft.Exprs
 import graft.sinks.UpsertWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** SURVEY §2.9 T2 — the reference's D-3 late-data watermark
   * (tarefa_consolidar_dados.php:29 waits 3 days for ads metrics to
@@ -64,14 +63,8 @@ object WatermarkedIngest {
     val partialsDir = s"$warehouseDir/daily_partials"
     val lateDir = s"$warehouseDir/late_errors"
     val wmDir = s"$warehouseDir/wm_state"
-    val schema = spark.read.parquet(inputDir).schema
-
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Admission.start(spark, inputDir, checkpointDir, filesPerTrigger) {
+      (batch, batchId) =>
         val s = batch.sparkSession
         val withDay = batch
           .withColumn("event_day", to_date(col("event_time")))
@@ -79,7 +72,7 @@ object WatermarkedIngest {
         try {
           // cutoff from PRIOR batches only — deterministic under replay
           val cutoff: Option[java.time.LocalDate] =
-            if (!Files.exists(Paths.get(wmDir, "_SUCCESS"))) None
+            if (!Admission.committed(wmDir)) None
             else {
               val r = s.read.parquet(wmDir)
                 .filter(col("batch_id") < batchId)
@@ -139,11 +132,7 @@ object WatermarkedIngest {
               keys = Seq("batch_id"), versionCol = "batch_id")
           }
         } finally withDay.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   import org.apache.spark.sql.types._

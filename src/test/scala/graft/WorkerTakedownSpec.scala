@@ -3,7 +3,6 @@ package graft
 import graft.streaming.{AnnIngest, DedupIngest, EmbedIngest, NearDupIngest}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Right-to-be-forgotten across the WHOLE worker family: every ingest
   * worker exposes `takedown(spark, warehouseDir, predicate)` — a
@@ -156,17 +155,16 @@ class WorkerTakedownSpec extends AnyFunSuite with TempDirs {
     } finally MultiSignalIngest.takedownFault = () => ()
 
     // (a) the orphaned-index window, with the maintenance window closed
-    // (a real crash leaves stale leases that the TTL unwedges; the
+    // (a real crash frees the windows when its process exits; the
     // in-process injection releases through the bracket's finally)
     assert(MultiSignalIngest.survivors(spark, w)
       .filter($"doc_id" === 11L).count() == 0, "survivors delete ran first")
     val dangling = MultiSignalIngest.index(spark, w)
       .filter($"doc_id" === 11L).count()
     assert(dangling > 0, "crash case degenerated: no orphaned index rows")
-    assert(!Files.exists(java.nio.file.Paths.get(
-        s"$w/ms_survivors.__maint-lease")) &&
-      !Files.exists(java.nio.file.Paths.get(s"$w/ms_index.__maint-lease")),
-      "maintenance leases leaked across the injected crash")
+    // both windows reopen: no maintenance lease leaked across the crash
+    graft.sinks.TableLease.withDrain(
+      Seq(s"$w/ms_survivors", s"$w/ms_index"), "after-crash") { () }
 
     // (b) a lexical near-copy of removed 11 admits DESPITE the dangling
     // index rows; a near-copy of surviving 20 still drops
