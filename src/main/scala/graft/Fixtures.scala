@@ -7,11 +7,14 @@ import scala.jdk.CollectionConverters._
 
 /** Declared derived fixtures, built before any clock starts
   * ([[ensureAll]]) under `<graft.fixtures.dir>/<sf-basename>-<digest>/`
-  * (default `.fixtures/` in the working directory). The digest keys
-  * each fixture on its source's path AND the (name, size, mtime) of the
-  * source's data files, so a source regenerated at the same path gets
-  * a fresh build. No query result is cached here: every registered
-  * query computes its own result in the call.
+  * (default `.fixtures/` in the working directory). The digest keys the
+  * image on the sf dir's absolute path only; a stamp file beside each
+  * fixture holds a digest of the (name, size, mtime) of its source's
+  * data files, and a fixture whose stamp no longer matches is deleted
+  * and rebuilt in place, so a source regenerated at the same path gets
+  * a fresh build and leaves no superseded image behind. No query result
+  * is cached here: every registered query computes its own result in
+  * the call.
   *
   * The reference's sales ingest receives *nested* order payloads
   * (`order_items[]`, tarefa_coletar_financas.php:126); the driver fixtures
@@ -24,29 +27,36 @@ import scala.jdk.CollectionConverters._
 object Fixtures {
   private def root = sys.props.getOrElse("graft.fixtures.dir", ".fixtures")
 
-  private def dirFor(sfDir: String, source: String, name: String): String = {
+  private def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(8)
+
+  /** The image dir of fixture `name` for `sfDir`, and the stamp its
+    * build must carry: a digest of `source`'s data files. */
+  private def imageOf(sfDir: String, source: String, name: String): (Path, String) = {
     val abs = Paths.get(sfDir).toAbsolutePath.normalize
-    // Key on the full absolute path (hashed), not just the basename —
-    // two datasets both named `sf0.1` must not share a cache entry —
-    // plus the source's data files, sorted, so a rewrite in place misses.
     val walk = Files.walk(abs.resolve(source), FileVisitOption.FOLLOW_LINKS)
     val stats =
       try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
         s"${abs.relativize(p)}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
       }.toList.sorted
       finally walk.close()
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest((abs.toString +: stats).mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
-    s"$root/${abs.getFileName}-$digest/$name"
+    // Key on the full absolute path (hashed), not just the basename —
+    // two datasets both named `sf0.1` must not share an image
+    (Paths.get(s"$root/${abs.getFileName}-${md5(abs.toString)}/$name"),
+      md5(stats.mkString("\n")))
   }
 
   /** lineitem regrouped as one row per order with ARRAY<STRUCT> items —
     * the MELI order-detail payload shape (FIXTURES.md "order"). */
   def nestedOrders(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = dirFor(sfDir, "lineitem.parquet", "nested_orders")
+    val (dir, want) = imageOf(sfDir, "lineitem.parquet", "nested_orders")
+    val stamp = dir.resolveSibling("nested_orders.stamp")
     this.synchronized {
-      if (!Files.exists(Paths.get(dir, "_SUCCESS"))) {
+      // the stamp lands after the build: a crashed build has none
+      if (!Files.exists(stamp) || Files.readString(stamp) != want) {
+        Files.deleteIfExists(stamp)
+        deleteRecursively(dir)
         Tables
           .lineitem(spark, sfDir)
           .groupBy(col("l_orderkey"))
@@ -54,10 +64,11 @@ object Fixtures {
             sort_array(collect_list(struct(
               col("l_linenumber"), col("l_partkey"), col("l_quantity"),
               col("l_extendedprice")))).as("order_items"))
-          .write.mode("overwrite").parquet(dir)
+          .write.parquet(dir.toString)
+        Files.writeString(stamp, want)
       }
     }
-    spark.read.parquet(dir)
+    spark.read.parquet(dir.toString)
   }
 
   /** Pre-build every derived fixture (called by Bench before timing). */

@@ -116,15 +116,9 @@ object Pipeline {
     }
 
     // 4. occasional maintenance: bin-pack when the mart has accreted
-    // too many small files (each upsert emits up to a shuffle's worth).
-    // The walk stream is closed explicitly — a long-lived orchestrator
-    // JVM calls runDaily repeatedly, and unclosed directory streams
-    // leak file handles until GC.
+    // too many small files (each upsert emits up to a shuffle's worth)
     Obs.phase(spark, "maintenance") {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(martPath))
-      val files =
-        try walk.filter(p => p.toString.endsWith(".parquet")).count()
-        finally walk.close()
+      val files = UpsertWriter.dataFiles(java.nio.file.Paths.get(martPath)).size
       // the worker checkpoint (when a streamed co-writer exists) proves
       // the replay horizon, so maintenance BOUNDS the folded-tag sidecar
       // instead of only growing it: the compaction prunes when it fires,

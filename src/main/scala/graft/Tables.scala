@@ -56,16 +56,18 @@ object Tables {
         s"no parquet data file under $path to read a schema from"))
     val footer = new Footer(first.getPath, ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(first, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
-    // a file source surfaces every field nullable, as the read does
-    def nullable(t: DataType): DataType = t match {
-      case st: StructType =>
-        StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
-      case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
-      case other => other
-    }
     nullable(ParquetFileFormat.readSchemaFromFooter(
       footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))).asInstanceOf[StructType]
+  }
+
+  /** `t` with every field, element and value nullable, as a file
+    * source surfaces it. */
+  private[graft] def nullable(t: DataType): DataType = t match {
+    case st: StructType =>
+      StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")

@@ -155,6 +155,12 @@ object StreamingIngestOps extends OpModule {
     wh
   }
 
+  /** A gate's committed state table, read with its footer schema: the
+    * result's plan starts no schema-inference job outside the drain's
+    * phases. */
+  private def result(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(Tables.footerSchema(s, dir)).parquet(dir)
+
   /** The gates' micro-batch conf window: `body` runs at these settings
     * and the session's own values come back however it ends.
     *  - 2 shuffle partitions: the capped corpus's batch states are a
@@ -195,7 +201,7 @@ object StreamingIngestOps extends OpModule {
       (s, d) => {
         val wh = drainTwoBatches(s, "dedup", docSubset(s, d), "doc_id",
           Pipeline.runDedupIngest(_, _, _, _))
-        s.read.parquet(s"$wh/dedup_survivors")
+        result(s, s"$wh/dedup_survivors")
           .select(col("doc_id").cast(LongType),
             col("content_hash").cast(LongType),
             col("batch_id").cast(LongType))
@@ -229,7 +235,7 @@ object StreamingIngestOps extends OpModule {
       (s, d) => {
         val wh = driveTwoBatches(s, docSubset(s, d), "doc_id",
           (b, id, w) => graft.streaming.NearDupIngest.processBatch(b, id, w))
-        s.read.parquet(s"$wh/neardup_survivors")
+        result(s, s"$wh/neardup_survivors")
           .select(col("doc_id").cast(LongType),
             col("batch_id").cast(LongType))
       },
@@ -304,7 +310,7 @@ object StreamingIngestOps extends OpModule {
         val vecs = Tables.embeddings(s, d).filter(col("vec_id") < IdCap)
         val wh = driveTwoBatches(s, vecs, "vec_id",
           (b, id, w) => graft.streaming.AnnIngest.processBatch(b, id, w))
-        s.read.parquet(s"$wh/ann_index")
+        result(s, s"$wh/ann_index")
           .select(col("vec_id").cast(LongType),
             col("cell").cast(LongType),
             col("batch_id").cast(LongType))
@@ -357,7 +363,7 @@ object StreamingIngestOps extends OpModule {
         val wh = driveTwoBatches(s, vecs, "vec_id",
           (b, id, w) => graft.streaming.AnnIngest.processBatch(b, id, w))
         graft.streaming.AnnIngest.refit(s, wh)
-        s.read.parquet(s"$wh/ann_index")
+        result(s, s"$wh/ann_index")
           .select(col("vec_id").cast(LongType),
             col("cell").cast(LongType),
             col("batch_id").cast(LongType))
@@ -410,7 +416,7 @@ object StreamingIngestOps extends OpModule {
         val vecs = Tables.embeddings(s, d).filter(col("vec_id") < IdCap)
         val wh = driveTwoBatches(s, vecs, "vec_id",
           (b, id, w) => graft.streaming.EmbedIngest.processBatch(b, id, w))
-        s.read.parquet(s"$wh/embed_survivors")
+        result(s, s"$wh/embed_survivors")
           .select(col("vec_id").cast(LongType),
             col("sig").cast(LongType),
             col("batch_id").cast(LongType))
@@ -518,7 +524,7 @@ object StreamingIngestOps extends OpModule {
         val wh = drainTwoBatches(s, "ms", rows, "doc_id",
           (sp, in, w, ck) => graft.streaming.MultiSignalIngest
             .start(sp, in, w, ck))
-        s.read.parquet(s"$wh/ms_survivors")
+        result(s, s"$wh/ms_survivors")
           .select(col("doc_id").cast(LongType),
             col("batch_id").cast(LongType))
       },
@@ -546,7 +552,7 @@ object StreamingIngestOps extends OpModule {
         val wh = driveTwoBatches(s, rows, "doc_id",
           (b, id, w) => graft.streaming.MultiSignalIngest.processBatch(
             b, id, w, stateBuckets = Some(8)))
-        s.read.parquet(s"$wh/ms_survivors")
+        result(s, s"$wh/ms_survivors")
           .select(col("doc_id").cast(LongType),
             col("batch_id").cast(LongType))
       },
@@ -597,7 +603,7 @@ object StreamingIngestOps extends OpModule {
         assert(graft.sinks.UpsertWriter
           .pinnedBuckets(s"$wh/ms_survivors").contains(16),
           "rebucket must move the survivors pin to 16")
-        s.read.parquet(s"$wh/ms_survivors")
+        result(s, s"$wh/ms_survivors")
           .select(col("doc_id").cast(LongType),
             col("batch_id").cast(LongType))
       },

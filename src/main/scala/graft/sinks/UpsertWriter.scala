@@ -2,9 +2,10 @@ package graft.sinks
 
 import graft.Tables
 import graft.obs.Obs
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 
 /** Real write-path for the reference's sink operators (SURVEY §2.2):
@@ -50,6 +51,10 @@ import java.nio.file.{Files, Paths}
   * POSIX filesystems and HDFS; on an object store this layer maps to a
   * lakehouse table format instead (see above).
   *
+  * A write takes the table's schema from its first data file's footer
+  * ([[Tables.footerSchema]]: on the driver, no Spark job), read again
+  * on every call; nothing is memoized across calls.
+  *
   * Each write tags its own steps with [[Obs.phase]], so a caller's
   * [[Obs.Metrics]] split the sink's jobs and wall time without a
   * stopwatch of its own: `merge-write` (the merged image's staged write,
@@ -63,20 +68,6 @@ object UpsertWriter {
   /** Diagnostic lease-holder id for this process's maintenance ops. */
   private def maintHolder(op: String): String =
     s"$op:pid${ProcessHandle.current().pid()}"
-
-  /** Memoized table schema for [[append]]/[[appendBucketed]]'s
-    * compatibility check: a streaming worker appends the SAME schema
-    * every batch, and re-listing the table + sampling a footer per
-    * append is pure fixed overhead (measured ~0.1 s/call at gate
-    * scale). An append never changes the table schema (narrow batches
-    * are padded, growth is refused), so the entry stays valid across
-    * appends; every schema-changing write ([[upsert]], [[truncate]],
-    * [[compact]]) invalidates it at entry. Same-process only — which is
-    * exactly the single-writer contract's scope; a foreign writer
-    * changing the schema mid-stream is already excluded. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
 
   /** A table "exists" only when its last write COMMITTED (_SUCCESS
     * marker). A directory left by a crashed partial write is treated as
@@ -138,30 +129,36 @@ object UpsertWriter {
     * are deterministic). Marker deletion comes LAST so a crash inside
     * the quarantine itself simply re-runs it. */
   private def quarantineTornAppends(path: String): Unit = {
-    import scala.jdk.CollectionConverters._
     val table = Paths.get(path)
     val parent = table.toAbsolutePath.getParent
     val prefix = table.getFileName.toString + ".__apending-"
     if (parent == null || !Files.isDirectory(parent)) return
-    val list = Files.list(parent)
-    val markers =
-      try list.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(prefix)).toList
-      finally list.close()
-    markers.foreach { marker =>
+    listed(parent).filter(_.getFileName.toString.startsWith(prefix)).foreach { marker =>
       val tag = marker.getFileName.toString.stripPrefix(prefix)
-      if (Files.isDirectory(table)) {
-        val walk = Files.walk(table)
-        val torn =
-          try walk.iterator().asScala
-            .filter(p => Files.isRegularFile(p) &&
-              p.getFileName.toString.startsWith(s"delta-$tag-")).toList
-          finally walk.close()
-        torn.foreach { f => swapFault(); Files.delete(f) }
-      }
+      dataFiles(table).filter(_.getFileName.toString.startsWith(s"delta-$tag-"))
+        .foreach { f => swapFault(); Files.delete(f) }
       swapFault()
       Files.delete(marker)
     }
+  }
+
+  /** The entries of the directory `dir`. */
+  private def listed(dir: java.nio.file.Path): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val list = Files.list(dir)
+    try list.iterator().asScala.toList finally list.close()
+  }
+
+  /** The regular `.parquet` data files under `dir`, recursively; none
+    * when `dir` is absent. An IO error during the walk propagates. */
+  private[graft] def dataFiles(
+      dir: java.nio.file.Path): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    if (!Files.isDirectory(dir)) return Nil
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(p =>
+      p.getFileName.toString.endsWith(".parquet") && Files.isRegularFile(p)).toList
+    finally walk.close()
   }
 
   /** Leaf `col=value` partition directories under `root`, as paths
@@ -171,14 +168,10 @@ object UpsertWriter {
     * directories at all. */
   private def leafPartitionDirs(
       root: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    def partSubdirs(d: java.nio.file.Path): Seq[java.nio.file.Path] = {
-      if (!Files.isDirectory(d)) return Nil
-      val list = Files.list(d)
-      try list.iterator().asScala.filter(p =>
-        Files.isDirectory(p) && p.getFileName.toString.contains("=")).toSeq
-      finally list.close()
-    }
+    def partSubdirs(d: java.nio.file.Path): Seq[java.nio.file.Path] =
+      if (!Files.isDirectory(d)) Nil
+      else listed(d).filter(p =>
+        Files.isDirectory(p) && p.getFileName.toString.contains("="))
     def rec(d: java.nio.file.Path): Seq[java.nio.file.Path] = {
       val subs = partSubdirs(d)
       if (subs.isEmpty) { if (d == root) Nil else Seq(root.relativize(d)) }
@@ -256,10 +249,7 @@ object UpsertWriter {
       // files (the staging image is ordinary part files), so a
       // mid-swap re-run records the not-yet-swapped subset — already
       // in the sidecar from the normal path's pre-swap record.
-      val folded = leafPartitionDirs(pstaging)
-        .map(rel => deltaTagsUnder(Paths.get(path).resolve(rel)))
-        .foldLeft(Set.empty[String])(_ ++ _)
-      if (folded.nonEmpty) recordFoldedTags(path, folded)
+      foldDeltas(path, leafPartitionDirs(pstaging).map(_.toString))
       completePartitionSwap(path)
     } else {
       if (Files.exists(oldparts)) {
@@ -323,7 +313,6 @@ object UpsertWriter {
         "bucketed; merge it through upsertBucketed, not a plain upsert")
 
     TableLease.requireNoForeignMaintenance(path)
-    schemaCache.remove(path) // a merge may grow the table schema
     recover(path)
 
     // __seq: within-batch arrival order (partition-major), the tertiary
@@ -350,12 +339,11 @@ object UpsertWriter {
     def mergedImage(): DataFrame = if (!exists(path)) {
       dedup(seqd, keys, versionCol)
     } else {
-      // an unpartitioned table's schema is its first data file's footer,
-      // read on the driver (no inference job); partitioned and bucketed
-      // layouts keep Spark's inference, which adds the path columns
+      // the table's schema is its first data file's footer, read on the
+      // driver (no inference job); a partitioned layout's reader still
+      // discovers the partition columns from the paths
       val existing =
-        if (partitionColsOf(path).nonEmpty) spark.read.parquet(path)
-        else spark.read.schema(Tables.footerSchema(spark, path)).parquet(path)
+        spark.read.schema(Tables.footerSchema(spark, path)).parquet(path)
       // SCHEMA GROWTH disables partition pruning for this one merge: a
       // batch carrying a column the table lacks must rewrite EVERY
       // partition, because parquet has no table-level schema — a plain
@@ -397,9 +385,8 @@ object UpsertWriter {
         keys, versionCol)
     }
 
-    // the image is built inside `merge-write`: on a partitioned layout
-    // its existing-table read runs a schema inference job, which books
-    // to the write it serves
+    // the image is built inside `merge-write`, so the jobs of its
+    // existing-table read book to the write they serve
     def writeMerged(target: String): Unit = Obs.phase(spark, "merge-write") {
       val w = mergedImage().write.mode(SaveMode.Overwrite)
       if (partitionBy.isEmpty) w.parquet(target)
@@ -416,14 +403,9 @@ object UpsertWriter {
     // harmless (they never replay) and cheaper than telling them apart.
     // Recording happens BEFORE the swap: a crash in between leaves the
     // deltas live, so the skipped replay still serves every row.
-    if (partitionBy.nonEmpty && exists(path) && adopting) {
-      // layout adoption (see above): the merged image is the FULL
-      // table; the whole-directory swap replaces the old layout's
-      // files, which the touched-leaf swap would have left in place
-      val folded = deltaTagsUnder(Paths.get(path))
-      if (folded.nonEmpty) recordFoldedTags(path, folded)
-      swapIn(spark, path)(writeMerged)
-    } else if (partitionBy.nonEmpty && exists(path)) {
+    if (partitionBy.nonEmpty && !exists(path)) {
+      writeMerged(path)
+    } else if (partitionBy.nonEmpty && !adopting) {
       // Touched-partitions-only merge through a committed staging image
       // + per-leaf rename swap ([[completePartitionSwap]]). The image
       // holds exactly the touched partitions (the left-semi scope
@@ -444,16 +426,14 @@ object UpsertWriter {
       // merge in its replay window is a FULL rewrite (every leaf
       // touched), so a partial fold only ever happens to tags that
       // will never replay.
-      val folded = leafPartitionDirs(Paths.get(path + ".__pstaging"))
-        .map(rel => deltaTagsUnder(Paths.get(path).resolve(rel)))
-        .foldLeft(Set.empty[String])(_ ++ _)
-      if (folded.nonEmpty) recordFoldedTags(path, folded)
+      foldDeltas(path,
+        leafPartitionDirs(Paths.get(path + ".__pstaging")).map(_.toString))
       Obs.phase(spark, "swap")(completePartitionSwap(path))
-    } else if (partitionBy.nonEmpty) {
-      writeMerged(path)
     } else {
-      val folded = deltaTagsUnder(Paths.get(path))
-      if (folded.nonEmpty) recordFoldedTags(path, folded)
+      // unpartitioned, or layout adoption (see above): the merged image
+      // is the FULL table, and the whole-directory swap also replaces
+      // the old layout's files the touched-leaf swap would leave behind
+      foldDeltas(path)
       swapIn(spark, path)(writeMerged)
     }
   }
@@ -513,17 +493,9 @@ object UpsertWriter {
       .split("\n").map(_.trim).filter(_.nonEmpty).toSet
 
   /** Append-batch tags of the delta files under `dir` (recursively). */
-  private def deltaTagsUnder(dir: java.nio.file.Path): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.isDirectory(dir)) return Set.empty
-    val walk = Files.walk(dir)
-    try walk.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("delta-") && n.endsWith(".parquet"))
-      .map(_.stripPrefix("delta-").replaceAll("-\\d+\\.parquet$", ""))
-      .toSet
-    finally walk.close()
-  }
+  private def deltaTagsUnder(dir: java.nio.file.Path): Set[String] =
+    dataFiles(dir).map(_.getFileName.toString).filter(_.startsWith("delta-"))
+      .map(_.stripPrefix("delta-").replaceAll("-\\d+\\.parquet$", "")).toSet
 
   /** Record tags as folded, atomically (temp + rename), BEFORE the
     * fold's swap: if the fold crashes after this write the delta
@@ -532,6 +504,14 @@ object UpsertWriter {
     * never twice. */
   private[graft] def recordFoldedTags(path: String, tags: Set[String]): Unit =
     writeFoldedTags(path, foldedTags(path) ++ tags)
+
+  /** Record as folded the tags of the delta files under the `leaves`
+    * of the table at `path` (all of it by default): the step every
+    * rewrite that subsumes delta files takes before its swap. */
+  private def foldDeltas(path: String, leaves: Seq[String] = Seq("")): Unit = {
+    val tags = leaves.flatMap(l => deltaTagsUnder(Paths.get(path).resolve(l))).toSet
+    if (tags.nonEmpty) recordFoldedTags(path, tags)
+  }
 
   private def writeFoldedTags(path: String, all: Set[String]): Unit =
     writeAtomically(foldedMarker(path), all.toSeq.sorted.mkString("\n"))
@@ -637,14 +617,9 @@ object UpsertWriter {
     * the `replayHorizon` argument to [[compact]]/[[rebucket]] without
     * this layer ever reading the checkpoint on a write path. */
   def replayHorizon(checkpointDir: String): Option[Long] = {
-    import scala.jdk.CollectionConverters._
     val commits = Paths.get(checkpointDir, "commits")
     if (!Files.isDirectory(commits)) return None
-    val list = Files.list(commits)
-    val ids =
-      try list.iterator().asScala
-        .flatMap(p => p.getFileName.toString.toLongOption).toSeq
-      finally list.close()
+    val ids = listed(commits).flatMap(_.getFileName.toString.toLongOption)
     if (ids.isEmpty) None else Some(ids.max + 1)
   }
 
@@ -720,34 +695,37 @@ object UpsertWriter {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     TableLease.requireNoForeignMaintenance(path)
     recover(path)
-    if (Files.exists(bucketMarker(path))) {
-      val pinned = pinnedBuckets(path).get
-      require(pinned == numBuckets,
-        s"table at $path is bucketed $pinned ways; upsertBucketed($numBuckets) " +
-          "would strand keys in unscoped buckets — rewrite the table to re-bucket")
-    } else {
-      // adopting bucketing is a REWRITE, not a merge: an existing
-      // unbucketed table has no bucket directories for the pruned merge
-      // to swap, and pinning a marker over it would wedge the table
-      // (this call would then fail on the missing bucket column with
-      // plain upserts already refused by the marker guard) — fail
-      // clearly BEFORE any state changes instead
-      require(!exists(path),
-        s"table at $path exists unbucketed; adopting bucketing is a " +
-          "rewrite (read, bucket, write fresh), not an upsert")
-      // marker BEFORE the first merge: written the other way round, a
-      // crash between the first committed write and the marker would
-      // let the next call pin a DIFFERENT bucket count over existing
-      // data — the exact stranding this guard exists to refuse. The
-      // inverse crash (marker written, write never committed) merely
-      // pins the count early for a table that is still empty.
-      pinBuckets(path, numBuckets)
-    }
-    val bucketed = updates.withColumn(BucketCol,
-      pmod(xxhash64(keys.map(col): _*), lit(numBuckets.toLong)).cast("int"))
-    upsert(spark, path, bucketed, keys, versionCol,
-      partitionBy = Seq(BucketCol))
+    requirePin(path, numBuckets, s"upsertBucketed($numBuckets) would " +
+      "strand keys in unscoped buckets", "upsert")
+    upsert(spark, path, updates.withColumn(BucketCol, bucketOf(keys, numBuckets)),
+      keys, versionCol, partitionBy = Seq(BucketCol))
   }
+
+  /** The bucket of a row: `xxhash64(keys) pmod n`, an int. The one
+    * bucket rule every writer, reader and maintenance op derives from. */
+  private[graft] def bucketOf(keys: Seq[String], n: Int): Column =
+    pmod(xxhash64(keys.map(col): _*), lit(n.toLong)).cast("int")
+
+  /** A bucketed write of `n` ways needs the table pinned `n` ways, or
+    * no table yet, which this call pins now. Adopting bucketing is a
+    * REWRITE ([[rebucket]]), not a merge or append: an existing
+    * unbucketed table has no bucket directories to write into, and a
+    * pin over it would wedge the table (plain writes refused by the
+    * pin, bucketed ones failing on the missing column). The pin lands
+    * BEFORE the first write: the other way round, a crash between the
+    * first committed write and the pin would let the next call pin a
+    * DIFFERENT count over existing data, stranding keys in buckets a
+    * pruned merge never scopes. The inverse crash merely pins an empty
+    * table early. */
+  private def requirePin(path: String, n: Int, harm: String, op: String): Unit =
+    pinnedBuckets(path) match {
+      case Some(pinned) => require(pinned == n, s"table at $path is " +
+        s"bucketed $pinned ways; $harm — rewrite the table to re-bucket")
+      case None =>
+        require(!exists(path), s"table at $path exists unbucketed; adopting " +
+          s"bucketing is a rewrite (read, bucket, write fresh), not an $op")
+        pinBuckets(path, n)
+    }
 
   /** INSERT-ONLY bucketed append — the batch-bounded write form for rows
     * whose keys are KNOWN ABSENT from the table (a dedup worker's fresh
@@ -859,19 +837,8 @@ object UpsertWriter {
           "with truncate() or a fresh directory before reusing tags.")
       return false
     }
-    numBuckets.foreach { nb =>
-      if (Files.exists(bucketMarker(path))) {
-        val pinned = pinnedBuckets(path).get
-        require(pinned == nb,
-          s"table at $path is bucketed $pinned ways; appendBucketed($nb) " +
-            "would misplace keys — rewrite the table to re-bucket")
-      } else {
-        require(!exists(path),
-          s"table at $path exists unbucketed; adopting bucketing is a " +
-            "rewrite (read, bucket, write fresh), not an append")
-        pinBuckets(path, nb)
-      }
-    }
+    numBuckets.foreach(nb => requirePin(path, nb,
+      s"appendBucketed($nb) would misplace keys", "append"))
     val padded = if (!exists(path)) rows else {
       // an append cannot CHANGE the schema: new-column rows would land
       // as extra files while every other file lacks the column (the
@@ -880,8 +847,7 @@ object UpsertWriter {
       // the table unreadable outright (parquet readers refuse mixed
       // physical types for one column). Route any schema change through
       // upsertBucketed — the merge materializes one uniform image.
-      val existing = schemaCache.computeIfAbsent(path,
-        p => spark.read.parquet(p).schema)
+      val existing = Tables.footerSchema(spark, path)
       val existingTypes =
         existing.fields.map(f => f.name -> f.dataType).toMap
       val extra = rows.columns.toSet -- existingTypes.keySet
@@ -892,21 +858,9 @@ object UpsertWriter {
       // nullability-normalized compare: an in-memory batch often carries
       // containsNull/nullable = false where the parquet read reports
       // true — same physical type, not drift
-      def norm(dt: org.apache.spark.sql.types.DataType)
-          : org.apache.spark.sql.types.DataType = dt match {
-        case org.apache.spark.sql.types.ArrayType(e, _) =>
-          org.apache.spark.sql.types.ArrayType(norm(e), containsNull = true)
-        case org.apache.spark.sql.types.MapType(k, v, _) =>
-          org.apache.spark.sql.types.MapType(norm(k), norm(v),
-            valueContainsNull = true)
-        case org.apache.spark.sql.types.StructType(fs) =>
-          org.apache.spark.sql.types.StructType(fs.map(f =>
-            f.copy(dataType = norm(f.dataType), nullable = true)))
-        case other => other
-      }
       val retyped = rows.schema.fields
         .filter(f => existingTypes.get(f.name)
-          .exists(t => norm(t) != norm(f.dataType)))
+          .exists(_ != Tables.nullable(f.dataType)))
         .map(f => s"${f.name}: ${existingTypes(f.name).simpleString} -> " +
           f.dataType.simpleString)
       require(retyped.isEmpty,
@@ -927,11 +881,8 @@ object UpsertWriter {
       missing.foldLeft(rows)((df, f) =>
         df.withColumn(f.name, lit(null).cast(f.dataType)))
     }
-    val bucketed = numBuckets match {
-      case Some(nb) => padded.withColumn(BucketCol,
-        pmod(xxhash64(keys.map(col): _*), lit(nb.toLong)).cast("int"))
-      case None => padded
-    }
+    val bucketed = numBuckets.fold(padded)(nb =>
+      padded.withColumn(BucketCol, bucketOf(keys, nb)))
     // stage the batch image (partitioned by bucket, committed), then move
     // each staged file into its live bucket directory under the
     // deterministic per-batch name — deleting any same-tag leftovers of a
@@ -958,7 +909,6 @@ object UpsertWriter {
     val marker = Paths.get(path + ".__apending-" + batchTag)
     swapFault()
     Files.createFile(marker)
-    import scala.jdk.CollectionConverters._
     var moved = 0
     // bucketed: staged leaf partition dirs map onto live bucket dirs;
     // unbucketed: the staged root maps onto the table root
@@ -968,17 +918,10 @@ object UpsertWriter {
     stagedDirs.foreach { rel =>
       val liveLeaf = Paths.get(path).resolve(rel)
       Files.createDirectories(liveLeaf)
-      val stale = Files.list(liveLeaf)
-      val leftovers = try stale.iterator().asScala
+      listed(liveLeaf)
         .filter(_.getFileName.toString.startsWith(s"delta-$batchTag-"))
-        .toList
-      finally stale.close()
-      leftovers.foreach { f => swapFault(); Files.delete(f) }
-      val staged = Files.list(Paths.get(astaging).resolve(rel))
-      val parts = try staged.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally staged.close()
-      parts.zipWithIndex.foreach { case (f, i) =>
+        .foreach { f => swapFault(); Files.delete(f) }
+      dataFiles(Paths.get(astaging).resolve(rel)).zipWithIndex.foreach { case (f, i) =>
         swapFault()
         Files.move(f, liveLeaf.resolve(s"delta-$batchTag-$i.parquet"))
         moved += 1
@@ -1016,7 +959,6 @@ object UpsertWriter {
     * then recreate. */
   def truncate(spark: SparkSession, path: String): Unit =
       TableLease.withMaintenance(Seq(path), maintHolder("truncate")) {
-    schemaCache.remove(path)
     // a truncate resets the table's content history: folded-tag records
     // must not survive it, or a post-truncate ingest reusing a tag
     // (e.g. a fresh checkpoint restarting at batch 0) would have its
@@ -1037,20 +979,14 @@ object UpsertWriter {
     * first, read off the `col=value` directory chain. Empty for an
     * unpartitioned table. */
   private def partitionColsOf(path: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     @annotation.tailrec
-    def walk(dir: java.nio.file.Path, acc: List[String]): List[String] = {
-      val list = Files.list(dir)
-      val sub =
-        try list.iterator().asScala.find(p =>
-          Files.isDirectory(p) && p.getFileName.toString.contains("="))
-        finally list.close()
-      sub match {
+    def walk(dir: java.nio.file.Path, acc: List[String]): List[String] =
+      listed(dir).find(p =>
+          Files.isDirectory(p) && p.getFileName.toString.contains("=")) match {
         case Some(d) =>
           walk(d, acc :+ d.getFileName.toString.takeWhile(_ != '='))
         case None => acc
       }
-    }
     walk(Paths.get(path), Nil)
   }
 
@@ -1078,21 +1014,13 @@ object UpsertWriter {
       replayHorizon: Option[Long] = None): Unit =
       Obs.phase(spark, "compact")(
       TableLease.withMaintenance(Seq(path), maintHolder("compact")) {
-    schemaCache.remove(path) // mergeSchema may surface a union schema
     recover(path)
     require(exists(path), s"no committed table at $path")
-    import scala.jdk.CollectionConverters._
-    val walk = Files.walk(Paths.get(path))
-    val bytes =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-        .map(Files.size).sum
-      finally walk.close()
-    val deltaTags = deltaTagsUnder(Paths.get(path))
+    val bytes = dataFiles(Paths.get(path)).map(Files.size).sum
     // record folded append tags BEFORE the rewrite (see [[foldedTags]]):
     // a replayed append whose deltas this fold subsumes must become a
     // no-op, not a duplicate
-    if (deltaTags.nonEmpty) recordFoldedTags(path, deltaTags)
+    foldDeltas(path)
     // with a caller-proven horizon, the same maintenance pass bounds
     // the sidecar: tags of batches that committed their checkpoint are
     // dead guards ([[pruneFoldedTags]]). Ordering vs the swap is
@@ -1218,7 +1146,6 @@ object UpsertWriter {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
     require(keys.nonEmpty && !keys.contains(BucketCol),
       s"rebucket needs the table's merge keys, got [${keys.mkString(", ")}]")
-    schemaCache.remove(path)
     recover(path)
     require(exists(path), s"no committed table at $path")
     // sidecar bound, same contract as [[compact]]'s horizon prune
@@ -1230,34 +1157,25 @@ object UpsertWriter {
         s"rebucket on $path refused: the table is partitioned by " +
           s"[${physParts.mkString(", ")}]; only bucket-pinned or " +
           "unpartitioned layouts re-bucket")
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(Paths.get(path))
-      val dataFiles =
-        try walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".parquet") &&
-            Files.isRegularFile(p)).toList
-        finally walk.close()
-      if (dataFiles.isEmpty) {
+      val files = dataFiles(Paths.get(path))
+      if (files.isEmpty) {
         // empty committed table: no rows to move — re-pin atomically
         pinBuckets(path, newBuckets)
       } else {
-        val bytes = dataFiles.map(Files.size).sum
+        val bytes = files.map(Files.size).sum
         val full = spark.read.option("mergeSchema", "true").parquet(path)
         val missing = keys.filterNot(full.columns.contains)
         require(missing.isEmpty,
           s"rebucket keys [${missing.mkString(", ")}] not in the table's " +
             s"columns [${full.columns.mkString(", ")}]")
-        val folded = deltaTagsUnder(Paths.get(path))
-        if (folded.nonEmpty) recordFoldedTags(path, folded)
-        val hash = xxhash64(keys.map(col): _*)
-        val newB = pmod(hash, lit(newBuckets.toLong)).cast("int")
+        foldDeltas(path)
+        val newB = bucketOf(keys, newBuckets)
         val rebucketed = pinned match {
           case Some(oldN) =>
             // wrong-keys guard: rows whose stored bucket disagrees with
             // the re-derived hash fail the STAGING job (nothing swapped)
-            val oldB = pmod(hash, lit(oldN.toLong)).cast("int")
             full.withColumn(BucketCol,
-              when(col(BucketCol) === oldB, newB).otherwise(raise_error(
+              when(col(BucketCol) === bucketOf(keys, oldN), newB).otherwise(raise_error(
                 concat(
                   lit(s"rebucket($path): stored $BucketCol does not match " +
                     s"xxhash64(${keys.mkString(", ")}) % $oldN at key ("),
@@ -1315,25 +1233,18 @@ object UpsertWriter {
       replayHorizon: Option[Long] = None): Option[(Int, Int)] =
     pinnedBuckets(path) match {
       case Some(pinned) if exists(path) =>
-        import scala.jdk.CollectionConverters._
         // the sizing walk is deliberately LOCK-FREE (a healthy-table
         // check must not take the maintenance lease), so a concurrent
         // writer may remove files or whole leaf directories mid-walk —
-        // report what was measured so far (or 0) rather than throw;
-        // the next cycle re-measures. Both the per-file size and the
-        // traversal itself can race (Files.walk surfaces a vanished
-        // directory as UncheckedIOException from the iterator).
+        // count a vanished file as 0 bytes, or the whole table as 0 when
+        // the walk itself fails, rather than throw; the next cycle
+        // re-measures. Both the per-file size and the traversal can race
+        // (Files.walk surfaces a vanished directory as
+        // UncheckedIOException from the iterator).
         val bytes =
-          try {
-            val walk = Files.walk(Paths.get(path))
-            try walk.iterator().asScala
-              .filter(p => p.toString.endsWith(".parquet") &&
-                Files.isRegularFile(p))
-              .map(p => try Files.size(p)
-                catch { case _: java.io.IOException => 0L })
-              .sum
-            finally walk.close()
-          } catch {
+          try dataFiles(Paths.get(path)).map(p =>
+            try Files.size(p) catch { case _: java.io.IOException => 0L }).sum
+          catch {
             case _: java.io.IOException | _: java.io.UncheckedIOException =>
               0L
           }
@@ -1383,58 +1294,34 @@ object UpsertWriter {
   def deleteWhere(
       spark: SparkSession,
       path: String,
-      predicate: org.apache.spark.sql.Column): Long =
+      predicate: Column): Long =
       Obs.phase(spark, "delete")(
       TableLease.withMaintenance(Seq(path), maintHolder("deleteWhere")) {
-    schemaCache.remove(path)
     recover(path)
     require(exists(path), s"no committed table at $path")
-    // partition-type inference OFF for this op's internal reads and
-    // writes: the touched-leaf bookkeeping below maps partition VALUES
-    // back to directory NAMES, and inference breaks the round-trip —
-    // 'dia=01' reads as int 1 and would re-stage as a NEW 'dia=1' leaf
-    // next to the old one (duplication), a timestamp value re-renders
-    // with a fractional suffix its directory never had (missed
-    // emptied-leaf drop = failed takedown). With inference off,
-    // partition values are the exact (unescaped) directory strings, so
-    // value -> escapePathName(value) IS the writer's own encoding;
-    // typed predicates still work through Spark's implicit casts.
-    //
-    // The override lives on a NEW session (shared SparkContext, its own
-    // SQLConf), never on the caller's: the previous save/restore form
-    // toggled the caller's session for the whole op, and any concurrent
-    // batch query in that session saw partition columns change type
-    // mid-run. The caller session's FULL spark.sql.* runtime-conf delta
-    // is copied over, not a hand-picked allowlist (the earlier 7-conf
-    // list silently reverted anything else the caller tuned — parquet
-    // compression codec, maxRecordsPerFile, ANSI mode — so this op's
-    // staged rewrite came out with different file characteristics than
-    // every other write to the table). Static confs (warehouse dir,
-    // extensions) throw on set and are shared via the context anyway —
-    // skipped.
-    val ds = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (k.startsWith("spark.sql."))
-        try ds.conf.set(k, v) catch { case _: Exception => () }
-    }
-    ds.conf.set(
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    deleteWhereInternal(ds, path, predicate)
-  })
-
-  private def deleteWhereInternal(
-      spark: SparkSession,
-      path: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    val full = spark.read.option("mergeSchema", "true").parquet(path)
+    // partition columns declared STRING: the touched-leaf bookkeeping
+    // below maps partition VALUES back to directory NAMES, and type
+    // inference breaks the round-trip — 'dia=01' reads as int 1 and
+    // would re-stage as a NEW 'dia=1' leaf next to the old one
+    // (duplication), a timestamp value re-renders with a fractional
+    // suffix its directory never had (missed emptied-leaf drop = failed
+    // takedown). A declared partition type takes each value from its
+    // directory name without inference (SPARK-26188), so value ->
+    // escapePathName(value) IS the writer's own encoding; typed
+    // predicates still work through Spark's implicit casts. The data
+    // columns are the merged schema of every file (see [[compact]]).
+    val partCols = partitionColsOf(path)
+    val merged = spark.read.option("mergeSchema", "true").parquet(path).schema
+    val full = spark.read.schema(StructType(
+        merged.filterNot(f => partCols.contains(f.name)) ++
+          partCols.map(StructField(_, StringType))))
+      .parquet(path)
     // SQL DELETE semantics: remove where TRUE, keep FALSE and NULL
     val hit = coalesce(predicate, lit(false))
-    val partCols = partitionColsOf(path)
     if (partCols.isEmpty) {
       val nDel = full.filter(hit).count()
       if (nDel > 0) {
-        val folded = deltaTagsUnder(Paths.get(path))
-        if (folded.nonEmpty) recordFoldedTags(path, folded)
+        foldDeltas(path)
         val remaining = full.filter(!hit)
         swapIn(spark, path) { staging =>
           remaining.write.mode(SaveMode.Overwrite).parquet(staging)
@@ -1454,8 +1341,7 @@ object UpsertWriter {
         .agg(count(lit(1)).as("__n")).collect()
       if (perLeaf.isEmpty) 0L
       else {
-        val partSchema = org.apache.spark.sql.types.StructType(
-          full.select(partCols.map(col): _*).schema.fields)
+        val partSchema = full.select(partCols.map(col): _*).schema
         val touchedRows: Array[org.apache.spark.sql.Row] =
           perLeaf.map(r =>
             org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
@@ -1485,10 +1371,7 @@ object UpsertWriter {
               else org.apache.spark.sql.catalyst.catalog
                 .ExternalCatalogUtils.escapePathName(v.toString)}"
           }.mkString("/"))
-        val folded = relTouched
-          .map(rel => deltaTagsUnder(Paths.get(path).resolve(rel)))
-          .foldLeft(Set.empty[String])(_ ++ _)
-        if (folded.nonEmpty) recordFoldedTags(path, folded)
+        foldDeltas(path, relTouched.toSeq)
         // staged image of the touched leaves' SURVIVING rows, swapped
         // in per leaf; leaves with no survivors stage nothing
         remaining.write.mode(SaveMode.Overwrite)
@@ -1505,7 +1388,7 @@ object UpsertWriter {
         nDel
       }
     }
-  }
+  })
 
   /** Retention (TTL) for a partitioned table: drop whole partition
     * directories of `partitionCol` whose value sorts strictly below
@@ -1535,14 +1418,8 @@ object UpsertWriter {
       s"retainFrom cutoff must be an ISO yyyy-MM-dd date, got '$cutoff'")
     recover(path)
     require(exists(path), s"no committed table at $path")
-    import scala.jdk.CollectionConverters._
-    val list = Files.list(Paths.get(path))
-    val partDirs =
-      try list.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .filter(_.getFileName.toString.startsWith(s"$partitionCol="))
-        .toList
-      finally list.close()
+    val partDirs = listed(Paths.get(path)).filter(d => Files.isDirectory(d) &&
+      d.getFileName.toString.startsWith(s"$partitionCol="))
     val dropped = partDirs.filter { dir =>
       val value = dir.getFileName.toString.stripPrefix(s"$partitionCol=")
       iso.matches(value) && value < cutoff

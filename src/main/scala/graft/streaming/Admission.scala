@@ -322,9 +322,12 @@ private[streaming] object Admission {
   def committed(dir: String): Boolean =
     Files.exists(Paths.get(dir, "_SUCCESS"))
 
-  /** The committed table at `dir`, if any. */
+  /** The committed table at `dir`, if any, read with its footer schema
+    * ([[Tables.footerSchema]]: no inference job); a bucketed table's
+    * reader still discovers the bucket column from the paths. */
   def read(s: SparkSession, dir: String): Option[DataFrame] =
-    if (committed(dir)) Some(s.read.parquet(dir)) else None
+    if (committed(dir)) Some(s.read.schema(Tables.footerSchema(s, dir)).parquet(dir))
+    else None
 
   /** Read a worker table, or an EMPTY frame of `schema` when no batch
     * has committed it yet: a serving caller must see an empty view, not

@@ -111,8 +111,7 @@ object AnnIngest {
                     // ints, computed on the cached batch), never rows.
                     // A semi-join here would read the whole index.
                     val touched = vecs.select(
-                      pmod(xxhash64(col("vec_id")), lit(b.toLong))
-                        .cast("int").as("__b"))
+                      UpsertWriter.bucketOf(Seq("vec_id"), b).as("__b"))
                       .distinct().collect().map(_.getInt(0)).toSeq
                     raw.filter(
                       col(UpsertWriter.BucketCol).isin(touched: _*))
@@ -267,36 +266,61 @@ object AnnIngest {
     *            with (the re-fit folds into a `dim`-long zero vector;
     *            a mismatch zips stored vectors into NULL components) */
   def refit(
-      spark: SparkSession, warehouseDir: String, dim: Int = 64): RefitReport = {
+      spark: SparkSession, warehouseDir: String, dim: Int = 64): RefitReport =
+    refitWith(spark, warehouseDir, dim, required = true) { (pre, highWater) =>
+      // an empty committed index (e.g. truncated) has no high-water
+      // batch and nothing to re-fit — refuse with a clear error instead
+      // of an NPE on the null max
+      require(pre.totalRows > 0L,
+        s"refit on an empty index at $warehouseDir/ann_index")
+      Some(highWater())
+    }.get
+
+  /** The refresh both [[refit]] and [[refitIfDrifted]] run, between
+    * drains and inside the maintenance window over the centroids and
+    * the index: audit ONE persisted index image, let `decide` pick the
+    * high-water batch to refit at (None: no refresh), run
+    * [[refitWrites]] and log the outcome. The audit, the high-water
+    * read and the refresh all consume that one image, so no scan is
+    * repeated and the decision cannot diverge from the state it acts
+    * on. Without a committed index and centroids this refuses when
+    * `required`, else returns None.
+    *
+    * The maintenance window ([[graft.sinks.TableLease]]) is checked: a
+    * drain bracketed in withDrain is refused here instead of raced —
+    * the session-scoped [[requireNoActiveDrain]] cannot see another
+    * process's drain; the lease can. */
+  private def refitWith(
+      spark: SparkSession, warehouseDir: String, dim: Int, required: Boolean)(
+      decide: (SkewTools.SkewAudit, () => Long) => Option[Long])
+      : Option[RefitReport] = {
     val centroidsDir = s"$warehouseDir/ann_centroids"
     val indexDir = s"$warehouseDir/ann_index"
     requireNoActiveDrain(spark)
-    require(Admission.committed(indexDir) && Admission.committed(centroidsDir),
+    val committed =
+      Admission.committed(indexDir) && Admission.committed(centroidsDir)
+    require(committed || !required,
       s"refit needs a committed index and centroids under $warehouseDir")
-    // checked maintenance window ([[graft.sinks.TableLease]]): a drain
-    // bracketed in withDrain is refused here instead of raced — the
-    // session-scoped requireNoActiveDrain above cannot see another
-    // process's drain; the lease can
-    graft.sinks.TableLease.withMaintenance(
+    if (!committed) None
+    else graft.sinks.TableLease.withMaintenance(
         Seq(centroidsDir, indexDir), s"refit:pid${
           ProcessHandle.current().pid()}") {
-    val idx = spark.read.parquet(indexDir).persist()
-    val (pre, asOf, nMoved) = try {
-      val pre = SkewTools.audit(idx, "cell")
-      // an empty committed index (e.g. truncated) has no high-water
-      // batch and nothing to re-fit — refuse with a clear error instead
-      // of an NPE on the null max (refitIfDrifted never gets here: its
-      // totalRows == 0 guard returns None first)
-      require(pre.totalRows > 0L, s"refit on an empty index at $indexDir")
-      val asOf = idx.agg(max(col("batch_id"))).head().getLong(0)
-      (pre, asOf, refitWrites(spark, centroidsDir, indexDir, dim, idx, asOf))
-    } finally {
-      // the post audit must NOT see idx: the CacheManager substitutes a
-      // cached plan for any semantically equal read of the same path,
-      // so a still-persisted pre-refit image would alias the fresh read
-      idx.unpersist(blocking = true); ()
-    }
-    logRefit(spark, warehouseDir, pre, asOf, nMoved)
+      val idx = spark.read.parquet(indexDir).persist()
+      val fired = try {
+        val pre = SkewTools.audit(idx, "cell")
+        decide(pre, () => idx.agg(max(col("batch_id"))).head().getLong(0))
+          .map(asOf => (pre, asOf,
+            refitWrites(spark, centroidsDir, indexDir, dim, idx, asOf)))
+      } finally {
+        // the post audit must NOT see idx: the CacheManager substitutes
+        // a cached plan for any semantically equal read of the same
+        // path, so a still-persisted pre-refit image would alias the
+        // fresh read
+        idx.unpersist(blocking = true); ()
+      }
+      fired.map { case (pre, asOf, nMoved) =>
+        logRefit(spark, warehouseDir, pre, asOf, nMoved)
+      }
     }
   }
 
@@ -317,13 +341,12 @@ object AnnIngest {
         s"active streaming queries: ${active.map(_.name).mkString(", ")}")
   }
 
-  /** The two refresh writes (new centroids, full reassignment), shared
-    * by [[refit]] and [[refitIfDrifted]] so the policy path re-uses its
-    * already-persisted index image instead of re-scanning. Returns the
-    * number of vectors whose cell changed. The reassignment is
-    * persisted across its two consumers (the moved-count and the index
-    * rewrite) — on a real index the broadcast argmax is the dominant
-    * refresh cost and must not run twice. */
+  /** The two refresh writes (new centroids, full reassignment) over
+    * [[refitWith]]'s persisted index image. Returns the number of
+    * vectors whose cell changed. The reassignment is persisted across
+    * its two consumers (the moved-count and the index rewrite) — on a
+    * real index the broadcast argmax is the dominant refresh cost and
+    * must not run twice. */
   private def refitWrites(
       spark: SparkSession, centroidsDir: String, indexDir: String,
       dim: Int, idx: DataFrame, asOf: Long): Long = {
@@ -389,39 +412,21 @@ object AnnIngest {
     * healthy index doesn't trigger a pointless rewrite — and refuses to
     * re-run at an index state it has already refit (the refit log's
     * high-water mark), so genuinely skewed DATA (where a re-fit moves
-    * nothing) costs one recorded no-op, not a rewrite loop. The audit,
-    * the high-water read and the refresh itself all consume ONE
-    * persisted index image — no scan is repeated and the decision can't
-    * diverge from the state it acts on. Same single-writer contract as
-    * [[refit]]: call it between drains, never beside one. */
+    * nothing) costs one recorded no-op, not a rewrite loop. Same
+    * single-writer contract as [[refit]]: call it between drains, never
+    * beside one. */
   def refitIfDrifted(
       spark: SparkSession, warehouseDir: String,
-      threshold: Double = 0.5, dim: Int = 64): Option[RefitReport] = {
-    val centroidsDir = s"$warehouseDir/ann_centroids"
-    val indexDir = s"$warehouseDir/ann_index"
-    requireNoActiveDrain(spark)
-    if (!Admission.committed(indexDir) || !Admission.committed(centroidsDir)) None
-    else graft.sinks.TableLease.withMaintenance(
-        Seq(centroidsDir, indexDir), s"refit:pid${
-          ProcessHandle.current().pid()}") {
-      val idx = spark.read.parquet(indexDir).persist()
-      val fired = try {
-        val a = SkewTools.audit(idx, "cell")
-        if (a.totalRows == 0L || a.maxShare <= threshold) None
-        else {
-          val asOf = idx.agg(max(col("batch_id"))).head().getLong(0)
-          val alreadyAt = refitLog(spark, warehouseDir)
-            .filter(col("as_of_batch") === asOf).take(1).nonEmpty
-          if (alreadyAt) None
-          else Some((a, asOf,
-            refitWrites(spark, centroidsDir, indexDir, dim, idx, asOf)))
-        }
-      } finally { idx.unpersist(blocking = true); () }
-      fired.map { case (pre, asOf, nMoved) =>
-        logRefit(spark, warehouseDir, pre, asOf, nMoved)
+      threshold: Double = 0.5, dim: Int = 64): Option[RefitReport] =
+    refitWith(spark, warehouseDir, dim, required = false) { (a, highWater) =>
+      if (a.totalRows == 0L || a.maxShare <= threshold) None
+      else {
+        val asOf = highWater()
+        val alreadyAt = refitLog(spark, warehouseDir)
+          .filter(col("as_of_batch") === asOf).take(1).nonEmpty
+        if (alreadyAt) None else Some(asOf)
       }
     }
-  }
 
   /** IVF search over the streamed index: rank cells by query↔centroid
     * cosine, probe the top `nprobe` cells, exact cosine top-`k` within

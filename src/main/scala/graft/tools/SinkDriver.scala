@@ -179,8 +179,8 @@ object SinkDriver {
     val (before, grainBefore) = (logical(), grain())
     UpsertWriter.rebucket(r.spark, wh, Seq("o_custkey"), 2 * Buckets)
     val (after, grainAfter) = (logical(), grain())
-    val misplaced = r.spark.read.parquet(wh).filter(col(BucketCol) =!=
-      pmod(xxhash64(col("o_custkey")), lit(2L * Buckets)).cast("int")).count()
+    val misplaced = r.spark.read.parquet(wh)
+      .filter(col(BucketCol) =!= UpsertWriter.bucketOf(Seq("o_custkey"), 2 * Buckets)).count()
     Report(Seq("content_checksum_stable" -> (before == after),
       "pin_moved" -> UpsertWriter.pinnedBuckets(wh).contains(2 * Buckets),
       "no_misplaced_rows" -> (misplaced == 0)) ++ afterOp(r, wh, fresh, "rebucket"),
@@ -201,7 +201,7 @@ object SinkDriver {
     val candidate = col("o_custkey") % 10 === 3
     val victimBucket = r.spark.read.parquet(wh).filter(candidate && col(BucketCol).isin(withDelta.toSeq: _*))
       .orderBy("o_custkey").head().getAs[Int](BucketCol)
-    val isVictim = candidate && pmod(xxhash64(col("o_custkey")), lit(Buckets.toLong)) === victimBucket
+    val isVictim = candidate && UpsertWriter.bucketOf(Seq("o_custkey"), Buckets) === victimBucket
     val (victims, remain) = (logical(isVictim)._1, logical(!isVictim))
     val others = (0 until Buckets).filter(_ != victimBucket).map(b => s"$BucketCol=$b")
     val idsBefore = others.map(identity(wh, _))

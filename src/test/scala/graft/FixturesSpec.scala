@@ -26,7 +26,8 @@ class FixturesSpec extends AnyFunSuite with TempDirs {
     val sfDir = tempDir("graft-fixtures-sf")
     val li = sfDir.resolve("lineitem.parquet")
     Tables.lineitem(spark, sf).write.parquet(li.toString)
-    withFixturesRoot(tempDir("graft-fixtures-root")) {
+    val root = tempDir("graft-fixtures-root")
+    withFixturesRoot(root) {
       val orders = Tables.lineitem(spark, sfDir.toString)
         .select(col("l_orderkey")).distinct().count()
       assert(Fixtures.nestedOrders(spark, sfDir.toString).count() == orders)
@@ -41,6 +42,10 @@ class FixturesSpec extends AnyFunSuite with TempDirs {
       assert(fewer < orders)
       assert(Fixtures.nestedOrders(spark, sfDir.toString).count() == fewer)
     }
+    // the rebuild replaced the superseded image instead of adding one
+    val list = Files.list(root)
+    val images = try list.iterator().asScala.toList finally list.close()
+    assert(images.size == 1, s"images under the fixtures root: ${images.mkString(", ")}")
   }
 
   test("the truth-set and lexical-cluster queries write nothing under the fixtures root") {

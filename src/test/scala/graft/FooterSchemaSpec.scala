@@ -51,6 +51,24 @@ class FooterSchemaSpec extends AnyFunSuite with TempDirs {
     sameAsInference(s"$wh/alerts")
   }
 
+  test("a declared footer schema discovers the partition columns of bucketed and dia layouts") {
+    val root = tempDir("graft-footer-parts")
+    def rows(from: Long, to: Long) =
+      spark.range(from, to).select(col("id"), (col("id") * 2).as("v"), lit(1L).as("ver"))
+    val bucketed = root.resolve("bucketed").toString
+    sinks.UpsertWriter.upsertBucketed(spark, bucketed, rows(0, 40), Seq("id"), "ver", 4)
+    assert(sinks.UpsertWriter.appendBucketed(spark, bucketed, rows(40, 50), Seq("id"), "b1", 4))
+    assert(sinks.UpsertWriter.taggedDeltas(bucketed) == Set("b1"))
+    val daily = root.resolve("daily").toString
+    sinks.UpsertWriter.upsert(spark, daily, rows(0, 30).withColumn("dia",
+        when(col("id") % 3 =!= 0, concat(lit("2025-01-0"), (col("id") % 3).cast("string")))),
+      Seq("id"), "ver", partitionBy = Seq("dia"))
+    assert(Files.isDirectory(Path.of(daily, "dia=__HIVE_DEFAULT_PARTITION__")))
+    for (p <- Seq(bucketed, daily))
+      assert(spark.read.schema(Tables.footerSchema(spark, p)).parquet(p).schema ==
+        spark.read.parquet(p).schema, s"declared footer read of $p differs from inference")
+  }
+
   test("a missing or empty dir throws") {
     val empty = tempDir("graft-footer-empty")
     Files.createFile(empty.resolve("_SUCCESS"))

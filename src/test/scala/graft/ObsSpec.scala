@@ -133,6 +133,8 @@ class ObsSpec extends AnyFunSuite with TempDirs {
       for (p <- Seq("in-count", "pairs-mat", "cluster-fixpt",
           "corpus-check", "admit-upserts", "log-upsert"))
         assert(m.under(s"drain/$p").jobs > 0, s"drain/$p ran no tagged job")
+      assert(m.totals.get("drain").forall(_.jobs == 0),
+        s"jobs booked to the bare drain scope, outside every batch phase: ${m.totals.get("drain")}")
       assert(m.totals.keys.forall(p => p.isEmpty || p == "barrier" ||
         p == "drain" || p.startsWith("drain/")),
         s"a batch phase escaped the drain's scope: ${m.totals.keys}")
